@@ -91,8 +91,8 @@ object Warehouse {
   /** A persisted IVF ANN INDEX maintained per sync batch over an
     * embedding-bearing table: fresh files' vectors are assigned under
     * the index's frozen centroids and appended O(batch) into only the
-    * affected cells ([[graft.operators.Similarity.appendToIvfIndex]]);
-    * probes ([[Warehouse.annIn]]) partition-prune to the probed cells.
+    * affected cells ([[graft.operators.VectorIndex.append]]); probes
+    * ([[Warehouse.annIn]]) partition-prune to the probed cells.
     * The raw layer is TSV, so `parseEmbedding` turns the raw string
     * column into `array<float>` (the engine-wide embedding type) —
     * default: comma-joined floats.
@@ -100,14 +100,14 @@ object Warehouse {
     * the full listing (the IVF drift remedy this append defers). */
   final case class VectorIndexDef(name: String, table: String,
       idCol: String, embedCol: String, nlist: Int = 16, replicas: Int = 2,
-      /** true → IVFADC (PQ codes in the cells, ~d·4/m smaller probes —
-        * [[graft.operators.Quantize]]); false → plain IVF. */
-      pq: Boolean = false, pqM: Int = 8, pqK: Int = 16,
-      /** true → IVF-SQ8 (1-byte-per-dimension scalar-quantized codes in
-        * the cells, 4× smaller probed scans with decode-on-the-fly
-        * asymmetric cosine — [[graft.operators.Quantize.probeIvfSqIndex]]).
-        * Mutually exclusive with `pq`. */
-      sq: Boolean = false,
+      /** What the cells store ([[graft.operators.VectorIndex.Codec]]):
+        * `Raw` (default) → plain IVF, the original embeddings;
+        * `Pq(m, k)` → IVFADC, PQ codes under a frozen codebook, ~d·4/m
+        * smaller probes ([[Warehouse.annAdcIn]]); `Sq8` → IVF-SQ8,
+        * 1-byte-per-dimension scalar codes, 4× smaller probed scans with
+        * decode-on-the-fly asymmetric cosine ([[Warehouse.annSqIn]]). */
+      codec: graft.operators.VectorIndex.Codec =
+        graft.operators.VectorIndex.Raw,
       parseEmbedding: org.apache.spark.sql.Column =>
           org.apache.spark.sql.Column = c =>
         org.apache.spark.sql.functions.split(c, ",")
@@ -123,11 +123,7 @@ object Warehouse {
         * loop rebuilds the index over the full listing at that sync
         * (fresh centroids/params/codebook). ≤ 0 (default) keeps the
         * manual story: delete the store, the next sync rebuilds. */
-      retrainDriftThreshold: Double = 0.0) {
-    require(!(pq && sq),
-      s"vector index $name: pq and sq are mutually exclusive — " +
-        "pick IVFADC (pq) or IVF-SQ8 (sq), not both")
-  }
+      retrainDriftThreshold: Double = 0.0)
 
   /** A maintained TRAINING-SEQUENCE PACK STORE: each sync's fresh raw
     * files pack at the store's token frontier
@@ -1079,7 +1075,8 @@ object Warehouse {
       val (f0, f1, f2) = (tsv(0, 1.0f), tsv(1, 1.0f), tsv(2, 10.0f))
       val wh = new Warehouse(s, Config(whDir, db = "graft_drift",
         maintainedVectorIndexes = Seq(VectorIndexDef("vx", "vecs",
-          "vec_id", "emb", nlist = 4, replicas = 2, sq = true,
+          "vec_id", "emb", nlist = 4, replicas = 2,
+          codec = graft.operators.VectorIndex.Sq8,
           retrainDriftThreshold = 0.2))))
       def nonRebuild(): Long = graft.pipeline.AppendCommit
         .appliedEntries(store)
@@ -1489,11 +1486,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         d.parseEmbedding(col(d.embedCol)).as("embedding"))
       purged(s"vindex_${d.name}") =
         if (ik.isEmpty) 0L
-        else if (d.pq) graft.operators.Quantize.purgeIvfPqIndex(spark,
-          store, ik, vecs)
-        else if (d.sq) graft.operators.Quantize.purgeIvfSqIndex(spark,
-          store, ik, vecs)
-        else graft.operators.Similarity.purgeIvfIndex(spark, store, ik)
+        else graft.operators.VectorIndex.purge(spark, store, ik, vecs)
     }
     val retractId = "purge-" + graft.pipeline.AppendCommit.contentId(
       keys.map(String.valueOf).sorted.mkString("\n"))
@@ -3068,7 +3061,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * the embedding corpus kept probe-ready with O(new files) work:
     * fresh files' vectors assign under the index's FROZEN centroids
     * and append into only the affected cells
-    * ([[graft.operators.Similarity.appendToIvfIndex]]'s additive
+    * ([[graft.operators.VectorIndex.append]]'s additive
     * fingerprint commit), one intent-pinned batch per sync. Same
     * namespaced-ledger crash convergence as the MinHash indexes; a
     * stale-delete rebuilds (and thereby RETRAINS — the drift remedy)
@@ -3085,23 +3078,13 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
               .as("vec_id"),
               d.parseEmbedding(org.apache.spark.sql.functions
                 .col(d.embedCol)).as("embedding"))
-          def rebuild(all: Seq[String]): Unit = {
-            if (d.pq)
-              graft.operators.Quantize.buildIvfPqIndex(spark,
-                vecsOf(readTableSnapshot(t, all)._1), store,
-                nlist = d.nlist, replicas = d.replicas,
-                m = d.pqM, k = d.pqK, ledger = rebuildLedger(all))
-            else if (d.sq)
-              graft.operators.Quantize.buildIvfSqIndex(spark,
-                vecsOf(readTableSnapshot(t, all)._1), store,
-                nlist = d.nlist, replicas = d.replicas,
-                ledger = rebuildLedger(all))
-            else
-              graft.operators.Similarity.buildIvfIndex(spark,
-                vecsOf(readTableSnapshot(t, all)._1), store,
-                nlist = d.nlist, replicas = d.replicas,
-                ledger = rebuildLedger(all))
-          }
+          def rebuild(all: Seq[String]): Unit =
+            graft.operators.VectorIndex.build(spark,
+              graft.operators.VectorIndex.Spec(d.codec,
+                Some(graft.operators.VectorIndex.Routing(d.nlist,
+                  d.replicas))),
+              vecsOf(readTableSnapshot(t, all)._1), store,
+              ledger = rebuildLedger(all))
           // drift-triggered retrain (opt-in): one cheap evidence
           // aggregate per append batch — SQ8: the clamp rate against
           // the frozen per-dim ranges; IVF/PQ: the angular top-1
@@ -3114,7 +3097,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
           def checkDrift(batch: DataFrame): Unit =
             if (d.retrainDriftThreshold > 0 && driftMsg.isEmpty)
               driftMsg =
-                if (d.sq) {
+                if (d.codec == graft.operators.VectorIndex.Sq8) {
                   val r = graft.operators.Quantize.sqClampRate(spark,
                     store, batch)
                   if (r > d.retrainDriftThreshold)
@@ -3135,15 +3118,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
             (fresh, _) =>
               val batch = vecsOf(readRaw(t, fresh))
               checkDrift(batch)
-              if (d.pq)
-                graft.operators.Quantize.appendToIvfPqIndex(spark,
-                  batch, store)
-              else if (d.sq)
-                graft.operators.Quantize.appendToIvfSqIndex(spark,
-                  batch, store)
-              else
-                graft.operators.Similarity.appendToIvfIndex(spark,
-                  batch, store)
+              graft.operators.VectorIndex.append(spark, batch, store)
           }
           driftMsg.foreach { msg =>
             log.warn(s"vindex_${d.name}: drift evidence breached " +
@@ -3171,34 +3146,28 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   /** Periodic cell-file compaction of a maintained vector index — the
     * small-files debt bound for the per-sync append path. Run on the
     * retrain cadence, AFTER a sync has converged (the single-writer
-    * ordering caveat on [[graft.operators.Similarity.compactIvfIndex]]). */
+    * ordering caveat on [[graft.operators.VectorIndex.compact]]). */
   def compactVectorIndex(indexName: String)
-      : graft.pipeline.Maintain.CompactSummary = {
-    val store = s"${cfg.warehouseDir}/_maintained/vindex_$indexName"
-    if (fsOf.exists(new org.apache.hadoop.fs.Path(s"$store/codebook")))
-      graft.operators.Quantize.compactIvfPqIndex(spark, store)
-    else if (fsOf.exists(
-        new org.apache.hadoop.fs.Path(s"$store/sqparams")))
-      graft.operators.Quantize.compactIvfSqIndex(spark, store)
-    else graft.operators.Similarity.compactIvfIndex(spark, store)
-  }
+      : graft.pipeline.Maintain.CompactSummary =
+    graft.operators.VectorIndex.compact(spark,
+      s"${cfg.warehouseDir}/_maintained/vindex_$indexName")
 
-  /** ANN probe of a maintained IVFADC (pq = true) index: ADC candidate
-    * generation over the codes-only cells, exact cosine rerank against
-    * `corpus` (vec_id, embedding) — the caller supplies the embedding
-    * source (the canonical table or a parsed raw read); the index
-    * itself stores no vectors, which is the point of PQ. */
+  /** ANN probe of a maintained IVFADC (`codec = Pq(..)`) index: ADC
+    * candidate generation over the codes-only cells, exact cosine
+    * rerank against `corpus` (vec_id, embedding) — the caller supplies
+    * the embedding source (the canonical table or a parsed raw read);
+    * the index itself stores no vectors, which is the point of PQ. */
   def annAdcIn(indexName: String, queries: DataFrame, corpus: DataFrame,
       k: Int = 5, nprobe: Int = 4, rerankN: Int = 64): DataFrame =
     graft.operators.Quantize.probeIvfPqIndex(spark,
       s"${cfg.warehouseDir}/_maintained/vindex_$indexName", queries,
       corpus, k, nprobe, rerankN)
 
-  /** ANN probe of a maintained IVF-SQ8 (sq = true) index: cell-pruned
-    * scan over the 1-byte/dim codes, decode-on-the-fly asymmetric
-    * cosine candidate selection, exact rerank against `corpus` — the
-    * [[annAdcIn]] shape with per-dimension scalar codes instead of PQ
-    * codebook lookups. */
+  /** ANN probe of a maintained IVF-SQ8 (`codec = Sq8`) index:
+    * cell-pruned scan over the 1-byte/dim codes, decode-on-the-fly
+    * asymmetric cosine candidate selection, exact rerank against
+    * `corpus` — the [[annAdcIn]] shape with per-dimension scalar codes
+    * instead of PQ codebook lookups. */
   def annSqIn(indexName: String, queries: DataFrame, corpus: DataFrame,
       k: Int = 5, nprobe: Int = 4, rerankN: Int = 64): DataFrame =
     graft.operators.Quantize.probeIvfSqIndex(spark,

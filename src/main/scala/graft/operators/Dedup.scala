@@ -1166,7 +1166,7 @@ object Dedup {
   }
 
   /** Per-process index dir for the gate query (same rationale as
-    * Similarity's gateIndexBase: cross-JVM tmp sharing races SafeSwap). */
+    * [[VectorIndex.gateDir]]: cross-JVM tmp sharing races SafeSwap). */
   private lazy val dedupIndexBase: String =
     java.nio.file.Files.createTempDirectory("graft_mh_").toString
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import VectorIndex.{Pq, Routing, Spec, Sq8}
+
 /** Product quantization (PQ) for embedding corpora — the memory side of
   * the 100 TB ANN story (Jégou, Douze, Schmid, "Product Quantization for
   * Nearest Neighbor Search", TPAMI 2011). Where IVF ([[Similarity]])
@@ -127,140 +129,51 @@ object Quantize {
   }
 
   // ---------------------------------------------------------------------
-  // Persisted PQ index — build/append/probe, the [[Similarity]] IVF
-  // protocol applied to codes. Layout under `indexDir`:
-  //   codebook/             tiny parquet (sub, code, centroid)
-  //   codes/                (vec_id, codes: array<tinyint>)
-  //   _corpus_fingerprint   additive rebuild trigger (base + appends)
-  // Build swaps the whole tree (SafeSwap); appends encode under the
-  // FROZEN codebook and land file-additively through AppendCommit —
-  // O(batch) I/O, crash-idempotent, replay-suppressed. The IVF drift
-  // caveat applies identically: appended vectors quantize under the
-  // original codebook; periodic retrain-rebuilds stay cheap to defer.
+  // Persisted PQ index — codes under a FROZEN codebook on the shared
+  // [[VectorIndex]] lifecycle, unrouted: rows live in `codes/`
+  // (vec_id, codes: array<tinyint>), the codebook in `codebook/`
+  // (sub, code, centroid).
   // ---------------------------------------------------------------------
 
-  /** `ledger` entries commit atomically inside the build swap (payload
-    * "0|0": the base marker already covers the founding batch, so the
-    * additive fingerprint must not count it twice) — the streaming
-    * bootstrap's crash-safety hinge ([[foreachBatchPqSink]]). */
-  def buildPqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
-      m: Int = 8, k: Int = 16,
-      ledger: Seq[(String, String)] = Nil): Unit = {
-    val cb = trainPqCodebook(e, m, k)
-    // fingerprint observed on the codes-write scan — no dedicated pass
-    val (withFp, obsFp) = Similarity.observeFingerprint(e)
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      val sqlCtx = spark
-      import sqlCtx.implicits._
-      ledger.foreach { case (id, payload) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, payload) }
-      cb.zipWithIndex.flatMap { case (cents, j) =>
-        cents.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
-        .write.parquet(s"$tmp/codebook")
-      withFp.select(col("vec_id"),
-          pqEncodeCol(cb, col("embedding")).as("codes"))
-        .write.parquet(s"$tmp/codes")
-      val fp = Similarity.observedFingerprint(obsFp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_corpus_fingerprint"), true)
-      try os.write(s"$fp|m=$m|k=$k".getBytes("UTF-8")) finally os.close()
-    }
+  private[operators] def writeCodebook(spark: SparkSession, dir: String,
+      cb: Codebook): Unit = {
+    import spark.implicits._
+    cb.zipWithIndex.flatMap { case (cents, j) =>
+      cents.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
+    }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
+      .write.parquet(s"$dir/codebook")
   }
 
-  private def readCodebook(spark: SparkSession, indexDir: String): Codebook =
+  private[operators] def readCodebook(spark: SparkSession,
+      indexDir: String): Codebook =
     spark.read.parquet(s"$indexDir/codebook")
       .orderBy(col("sub"), col("code")).collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
       .map(_.toArray).toArray
 
-  /** Current cumulative fingerprint: build base + applied appends (the
-    * IVF convention — the marker file is immutable after build; appends
-    * advance the fingerprint via their atomic ledger entry). */
-  private def pqCurrentFingerprint(spark: SparkSession,
-      indexDir: String): Option[String] =
-    graft.pipeline.AppendCommit.cumulativeFingerprint(indexDir)
+  def buildPqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
+      m: Int = 8, k: Int = 16,
+      ledger: Seq[(String, String)] = Nil): Unit =
+    VectorIndex.build(spark, Spec(Pq(m, k)), e, indexDir, ledger)
 
   /** Build-if-stale; returns true when a rebuild ran. */
   def ensurePqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
-      m: Int = 8, k: Int = 16): Boolean = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val expected = s"${Similarity.corpusFingerprint(e)}|m=$m|k=$k"
-    if (pqCurrentFingerprint(spark, indexDir).contains(expected)) false
-    else { buildPqIndex(spark, e, indexDir, m, k); true }
-  }
+      m: Int = 8, k: Int = 16): Boolean =
+    VectorIndex.ensure(spark, Spec(Pq(m, k)), e, indexDir)
 
-  /** Encode a batch under the index's frozen codebook and append its
-    * files — O(batch) I/O, idempotent under replay and crash-retry
-    * (staged write → tagged move → ledger entry LAST, per
-    * [[graft.pipeline.AppendCommit]]). */
   def appendToPqIndex(spark: SparkSession, batch: DataFrame,
-      indexDir: String): Unit = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(
-      new org.apache.hadoop.fs.Path(indexDir, "_corpus_fingerprint")),
-      s"no PQ index at $indexDir (missing fingerprint marker)")
-    val fpBatch = Similarity.corpusFingerprint(batch)
-    val batchId = graft.pipeline.AppendCommit.contentId(fpBatch)
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, batchId)) return
-    val cb = readCodebook(spark, indexDir)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, batchId,
-        fpBatch) { tmp =>
-      batch.select(col("vec_id"),
-          pqEncodeCol(cb, col("embedding")).as("codes"))
-        .write.parquet(s"$tmp/codes")
-    }
-  }
+      indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
 
-  /** RTBF cascade hook for the codes-only PQ store: remove `vecIds`'
-    * code rows and subtract their corpus-fingerprint contribution. The
-    * store persists CODES, not embeddings, so the negative `-n|-h`
-    * fingerprint cannot be derived from the index itself — `deleted`
-    * must supply the ids' (vec_id, embedding) rows, captured from the
-    * corpus BEFORE its own purge (the [[graft.pipeline.Cascade]]
-    * ordering). On a crash-retry the intent's staged payload wins, so
-    * `deleted` may legitimately be empty then. Returns code rows
-    * removed. Codebook stays frozen (the IVF centroid model). */
+  /** `deleted` supplies the ids' (vec_id, embedding) rows — the store
+    * holds codes only ([[VectorIndex.purge]]). */
   def purgePqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long = {
-    require(vecIds.nonEmpty, "purge needs at least one vec id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    purgeCodeRows(spark, indexDir, s"$indexDir/codes", vecIds, deleted)
-  }
+      vecIds: Seq[Any], deleted: DataFrame): Long =
+    VectorIndex.purge(spark, indexDir, vecIds, deleted)
 
-  /** [[purgePqIndex]] for the cell-partitioned IVFADC store. */
   def purgeIvfPqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long = {
-    require(vecIds.nonEmpty, "purge needs at least one vec id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    purgeCodeRows(spark, indexDir, s"$indexDir/cells", vecIds, deleted)
-  }
-
-  private def purgeCodeRows(spark: SparkSession, indexDir: String,
-      rowsDir: String, vecIds: Seq[Any], deleted: DataFrame): Long = {
-    val id = "purge-" + graft.pipeline.AppendCommit.contentId(
-      vecIds.map(String.valueOf).sorted.mkString("\n"))
-    var removed = 0L
-    graft.pipeline.AppendCommit.runWithIntent(indexDir, id) {
-      val r = deleted.select(col("vec_id"), col("embedding")).distinct()
-        .agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("vec_id"), col("embedding"))
-            .cast("decimal(38,0)")).as("h")).head()
-      val n = r.getLong(0)
-      val h = if (r.isNullAt(1)) BigInt(0)
-        else BigInt(r.getDecimal(1).toBigInteger)
-      s"${-n}|${-h}"
-    } { _ =>
-      removed = graft.pipeline.Maintain.deleteByKey(spark,
-        rowsDir, "vec_id", vecIds).rowsDeleted
-    }
-    removed
-  }
+      vecIds: Seq[Any], deleted: DataFrame): Long =
+    VectorIndex.purge(spark, indexDir, vecIds, deleted)
 
   /** ADC probe of a persisted PQ index. `queries` (q_id, q_emb) is a
     * BOUNDED batch (collected to build the per-query lookup tables —
@@ -310,8 +223,17 @@ object Quantize {
           .select(col("q_id"), explode(col("cand")).as("c"))
           .select(col("q_id"), col("c.id").as("vec_id"))
       }
-    // exact rerank over the bounded candidate set: both joins stream the
-    // big side once with the candidates/queries broadcast
+    rerankExact(e, candidates, queries, k)
+  }
+
+  /** Exact cosine rerank of the bounded `candidates` (q_id, vec_id) on
+    * the ORIGINAL embeddings from `e` — both joins stream the big side
+    * once with the candidates/queries broadcast — to the top `k` per
+    * query, ties by vec_id. Quantization only ever picks candidates;
+    * it never touches the final ranking. */
+  private def rerankExact(e: DataFrame, candidates: DataFrame,
+      queries: DataFrame, k: Int): DataFrame = {
+    graft.functions.VectorFunctions.register(e.sparkSession)
     val withEmb = e.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), Seq("vec_id"))
       .join(broadcast(queries.select(col("q_id"), col("q_emb"))),
@@ -341,100 +263,21 @@ object Quantize {
 
   def buildIvfPqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
       nlist: Int = 16, replicas: Int = 2, m: Int = 8, k: Int = 16,
-      ledger: Seq[(String, String)] = Nil): Unit = {
-    val cells = Similarity.trainCentroids(e, nlist)
-    val cb = trainPqCodebook(e, m, k)
-    // drift baseline AND fingerprint observed on the cells-write scan
-    // — no extra pass for either
-    val (withFp, obsFp) = Similarity.observeFingerprint(e)
-    val (observed, obs) = Similarity.observeTopAffinity(withFp, cells)
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      val sqlCtx = spark
-      import sqlCtx.implicits._
-      ledger.foreach { case (id, payload) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, payload) }
-      cells.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmp/centroids")
-      cb.zipWithIndex.flatMap { case (cents, j) =>
-        cents.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-      }.toSeq.toDF("sub", "code", "centroid").coalesce(1)
-        .write.parquet(s"$tmp/codebook")
-      // one projection: cell assignment + PQ encode; vectors are NOT
-      // stored — the cell files hold (vec_id, codes) only
-      observed.select(col("vec_id"),
-          pqEncodeCol(cb, col("embedding")).as("codes"),
-          explode(Similarity.bestCells(cells, col("embedding"), replicas))
-            .as("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-      Similarity.writeDriftBase(spark, tmp,
-        Similarity.observedAffinity(obs))
-      val fp = Similarity.observedFingerprint(obsFp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_corpus_fingerprint"), true)
-      try os.write(
-        s"$fp|nlist=$nlist|replicas=$replicas|m=$m|k=$k".getBytes("UTF-8"))
-      finally os.close()
-    }
-  }
+      ledger: Seq[(String, String)] = Nil): Unit =
+    VectorIndex.build(spark, ivfPq(nlist, replicas, m, k), e, indexDir,
+      ledger)
 
-  /** Build-if-stale (same additive-fingerprint contract as the plain PQ
-    * and IVF indexes). Returns true when a rebuild ran. */
+  /** Build-if-stale; returns true when a rebuild ran. */
   def ensureIvfPqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
       nlist: Int = 16, replicas: Int = 2, m: Int = 8,
-      k: Int = 16): Boolean = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val expected = s"${Similarity.corpusFingerprint(e)}" +
-      s"|nlist=$nlist|replicas=$replicas|m=$m|k=$k"
-    if (pqCurrentFingerprint(spark, indexDir).contains(expected)) false
-    else { buildIvfPqIndex(spark, e, indexDir, nlist, replicas, m, k); true }
-  }
-
-  /** Assign + encode a batch under the index's FROZEN centroids and
-    * codebook; files land only in the batch's affected `cells/cell=N/`
-    * dirs (O(batch), crash-idempotent, replay-suppressed — the
-    * [[appendToPqIndex]] contract on the partitioned layout). */
-  /** Cell-file compaction for the IVFADC append path — identical
-    * contract and caveat to [[Similarity.compactIvfIndex]] (converge
-    * crashed appends first; content/ledger/codebook untouched). */
-  def compactIvfPqIndex(spark: SparkSession, indexDir: String,
-      targetBytes: Long = 128L * 1024 * 1024, maxFiles: Int = 4)
-      : graft.pipeline.Maintain.CompactSummary =
-    graft.pipeline.Maintain.compactPartitions(spark, s"$indexDir/cells",
-      targetBytes, maxFiles)
+      k: Int = 16): Boolean =
+    VectorIndex.ensure(spark, ivfPq(nlist, replicas, m, k), e, indexDir)
 
   def appendToIvfPqIndex(spark: SparkSession, batch: DataFrame,
-      indexDir: String): Unit = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val markerPath =
-      new org.apache.hadoop.fs.Path(indexDir, "_corpus_fingerprint")
-    require(fs.exists(markerPath),
-      s"no IVFADC index at $indexDir (missing fingerprint marker)")
-    val in = fs.open(markerPath)
-    val marker = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-    val replicas = marker.split('|').find(_.startsWith("replicas="))
-      .get.stripPrefix("replicas=").toInt
-    val fpBatch = Similarity.corpusFingerprint(batch)
-    val batchId = graft.pipeline.AppendCommit.contentId(fpBatch)
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, batchId)) return
-    val cells = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    val cb = readCodebook(spark, indexDir)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, batchId,
-        fpBatch) { tmp =>
-      batch.select(col("vec_id"),
-          pqEncodeCol(cb, col("embedding")).as("codes"),
-          explode(Similarity.bestCells(cells, col("embedding"), replicas))
-            .as("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-    }
-  }
+      indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
+
+  private def ivfPq(nlist: Int, replicas: Int, m: Int, k: Int): Spec =
+    Spec(Pq(m, k), Some(Routing(nlist, replicas)))
 
   /** IVFADC probe: queries route to their `nprobe` best cells (static
     * partition IN-filter — the pruned dirs are fixed at planning time),
@@ -447,10 +290,7 @@ object Quantize {
   def probeIvfPqIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, e: DataFrame, k: Int = 5, nprobe: Int = 4,
       rerankN: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(spark) // rerank needs cosine_sim
-    val cells = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val cells = VectorIndex.readCentroids(spark, indexDir)
     val cb = readCodebook(spark, indexDir)
     val m = cb.length
     val sub = cb(0)(0).length
@@ -502,74 +342,17 @@ object Quantize {
           .select(col("q_id"), explode(col("cand")).as("c"))
           .select(col("q_id"), col("c.id").as("vec_id"))
       }
-    val withEmb = e.select(col("vec_id"), col("embedding"))
-      .join(broadcast(candidates), Seq("vec_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_emb"))),
-        Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        expr("cosine_sim(q_emb, embedding)").as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    withEmb.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id"))
+    rerankExact(e, candidates, queries, k)
   }
 
 
-  private def indexExists(spark: SparkSession, indexDir: String): Boolean = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    fs.exists(
-      new org.apache.hadoop.fs.Path(indexDir, "_corpus_fingerprint"))
-  }
-
-  /** Streaming PQ index maintenance (`foreachBatch`): the first
-    * non-empty micro-batch bootstraps — codebook trained on it, its
-    * content-derived batch id committed atomically inside the build
-    * swap — and later batches append O(batch) under the frozen
-    * codebook, engine redelivery suppressed by the content id.
-    * Exactly-once on top of foreachBatch's at-least-once contract. */
-  def foreachBatchPqSink(indexDir: String, m: Int = 8,
-      k: Int = 16): (DataFrame, Long) => Unit = { (batch, _) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      if (!indexExists(spark, indexDir)) {
-        val b = batch.localCheckpoint() // fingerprint + build consume it
-        buildPqIndex(spark, b, indexDir, m, k, Seq(
-          graft.pipeline.AppendCommit.contentId(
-            Similarity.corpusFingerprint(b)) -> "0|0"))
-      } else appendToPqIndex(spark, batch, indexDir)
-    }
-    ()
-  }
-
-  /** Streaming IVFADC maintenance — [[foreachBatchPqSink]] for the
-    * composed index (cells + codes both frozen after the bootstrap
-    * batch; the retrain cadence stays a batch-side decision). */
+  /** Streaming IVFADC maintenance on [[VectorIndex.foreachBatchSink]]
+    * (centroids and codebook freeze at the bootstrap batch; the retrain
+    * cadence stays a batch-side decision). */
   def foreachBatchIvfPqSink(indexDir: String, nlist: Int = 16,
       replicas: Int = 2, m: Int = 8,
-      k: Int = 16): (DataFrame, Long) => Unit = { (batch, _) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      if (!indexExists(spark, indexDir)) {
-        val b = batch.localCheckpoint()
-        buildIvfPqIndex(spark, b, indexDir, nlist, replicas, m, k, Seq(
-          graft.pipeline.AppendCommit.contentId(
-            Similarity.corpusFingerprint(b)) -> "0|0"))
-      } else appendToIvfPqIndex(spark, batch, indexDir)
-    }
-    ()
-  }
-
-  private lazy val gateIndexBase: String =
-    java.nio.file.Files.createTempDirectory("graft_pq_").toString
-
-  private def gateIndexDir(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$gateIndexBase/pq_$h"
-  }
+      k: Int = 16): (DataFrame, Long) => Unit =
+    VectorIndex.foreachBatchSink(ivfPq(nlist, replicas, m, k), indexDir)
 
   // ---------------------------------------------------------------------
   // q102_pq_adc — PQ ANN through the persisted index: ensure-built,
@@ -798,10 +581,11 @@ object Quantize {
   def q102PqAdc(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
-    ensurePqIndex(s, e, gateIndexDir(dir))
+    val idx = VectorIndex.gateDir("pq", dir)
+    ensurePqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probePqIndex(s, gateIndexDir(dir), queries, e, k = 5, rerankN = 64)
+    probePqIndex(s, idx, queries, e, k = 5, rerankN = 64)
   }
 
   // ---------------------------------------------------------------------
@@ -816,16 +600,11 @@ object Quantize {
   def q102bPqExhaustive(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
-    ensurePqIndex(s, e, gateIndexDir(dir))
+    val idx = VectorIndex.gateDir("pq", dir)
+    ensurePqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probePqIndex(s, gateIndexDir(dir), queries, e, k = 5, rerankN = 0)
-  }
-
-  private def gateIvfPqDir(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$gateIndexBase/ivfpq_$h"
+    probePqIndex(s, idx, queries, e, k = 5, rerankN = 0)
   }
 
   // ---------------------------------------------------------------------
@@ -836,10 +615,11 @@ object Quantize {
   def q104Ivfadc(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
-    ensureIvfPqIndex(s, e, gateIvfPqDir(dir))
+    val idx = VectorIndex.gateDir("ivfpq", dir)
+    ensureIvfPqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeIvfPqIndex(s, gateIvfPqDir(dir), queries, e, k = 5, nprobe = 4,
+    probeIvfPqIndex(s, idx, queries, e, k = 5, nprobe = 4,
       rerankN = 64)
   }
 
@@ -854,10 +634,11 @@ object Quantize {
   def q104bIvfadcExhaustive(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
     val e = t(s, dir, "embeddings")
-    ensureIvfPqIndex(s, e, gateIvfPqDir(dir))
+    val idx = VectorIndex.gateDir("ivfpq", dir)
+    ensureIvfPqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeIvfPqIndex(s, gateIvfPqDir(dir), queries, e, k = 5, nprobe = 16,
+    probeIvfPqIndex(s, idx, queries, e, k = 5, nprobe = 16,
       rerankN = 0)
   }
 
@@ -870,66 +651,30 @@ object Quantize {
   // (x̂ = mn + scale·code, plan-literal params, whole-stage codegen)
   // and runs exact cosine arithmetic on the reconstructed values — the
   // asymmetric scan production SQ stores run (query full-precision).
-  // Same persisted lifecycle as IVF/IVFADC: SafeSwap build,
-  // frozen-centroid frozen-param O(batch) appends through AppendCommit,
-  // static partition-pruned probes, exact rerank on the original
-  // embeddings, RTBF purge with negative fingerprints, cell compaction.
-  // Layout under `indexDir`:
-  //   centroids/            (cell, centroid: array<double>)
-  //   sqparams/             (dim, mn, scale) — d rows
-  //   cells/cell=N/         (vec_id, codes: array<long>)
-  //   _corpus_fingerprint   `fp|nlist=..|replicas=..|sq=8`
+  // Persisted on the shared [[VectorIndex]] lifecycle (routed, Sq8
+  // codec): `sqparams/` holds (dim, mn, scale) — d rows — and the cell
+  // files (vec_id, codes: array<long>).
   // ---------------------------------------------------------------------
 
   def buildIvfSqIndex(spark: SparkSession, e: DataFrame, indexDir: String,
       nlist: Int = 16, replicas: Int = 2,
-      ledger: Seq[(String, String)] = Nil): Unit = {
-    val cells = Similarity.trainCentroids(e, nlist)
-    val (mns, scales) = sqParams(e)
-    // drift baseline AND fingerprint observed on the cells-write scan
-    // — no extra pass for either
-    val (withFp, obsFp) = Similarity.observeFingerprint(e)
-    val (observed, obs) = Similarity.observeTopAffinity(withFp, cells)
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      val sqlCtx = spark
-      import sqlCtx.implicits._
-      ledger.foreach { case (id, payload) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, payload) }
-      cells.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmp/centroids")
-      mns.indices.map(i => (i, mns(i), scales(i))).toSeq
-        .toDF("dim", "mn", "scale").coalesce(1)
-        .write.parquet(s"$tmp/sqparams")
-      // one projection: cell assignment + SQ8 encode; vectors are NOT
-      // stored — the cell files hold (vec_id, codes) only
-      observed.select(col("vec_id"),
-          sqEncodeCol(col("embedding"), mns, scales).as("codes"),
-          explode(Similarity.bestCells(cells, col("embedding"), replicas))
-            .as("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-      Similarity.writeDriftBase(spark, tmp,
-        Similarity.observedAffinity(obs))
-      val fp = Similarity.observedFingerprint(obsFp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_corpus_fingerprint"), true)
-      try os.write(
-        s"$fp|nlist=$nlist|replicas=$replicas|sq=8".getBytes("UTF-8"))
-      finally os.close()
-    }
-  }
+      ledger: Seq[(String, String)] = Nil): Unit =
+    VectorIndex.build(spark, ivfSq(nlist, replicas), e, indexDir, ledger)
 
-  /** Build-if-stale (the additive-fingerprint contract of the IVF/PQ
-    * family). Returns true when a rebuild ran. */
+  /** Build-if-stale; returns true when a rebuild ran. */
   def ensureIvfSqIndex(spark: SparkSession, e: DataFrame,
-      indexDir: String, nlist: Int = 16, replicas: Int = 2): Boolean = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val expected = s"${Similarity.corpusFingerprint(e)}" +
-      s"|nlist=$nlist|replicas=$replicas|sq=8"
-    if (pqCurrentFingerprint(spark, indexDir).contains(expected)) false
-    else { buildIvfSqIndex(spark, e, indexDir, nlist, replicas); true }
+      indexDir: String, nlist: Int = 16, replicas: Int = 2): Boolean =
+    VectorIndex.ensure(spark, ivfSq(nlist, replicas), e, indexDir)
+
+  private def ivfSq(nlist: Int, replicas: Int): Spec =
+    Spec(Sq8, Some(Routing(nlist, replicas)))
+
+  private[operators] def writeSqParams(spark: SparkSession, dir: String,
+      mns: Array[Double], scales: Array[Double]): Unit = {
+    import spark.implicits._
+    mns.indices.map(i => (i, mns(i), scales(i))).toSeq
+      .toDF("dim", "mn", "scale").coalesce(1)
+      .write.parquet(s"$dir/sqparams")
   }
 
   /** The index's persisted quantization params, driver-collected —
@@ -985,65 +730,15 @@ object Quantize {
     else r.getDouble(0) / r.getDouble(1)
   }
 
-  /** Assign + encode a batch under the index's FROZEN centroids and
-    * FROZEN quantization params; files land only in the batch's
-    * affected cells — O(batch), crash-idempotent, replay-suppressed
-    * (the [[appendToIvfPqIndex]] contract). The drift caveat is
-    * doubled here: appended vectors both route under original
-    * centroids AND clamp to the original per-dim ranges (out-of-range
-    * components saturate at code 0/255) — the periodic retrain-rebuild
-    * refreshes both. */
+  /** Appended vectors both route under the original centroids AND clamp
+    * to the original per-dim ranges (out-of-range components saturate at
+    * code 0/255) — the periodic retrain-rebuild refreshes both. */
   def appendToIvfSqIndex(spark: SparkSession, batch: DataFrame,
-      indexDir: String): Unit = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val markerPath =
-      new org.apache.hadoop.fs.Path(indexDir, "_corpus_fingerprint")
-    require(fs.exists(markerPath),
-      s"no IVF-SQ8 index at $indexDir (missing fingerprint marker)")
-    val in = fs.open(markerPath)
-    val marker = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-    require(marker.endsWith("|sq=8"),
-      s"$indexDir is not an IVF-SQ8 index: $marker")
-    val replicas = marker.split('|').find(_.startsWith("replicas="))
-      .get.stripPrefix("replicas=").toInt
-    val fpBatch = Similarity.corpusFingerprint(batch)
-    val batchId = graft.pipeline.AppendCommit.contentId(fpBatch)
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, batchId)) return
-    val cells = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    val (mns, scales) = readSqParams(spark, indexDir)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, batchId,
-        fpBatch) { tmp =>
-      batch.select(col("vec_id"),
-          sqEncodeCol(col("embedding"), mns, scales).as("codes"),
-          explode(Similarity.bestCells(cells, col("embedding"), replicas))
-            .as("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-    }
-  }
+      indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
 
-  /** RTBF cascade hook ([[purgeIvfPqIndex]]'s contract: the store holds
-    * codes, not content-bearing embeddings in float form — but codes
-    * ARE decodable content, so they leave physically; the negative
-    * fingerprint comes from `deleted`, captured pre-purge). */
   def purgeIvfSqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long = {
-    require(vecIds.nonEmpty, "purge needs at least one vec id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    purgeCodeRows(spark, indexDir, s"$indexDir/cells", vecIds, deleted)
-  }
-
-  /** Cell-file compaction for the append path — identical contract and
-    * caveat to [[compactIvfPqIndex]]. */
-  def compactIvfSqIndex(spark: SparkSession, indexDir: String,
-      targetBytes: Long = 128L * 1024 * 1024, maxFiles: Int = 4)
-      : graft.pipeline.Maintain.CompactSummary =
-    graft.pipeline.Maintain.compactPartitions(spark, s"$indexDir/cells",
-      targetBytes, maxFiles)
+      vecIds: Seq[Any], deleted: DataFrame): Long =
+    VectorIndex.purge(spark, indexDir, vecIds, deleted)
 
   /** IVF-SQ8 probe: queries route to their `nprobe` best cells (static
     * partition IN-filter, the [[Similarity.probeIvfIndex]] contract);
@@ -1061,10 +756,7 @@ object Quantize {
   def probeIvfSqIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, e: DataFrame, k: Int = 5, nprobe: Int = 4,
       rerankN: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
-    val cells = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val cells = VectorIndex.readCentroids(spark, indexDir)
     val (mns, scales) = readSqParams(spark, indexDir)
     val qn0 = aggregate(
       transform(col("q_emb"), x => x.cast("double")),
@@ -1107,20 +799,10 @@ object Quantize {
           .select(col("q_id"), explode(col("cand")).as("c"))
           .select(col("q_id"), col("c.id").as("vec_id"))
       }
-    val withEmb = e.select(col("vec_id"), col("embedding"))
-      .join(broadcast(candidates), Seq("vec_id"))
-      .join(broadcast(queries.select(col("q_id"), col("q_emb"))),
-        Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        expr("cosine_sim(q_emb, embedding)").as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    withEmb.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id"))
+    rerankExact(e, candidates, queries, k)
   }
 
-  /** Streaming IVF-SQ8 maintenance — [[foreachBatchIvfPqSink]]'s shape
+  /** Streaming IVF-SQ8 maintenance on [[VectorIndex.foreachBatchSink]]
     * (centroids + params frozen after the bootstrap batch).
     *
     * `onDrift` surfaces the same per-batch clamp-rate evidence the
@@ -1134,30 +816,12 @@ object Quantize {
   def foreachBatchIvfSqSink(indexDir: String, nlist: Int = 16,
       replicas: Int = 2, clampThreshold: Double = 0.0,
       onDrift: (Long, Double) => Unit = (_, _) => ())
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      if (!indexExists(spark, indexDir)) {
-        val b = batch.localCheckpoint()
-        buildIvfSqIndex(spark, b, indexDir, nlist, replicas, Seq(
-          graft.pipeline.AppendCommit.contentId(
-            Similarity.corpusFingerprint(b)) -> "0|0"))
-      } else {
-        if (clampThreshold > 0) {
-          val r = sqClampRate(spark, indexDir, batch)
-          if (r > clampThreshold) onDrift(batchId, r)
-        }
-        appendToIvfSqIndex(spark, batch, indexDir)
-      }
-    }
-    ()
-  }
-
-  private def gateIvfSqDir(dir: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$gateIndexBase/ivfsq_$h"
-  }
+      : (DataFrame, Long) => Unit =
+    VectorIndex.foreachBatchSink(ivfSq(nlist, replicas), indexDir,
+      (batch, batchId) => if (clampThreshold > 0) {
+        val r = sqClampRate(batch.sparkSession, indexDir, batch)
+        if (r > clampThreshold) onDrift(batchId, r)
+      })
 
   // ---------------------------------------------------------------------
   // q270_ivfsq — the persisted IVF-SQ8 index end-to-end: ensure-built,
@@ -1168,10 +832,11 @@ object Quantize {
   // ---------------------------------------------------------------------
   def q270IvfSq(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    ensureIvfSqIndex(s, e, gateIvfSqDir(dir))
+    val idx = VectorIndex.gateDir("ivfsq", dir)
+    ensureIvfSqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeIvfSqIndex(s, gateIvfSqDir(dir), queries, e, k = 5, nprobe = 4,
+    probeIvfSqIndex(s, idx, queries, e, k = 5, nprobe = 4,
       rerankN = 64)
   }
 
@@ -1186,10 +851,11 @@ object Quantize {
   // ---------------------------------------------------------------------
   def q270bIvfSqExhaustive(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    ensureIvfSqIndex(s, e, gateIvfSqDir(dir))
+    val idx = VectorIndex.gateDir("ivfsq", dir)
+    ensureIvfSqIndex(s, e, idx)
     val queries = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    probeIvfSqIndex(s, gateIvfSqDir(dir), queries, e, k = 5, nprobe = 16,
+    probeIvfSqIndex(s, idx, queries, e, k = 5, nprobe = 16,
       rerankN = 0)
   }
 }

@@ -331,9 +331,7 @@ object Similarity {
   def batchAffinity(spark: SparkSession, indexDir: String,
       batch: DataFrame): Double = {
     graft.pipeline.SafeSwap.recover(indexDir)
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = VectorIndex.readCentroids(spark, indexDir)
     meanTopAffinity(batch, centroids)
   }
 
@@ -393,12 +391,8 @@ object Similarity {
   // Persisted IVF index — the production build/probe split. Build runs
   // once per corpus version (train on a bounded sample, assign the whole
   // corpus distributed, write cell-partitioned parquet); probes read only
-  // their probed cells. Layout under `indexDir`:
-  //   centroids/            tiny parquet (cell, centroid: array<double>)
-  //   cells/cell=N/         corpus rows assigned to cell N (replicas×)
-  //   _corpus_fingerprint   rebuild trigger (corpus content + params)
-  // The whole tree is replaced behind the crash-safe SafeSwap, so probes
-  // never see a half-built index.
+  // their probed cells. The lifecycle and layout are [[VectorIndex]]'s
+  // (routed, Raw codec: the cells hold the original embeddings).
   // ---------------------------------------------------------------------
 
   /** Order-independent corpus fingerprint: one distributed pass, O(1)
@@ -446,166 +440,32 @@ object Similarity {
     s"$n|$h"
   }
 
-  /** `ledger` entries commit atomically inside the build swap (payload
-    * "0|0" — the base marker already covers the founding batch), the
-    * streaming bootstrap's crash-safety hinge ([[foreachBatchIvfSink]]). */
   def buildIvfIndex(spark: SparkSession, e: DataFrame, indexDir: String,
       nlist: Int = 16, replicas: Int = 2,
-      ledger: Seq[(String, String)] = Nil): Unit = {
-    val centroids = trainCentroids(e, nlist)
-    // drift baseline AND corpus fingerprint ride the cells-write scan
-    // (both observe nodes sit BELOW the explode, so each corpus row is
-    // aggregated once, not `replicas` times) — a build pays exactly
-    // TWO corpus-wide jobs: the centroid sample and the cells write
-    val (withFp, obsFp) = observeFingerprint(e)
-    val (observed, obs) = observeTopAffinity(withFp, centroids)
-    val corpus = observed.select(col("vec_id"), col("embedding"),
-      explode(bestCells(centroids, col("embedding"), replicas)).as("cell"))
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      val sqlCtx = spark
-      import sqlCtx.implicits._
-      ledger.foreach { case (id, payload) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, payload) }
-      centroids.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toSeq) }
-        .toDF("cell", "centroid").coalesce(1)
-        .write.parquet(s"$tmp/centroids")
-      // cell-partitioned: a probe of p cells reads p/nlist of the corpus
-      // via partition pruning, the IVF promise made physical
-      corpus.write.partitionBy("cell").parquet(s"$tmp/cells")
-      writeDriftBase(spark, tmp, observedAffinity(obs))
-      val fp = observedFingerprint(obsFp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(tmp), spark.sparkContext.hadoopConfiguration)
-      val os = fs.create(
-        new org.apache.hadoop.fs.Path(tmp, "_corpus_fingerprint"), true)
-      try os.write(s"$fp|nlist=$nlist|replicas=$replicas".getBytes("UTF-8"))
-      finally os.close()
-    }
-  }
-
-  /** The index's current cumulative fingerprint: the BUILD-time base
-    * marker plus the sum of every applied append batch's (count, hash)
-    * entry from the `_applied/` ledger. The marker file itself is never
-    * rewritten after the build — appends advance the fingerprint by the
-    * atomic creation of their ledger entry ([[graft.pipeline.AppendCommit]]),
-    * so there is no window in which data files and fingerprint can
-    * disagree after a crash-and-retry. Returns None when no index
-    * exists. Format: `n|h|nlist=..|replicas=..`. */
-  private def ivfCurrentFingerprint(spark: SparkSession,
-      indexDir: String): Option[String] =
-    graft.pipeline.AppendCommit.cumulativeFingerprint(indexDir)
+      ledger: Seq[(String, String)] = Nil): Unit =
+    VectorIndex.build(spark, ivf(nlist, replicas), e, indexDir, ledger)
 
   /** Build-if-stale: rebuilds when the corpus content or index parameters
-    * changed since the persisted state (build base + applied appends —
-    * one metadata read plus one fingerprint pass). Returns true if a
-    * rebuild ran. */
+    * changed since the persisted state. Returns true if a rebuild ran. */
   def ensureIvfIndex(spark: SparkSession, e: DataFrame, indexDir: String,
-      nlist: Int = 16, replicas: Int = 2): Boolean = {
-    val expected =
-      s"${corpusFingerprint(e)}|nlist=$nlist|replicas=$replicas"
-    if (ivfCurrentFingerprint(spark, indexDir).contains(expected)) false
-    else { buildIvfIndex(spark, e, indexDir, nlist, replicas); true }
-  }
+      nlist: Int = 16, replicas: Int = 2): Boolean =
+    VectorIndex.ensure(spark, ivf(nlist, replicas), e, indexDir)
 
-  /** Append a batch of vectors to a persisted IVF index without touching
-    * the corpus: the batch is assigned under the index's FROZEN centroids
-    * (read back from `centroids/`, params from the fingerprint marker)
-    * and its rows are appended as new files into only the affected
-    * `cells/cell=N/` directories — every other cell's files keep their
-    * on-disk identity. The fingerprint is a (count, hash-sum) pair and
-    * therefore ADDITIVE: the batch's own fingerprint is recorded as the
-    * payload of its [[graft.pipeline.AppendCommit]] ledger entry and
-    * summed onto the build-time base by [[ivfCurrentFingerprint]] — no
-    * corpus re-read — so a subsequent [[ensureIvfIndex]] over the union
-    * sees a match and does not rebuild.
-    *
-    * Idempotent under at-least-once delivery AND crash-retry: the whole
-    * placement runs through AppendCommit (staged write → tag-deleted
-    * move → ledger entry LAST), so a replayed batch id is a no-op, a
-    * retry after a crash mid-move re-places the same files without
-    * duplication, and the fingerprint advances exactly once — the
-    * ledger entry and the fingerprint advance are the same atomic file
-    * creation. (The previous scheme — append files, then rewrite the
-    * marker — had a window where a retry double-appended the batch and
-    * the advanced marker then masked the duplicates from `ensure`.)
-    *
-    * Caveat (documented, inherent to IVF): appended vectors are indexed
-    * under centroids trained on the original corpus. Under distribution
-    * drift the new cells grow unbalanced and recall degrades — the remedy
-    * is a periodic full [[buildIvfIndex]] (retrain), which this append
-    * makes cheap to DEFER, not obsolete. Batch vec_ids are assumed
-    * disjoint from the corpus (the sync layer's immutable-file
-    * contract). */
+  /** Append a batch of vectors under the index's FROZEN centroids into
+    * only the affected `cells/cell=N/` dirs ([[VectorIndex.append]]). */
   def appendToIvfIndex(spark: SparkSession, batch: DataFrame,
-      indexDir: String): Unit = {
-    // a crashed build swap leaves the last complete index under the
-    // hidden aside dir — heal it like every other entry point does
-    // instead of hard-failing on the missing marker
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    val markerPath =
-      new org.apache.hadoop.fs.Path(indexDir, "_corpus_fingerprint")
-    require(fs.exists(markerPath),
-      s"no IVF index at $indexDir (missing fingerprint marker)")
-    val in = fs.open(markerPath)
-    val marker = try new String(in.readAllBytes(), "UTF-8").trim
-      finally in.close()
-    val replicas = marker.split('|')(3).stripPrefix("replicas=").toInt
-    // batch fingerprint BEFORE the write (one pass over the batch only);
-    // it is both the idempotency key and the ledger payload
-    val fpBatch = corpusFingerprint(batch)
-    val batchId = graft.pipeline.AppendCommit.contentId(fpBatch)
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, batchId)) return
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, batchId,
-        fpBatch) { tmp =>
-      batch.select(col("vec_id"), col("embedding"),
-          explode(bestCells(centroids, col("embedding"), replicas)).as("cell"))
-        .write.partitionBy("cell").parquet(s"$tmp/cells")
-    }
-  }
+      indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
 
-  /** RTBF cascade hook: physically remove `vecIds`' rows — which carry
-    * the ORIGINAL embeddings, actual content — from the cell files, and
-    * SUBTRACT their contribution from the cumulative corpus fingerprint
-    * via a negative `-n|-h` ledger entry, so a subsequent
-    * [[ensureIvfIndex]] over the filtered corpus still fingerprint-
-    * matches (no spurious rebuild) and a probe can never reach a purged
-    * vector. The negative fingerprint is computed from the stored rows
-    * (replicas collapsed to one per vec) BEFORE they leave, staged as
-    * an intent ([[graft.pipeline.AppendCommit.runWithIntent]]) so a
-    * crash-retry reuses the pre-purge numbers. Row removal rewrites
-    * only the files holding the ids. Returns cell rows removed
-    * (≈ replicas × vecs present). Centroids stay frozen — the standard
-    * IVF deletion model; the retrain cadence re-balances. */
+  /** RTBF cascade hook: the stored rows carry the original embeddings,
+    * so the negative fingerprint comes from the index itself
+    * ([[VectorIndex.purge]]). Returns cell rows removed. */
   def purgeIvfIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any]): Long = {
-    require(vecIds.nonEmpty, "purge needs at least one vec id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val id = "purge-" + graft.pipeline.AppendCommit.contentId(
-      vecIds.map(String.valueOf).sorted.mkString("\n"))
-    var removed = 0L
-    graft.pipeline.AppendCommit.runWithIntent(indexDir, id) {
-      val r = graft.pipeline.Maintain.matchingKeys(
-          spark.read.parquet(s"$indexDir/cells"), "vec_id", vecIds)
-        .select(col("vec_id"), col("embedding")).distinct()
-        .agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("vec_id"), col("embedding"))
-            .cast("decimal(38,0)")).as("h")).head()
-      val n = r.getLong(0)
-      val h = if (r.isNullAt(1)) BigInt(0)
-        else BigInt(r.getDecimal(1).toBigInteger)
-      s"${-n}|${-h}"
-    } { _ =>
-      removed = graft.pipeline.Maintain.deleteByKey(spark,
-        s"$indexDir/cells", "vec_id", vecIds).rowsDeleted
-    }
-    removed
-  }
+      vecIds: Seq[Any]): Long =
+    VectorIndex.purge(spark, indexDir, vecIds, spark.emptyDataFrame)
+
+  private def ivf(nlist: Int, replicas: Int): VectorIndex.Spec =
+    VectorIndex.Spec(VectorIndex.Raw,
+      Some(VectorIndex.Routing(nlist, replicas)))
 
   /** Probe a persisted index: assign each query to its `nprobe` best
     * cells (centroids collected — nlist × dim doubles, KBs), join the
@@ -622,9 +482,7 @@ object Similarity {
   def probeIvfIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int = 5, nprobe: Int = 4): DataFrame = {
     VectorFunctions.register(spark) // self-sufficient: rerank needs cosine_sim
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = VectorIndex.readCentroids(spark, indexDir)
     // no cache: the hot probe path would pin one dead cache entry per
     // call for the session lifetime (nothing can unpersist after the
     // returned DataFrame executes). The exploded assignment is recomputed
@@ -638,53 +496,11 @@ object Similarity {
     rerank(cells.join(broadcast(q), Seq("cell")), k)
   }
 
-  /** Periodic maintenance for the O(batch) append path: every append
-    * lands one small file set per affected cell, so a year of daily
-    * batches leaves each `cells/cell=N/` with hundreds of small files —
-    * probe scans then pay per-file open overhead instead of streaming
-    * row groups. Compaction coalesces each over-fragmented cell behind
-    * its own per-partition SafeSwap ([[graft.pipeline.Maintain]]):
-    * content-identical, ledger and fingerprint marker untouched (they
-    * track CONTENT, which does not change), untouched cells keep
-    * physical file identity. Run on the retrain cadence.
-    *
-    * ORDERING CAVEAT (single-writer contract, same as
-    * [[graft.operators.Dedup.compactMinhashIndex]]): converge any
-    * crashed append FIRST (re-run the sync loop) — compacting while a
-    * crashed batch's tag-named partial files sit in the tree would fold
-    * them into the compacted output, and the batch's retry would then
-    * re-place them (tag-delete finds nothing after the rename),
-    * double-counting the partial portion. */
+  /** Cell-file compaction for the append path ([[VectorIndex.compact]]). */
   def compactIvfIndex(spark: SparkSession, indexDir: String,
       targetBytes: Long = 128L * 1024 * 1024, maxFiles: Int = 4)
       : graft.pipeline.Maintain.CompactSummary =
-    graft.pipeline.Maintain.compactPartitions(spark, s"$indexDir/cells",
-      targetBytes, maxFiles)
-
-  /** Streaming IVF index maintenance (`foreachBatch`): first non-empty
-    * micro-batch bootstraps (centroids trained on it; its content id
-    * committed atomically inside the build swap), later batches run the
-    * O(batch) frozen-centroid append whose content-derived id makes
-    * engine redelivery a no-op — exactly-once on top of foreachBatch's
-    * at-least-once contract. */
-  def foreachBatchIvfSink(indexDir: String, nlist: Int = 16,
-      replicas: Int = 2): (DataFrame, Long) => Unit = { (batch, _) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      graft.pipeline.SafeSwap.recover(indexDir)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(
-          indexDir, "_corpus_fingerprint"))) {
-        val b = batch.localCheckpoint() // fingerprint + build consume it
-        val id =
-          graft.pipeline.AppendCommit.contentId(corpusFingerprint(b))
-        buildIvfIndex(spark, b, indexDir, nlist, replicas,
-          Seq(id -> "0|0"))
-      } else appendToIvfIndex(spark, batch, indexDir)
-    }
-    ()
-  }
+    VectorIndex.compact(spark, indexDir, targetBytes, maxFiles)
 
   /** IVF through the persisted index: ensure-built, then probe. */
   def annIvfIndexed(spark: SparkSession, e: DataFrame, indexDir: String,
@@ -696,28 +512,10 @@ object Similarity {
     probeIvfIndex(spark, indexDir, queries, k, nprobe)
   }
 
-  /** Per-process base for gate indexes: a shared java.io.tmpdir location
-    * keyed only by data dir would race across concurrent bench/test JVMs
-    * (SafeSwap's rename window is not atomic across processes, and tmp
-    * cleaners can reap between fingerprint check and probe), so each JVM
-    * builds its own — still reused across the many Verify/Bench calls
-    * within one process, which is where the build cost matters. */
-  private lazy val gateIndexBase: String =
-    java.nio.file.Files.createTempDirectory("graft_ivf_").toString
-
-  /** Deterministic per-(corpus, params) index location for the gate
-    * queries — a warehouse deployment would place this next to the
-    * canonical layer instead (single-writer by construction there). */
-  private def gateIndexDir(dir: String, nlist: Int, replicas: Int): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"$gateIndexBase/ivf_${h}_n${nlist}_r$replicas"
-  }
-
   def q37AnnIvf(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     annIvfIndexed(s, t(s, dir, "embeddings"),
-      gateIndexDir(dir, nlist = 16, replicas = 2))
+      VectorIndex.gateDir("ivf_n16_r2", dir))
   }
 
   // ---------------------------------------------------------------------
@@ -737,7 +535,7 @@ object Similarity {
     // the oracle-checked path.
     val cells = 16
     annIvfIndexed(s, t(s, dir, "embeddings"),
-      gateIndexDir(dir, nlist = cells, replicas = 1),
+      VectorIndex.gateDir(s"ivf_n${cells}_r1", dir),
       nlist = cells, nprobe = cells, replicas = 1)
   }
 
@@ -1099,9 +897,7 @@ object Similarity {
   def semDedupProbe(spark: SparkSession, batch: DataFrame,
       indexDir: String, tau: Double,
       broadcastMaxBytes: Long = ProbeBroadcastMaxBytes): DataFrame = {
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = VectorIndex.readCentroids(spark, indexDir)
     val dim = if (centroids.nonEmpty) centroids(0).length else 0
     val b = batch.select(col("vec_id"), col("embedding"),
       bestCells(centroids, col("embedding"), 1).getItem(0).as("cell"))
@@ -1154,9 +950,7 @@ object Similarity {
       candidateMargin: Double, broadcastMaxBytes: Long)
       : (DataFrame, Long, Int, DataFrame) = {
     VectorFunctions.register(spark)
-    val centroids = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("cell")).collect()
-      .map(_.getSeq[Double](1).toArray)
+    val centroids = VectorIndex.readCentroids(spark, indexDir)
     val (mns, scales) = Quantize.readSqParams(spark, indexDir)
     val dim = mns.length
     val b = batch.select(col("vec_id"), col("embedding"),
@@ -1249,7 +1043,7 @@ object Similarity {
   def q110SemDedupIncremental(s: SparkSession, dir: String): DataFrame = {
     VectorFunctions.register(s)
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val idx = gateIndexDir(dir, nlist = 8, replicas = 2) + "_semsq8"
+    val idx = VectorIndex.gateDir("semsq8_n8_r2", dir)
     if (!new java.io.File(s"$idx.complete").exists()) {
       Quantize.buildIvfSqIndex(s, e.filter(col("vec_id") % 2 === 0), idx,
         nlist = 8, replicas = 2)

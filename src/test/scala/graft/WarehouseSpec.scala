@@ -581,7 +581,8 @@ class WarehouseSpec extends SparkSpec {
       Warehouse.Config(whDir, db = "cd_whpq", parallelism = 2,
         maintainedVectorIndexes = Seq(
           Warehouse.VectorIndexDef("emb_adc", "vecs", "vec_id", "emb",
-            nlist = 2, replicas = 1, pq = true, pqM = 2, pqK = 4))))
+            nlist = 2, replicas = 1,
+            codec = graft.operators.VectorIndex.Pq(m = 2, k = 4)))))
     wh.sync(m1, schema)
     val store = new java.io.File(new java.net.URI(
       s"$whDir/_maintained/vindex_emb_adc"))
@@ -766,7 +767,8 @@ class WarehouseSpec extends SparkSpec {
         Warehouse.VectorIndexDef("ann", "vecs", "vec_id", "emb",
           nlist = 2, replicas = 1),
         Warehouse.VectorIndexDef("sqx", "vecs", "vec_id", "emb",
-          nlist = 2, replicas = 1, sq = true)),
+          nlist = 2, replicas = 1,
+          codec = graft.operators.VectorIndex.Sq8)),
       maintainedSkipStats = Map("fact" -> Seq("k")),
       maintainedBloomStats = Map("fact" -> Seq("k")),
       maintainedPacks = Seq(Warehouse.PackDef("pk", "docs", "doc_id",
@@ -2553,14 +2555,5 @@ class WarehouseSpec extends SparkSpec {
     assert(again.recovered == 0L && again.tmpDirsRemoved == 0L &&
       again.asidesRemoved == 0L && again.quarantined == 1L)
     assert(wh.canonicalTable("docs").count() == 1L)
-  }
-
-  test("VectorIndexDef refuses pq+sq at construction — every dispatch " +
-      "site sees the refusal, not just sync maintenance") {
-    val ex = intercept[IllegalArgumentException] {
-      Warehouse.VectorIndexDef("v", "docs", "doc_id", "emb",
-        pq = true, sq = true)
-    }
-    assert(ex.getMessage.contains("mutually exclusive"))
   }
 }

@@ -310,34 +310,10 @@ class SimilaritySpec extends SparkSpec {
     val e = spark.read.parquet(src)
     val corpusRows = e.count()
     assert(corpusRows > 0L)
-    // attribute each task's input records to its job; a job reading
-    // ≥ the full corpus row count is a corpus-wide pass
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[
-      Integer, Integer]()
-    val bytesByJob = new java.util.concurrent.ConcurrentHashMap[
-      Integer, java.util.concurrent.atomic.AtomicLong]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          val j = stageToJob.getOrDefault(te.stageId, -1)
-          bytesByJob.computeIfAbsent(j,
-              _ => new java.util.concurrent.atomic.AtomicLong(0L))
-            .addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-        }
-    }
     val idx = s"$dir/index"
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (fullScans, recordsPerJob) = corpusWideJobs(corpusRows) {
       Similarity.buildIvfIndex(spark, e, idx, nlist = 8, replicas = 2)
-      Thread.sleep(1500) // listener bus drains asynchronously
-    } finally spark.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val fullScans = bytesByJob.values.asScala.map(_.get())
-      .count(_ >= corpusRows)
+    }
     // the two passes a build cannot avoid: the centroid training
     // sample (TakeOrdered reads every row) and the cells write. The
     // drift baseline AND the corpus fingerprint must both ride the
@@ -347,7 +323,7 @@ class SimilaritySpec extends SparkSpec {
     assert(fullScans == 2,
       s"expected exactly 2 corpus-wide jobs in buildIvfIndex, saw " +
         s"$fullScans (records/job: " +
-        s"${bytesByJob.values.asScala.map(_.get()).toSeq.sorted}, " +
+        s"$recordsPerJob, " +
         s"corpus $corpusRows rows)")
     // the observed sidecar aggregates equal their direct computations
     val base = Similarity.driftBase(spark, idx)
@@ -370,5 +346,52 @@ class SimilaritySpec extends SparkSpec {
     // and therefore an unchanged corpus never rebuilds
     assert(!Similarity.ensureIvfIndex(spark, e, idx, nlist = 8,
       replicas = 2), "ensure must be a no-op on an unchanged corpus")
+    // the code stores share the build: one corpus-wide job per trained
+    // model (centroid sample, codebook sample, SQ8 param aggregate) plus
+    // the rows write — counts measured on the per-kind builds they
+    // replaced, so the shared build cannot add a pass unnoticed
+    Seq[(String, Int, String => Unit)](
+      ("PQ", 2, Quantize.buildPqIndex(spark, e, _)),
+      ("IVF-PQ", 3, Quantize.buildIvfPqIndex(spark, e, _, nlist = 8,
+        replicas = 2)),
+      ("IVF-SQ8", 3, Quantize.buildIvfSqIndex(spark, e, _, nlist = 8,
+        replicas = 2))).foreach { case (kind, expected, build) =>
+      val (n, perJob) = corpusWideJobs(corpusRows)(build(s"$dir/$kind"))
+      assert(n == expected, s"expected exactly $expected corpus-wide " +
+        s"jobs in the $kind build, saw $n (records/job: $perJob, " +
+        s"corpus $corpusRows rows)")
+    }
+  }
+
+  /** (corpus-wide jobs, records read per job) while `run` executes: a
+    * job whose tasks read ≥ the corpus row count is a corpus-wide pass. */
+  private def corpusWideJobs(corpusRows: Long)(run: => Unit)
+      : (Int, Seq[Long]) = {
+    // attribute each task's input records to its job
+    val stageToJob = new java.util.concurrent.ConcurrentHashMap[
+      Integer, Integer]()
+    val bytesByJob = new java.util.concurrent.ConcurrentHashMap[
+      Integer, java.util.concurrent.atomic.AtomicLong]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
+      override def onTaskEnd(
+          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) {
+          val j = stageToJob.getOrDefault(te.stageId, -1)
+          bytesByJob.computeIfAbsent(j,
+              _ => new java.util.concurrent.atomic.AtomicLong(0L))
+            .addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      Thread.sleep(1500) // listener bus drains asynchronously
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val perJob = bytesByJob.values.asScala.map(_.get()).toSeq.sorted
+    (perJob.count(_ >= corpusRows), perJob)
   }
 }
