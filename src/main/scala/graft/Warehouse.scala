@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.CDTable
-import graft.pipeline.{Canonicalize, Sync}
+import graft.pipeline.{Canonicalize, Fs, Sync}
 
 /** The user-facing facade: what a reference deployment migrates to.
   *
@@ -1199,7 +1199,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
           // then follow the compacted file set in this same sync.
           if (spec.compactAtFiles > 0 &&
               !Canonicalize.isStreamSinkDir(path) &&
-              fsOf.exists(new org.apache.hadoop.fs.Path(path))) {
+              Fs.of(path, spark).exists(new org.apache.hadoop.fs.Path(path))) {
             if (graft.pipeline.Manifest.exists(path))
               // reader-atomic for manifest-managed tables: one
               // manifest generation swaps every compacted partition's
@@ -1514,11 +1514,11 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     }
     cfg.maintainedPacks.filter(_.table == tableName).foreach { d =>
       val store = s"${cfg.warehouseDir}/_maintained/pack_${d.name}"
-      if (fsOf.exists(new org.apache.hadoop.fs.Path(store))) {
+      if (Fs.of(store, spark).exists(new org.apache.hadoop.fs.Path(store))) {
         if (d.invalidateOnForget) {
           // conservative stance (opt-in flag): drop the store, the next
           // sync re-packs the filtered corpus — a corpus-scale job
-          fsOf.delete(new org.apache.hadoop.fs.Path(store), true)
+          Fs.of(store, spark).delete(new org.apache.hadoop.fs.Path(store), true)
           invalidated += s"pack_${d.name}"
         } else {
           // placement-preserving purge (default): the deleted docs'
@@ -1538,14 +1538,16 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     val canonDir = canonicalDir(tableName)
     val canonicalRows =
       if (cfg.canonicalize &&
-          fsOf.exists(new org.apache.hadoop.fs.Path(canonDir)))
+          Fs.of(canonDir, spark)
+            .exists(new org.apache.hadoop.fs.Path(canonDir)))
         graft.pipeline.Maintain.deleteByKey(spark, canonDir, c, keys)
           .rowsDeleted
       else 0L
     val rawRows = purgeRawTsv(t, c, keys)
     cfg.maintainedViews.filter(_.factTable == tableName).foreach { v =>
       val store = s"${cfg.warehouseDir}/_maintained/view_${v.name}"
-      if (fsOf.exists(new org.apache.hadoop.fs.Path(s"$store/view")))
+      if (Fs.of(s"$store/view", spark)
+        .exists(new org.apache.hadoop.fs.Path(s"$store/view")))
         purged(s"view_${v.name}") =
           graft.pipeline.JoinView.purgeByKey(spark, store, c, keys)
     }
@@ -1566,7 +1568,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * an id (content-keyed), so a re-journal is an overwrite-equal. */
   private def journalForget(table: String, reqId: String, c: String,
       keyStrs: Seq[String]): Unit = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(forgetDir(table))
     fs.mkdirs(dir)
     val tmp = new org.apache.hadoop.fs.Path(dir, s".req_$reqId.tmp")
@@ -1641,7 +1643,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * wins (the first capture saw the intact table). */
   private def stagedIdKeys(table: String, reqId: String, ic: String,
       compute: => Seq[String]): Seq[String] = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(forgetDir(table))
     val dest = new org.apache.hadoop.fs.Path(dir, s"map_${reqId}_$ic")
     if (fs.exists(dest)) {
@@ -1677,7 +1679,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * must not outlive its purpose. A crash between the marker and the
     * deletes leaves orphans the sweep's map-file GC clears. */
   private def writeForgetDone(table: String, reqId: String): Unit = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(forgetDir(table))
     val os = fs.create(new org.apache.hadoop.fs.Path(dir,
       s"done_$reqId"), true)
@@ -1761,7 +1763,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * Costs one listing per table with active forgets; the fresh-file
     * purge scans only the fresh files. */
   private[graft] def sweepForgets(schema: Seq[CDTable]): Unit = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     schema.foreach { t =>
       val dir = new org.apache.hadoop.fs.Path(forgetDir(t.tableName))
       if (fs.exists(dir)) {
@@ -2038,7 +2040,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       sups: Seq[(String, String)]): Unit = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, length}
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(forgetDir(table))
     val supGen: Map[String, Long] = sups.flatMap { case (n, c) =>
       parseSupName(n).map { case (_, g, _, _) => c -> g }
@@ -2178,7 +2180,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         org.apache.spark.sql.DataFrame): Long = {
     import org.apache.spark.sql.functions.col
     val tableDir = s"${cfg.warehouseDir}/${Sync.RawPrefix}/${t.tableName}"
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val root = new org.apache.hadoop.fs.Path(tableDir)
     if (!fs.exists(root)) return 0L
     // heal crashed earlier rewrites: aside + live original → leftover;
@@ -2275,7 +2277,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   private[graft] def readTableSnapshot(t: CDTable,
       files: Seq[String]): (DataFrame, Boolean) = {
     val out = canonicalDir(t.tableName)
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val marker = new org.apache.hadoop.fs.Path(out, "_raw_fingerprint")
     val current = cfg.canonicalize && fs.exists(marker) && {
       val in = fs.open(marker)
@@ -2295,12 +2297,8 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     } else (readRaw(t, files), false)
   }
 
-  private def fsOf = org.apache.hadoop.fs.FileSystem.get(
-    new java.net.URI(cfg.warehouseDir),
-    spark.sparkContext.hadoopConfiguration)
-
   private def rawListing(tableName: String): Seq[String] = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val tableDir = s"${cfg.warehouseDir}/${Sync.RawPrefix}/$tableName"
     if (!fs.exists(new org.apache.hadoop.fs.Path(tableDir))) Nil
     else fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
@@ -2336,7 +2334,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     else if (!folded.forall(files.contains)) {
       log.warn(s"$what: folded file(s) removed by stale-delete — " +
         "rebuilding from the current listing")
-      fsOf.delete(new org.apache.hadoop.fs.Path(store), true)
+      Fs.of(store, spark).delete(new org.apache.hadoop.fs.Path(store), true)
       rebuild(files)
     } else {
       FreshFold.foldFresh(store, files, legacyTag)(fold)
@@ -2396,17 +2394,6 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     graft.pipeline.JoinView.read(spark,
       s"${cfg.warehouseDir}/_maintained/view_$name")
 
-  /** Per-sync-batch maintenance of the configured MinHash indexes —
-    * the dedup reference corpus kept probe-ready with O(new files)
-    * work. Ledger ids are NAMESPACED: the warehouse records a
-    * `rawbatch-` covered marker per fold (payload = the file list),
-    * while the append itself records its content id — a crash between
-    * the append and the marker retries the intent-pinned fold, which
-    * no-ops on its content fingerprint, then lands the marker
-    * (effectively-once under at-least-once delivery). A covered file
-    * that was stale-deleted triggers a rebuild over the current
-    * listing (signatures can't subtract — same premise as rollup
-    * partials); init/rebuild reads the canonical layer when current. */
   /** Per-sync-batch refresh of the configured pack stores (see
     * [[Warehouse.PackDef]]): fresh raw files pack at the frontier in
     * one intent-pinned fold; init/rebuild packs the full snapshot. */
@@ -2477,7 +2464,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * is each in, how much suppression history is live. */
   def forgetStatus(table: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, length}
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(
       s"${cfg.warehouseDir}/_forget/$table")
     val rows: Seq[(String, String, Long)] =
@@ -2525,7 +2512,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   /** The active retention policies ([[retireOlderThan]] watermarks):
     * one row per policed table — (table, date_col, cutoff). */
   def retentionStatus(): DataFrame = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(retentionDir)
     val rows: Seq[(String, String, String)] =
       if (!fs.exists(dir)) Nil
@@ -2569,7 +2556,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * sync/forget is in flight — the same caveat as every compaction
     * entry point). Idempotent. */
   def vacuum(): VacuumSummary = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     var recovered = 0L; var tmps = 0L; var asides = 0L
     var bytes = 0L; var quarantined = 0L
     def sizeOf(p: org.apache.hadoop.fs.Path): Long =
@@ -2699,7 +2686,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * policy column per table (a second dateCol is refused loudly). */
   private def writeRetentionWatermark(table: String, dateCol: String,
       cut: java.time.LocalDate): Unit = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(retentionDir)
     fs.mkdirs(dir)
     val eff = readRetentionWatermark(table) match {
@@ -2730,7 +2717,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
 
   private def readRetentionWatermark(table: String)
       : Option[(String, java.time.LocalDate)] = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(retentionDir)
     if (!fs.exists(dir)) return None
     val files = fs.listStatus(dir).filter(_.isFile).map(_.getPath)
@@ -2936,7 +2923,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     require(ci >= 0, s"no column $dateCol in $table")
     val tableDir = s"${cfg.warehouseDir}/${Sync.RawPrefix}/$table"
     val retiredSet = retiredRawFiles(table)
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dirPath = new org.apache.hadoop.fs.Path(tableDir)
     // one directory listing — the same metadata call the sync itself
     // pays — carrying (len, mtime), the ledger key's mutation tripwire
@@ -3016,7 +3003,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * (see [[retireOlderThan]]) — O(manifest read) per policed table
     * when nothing is stale. */
   private def enforceRetention(): Unit = {
-    val fs = fsOf
+    val fs = Fs.of(cfg.warehouseDir, spark)
     val dir = new org.apache.hadoop.fs.Path(retentionDir)
     if (cfg.canonicalize && fs.exists(dir))
       fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
@@ -3034,6 +3021,17 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     graft.operators.Curation.readPackStore(spark,
       s"${cfg.warehouseDir}/_maintained/pack_$name")
 
+  /** Per-sync-batch maintenance of the configured MinHash indexes —
+    * the dedup reference corpus kept probe-ready with O(new files)
+    * work. Ledger ids are NAMESPACED: the warehouse records a
+    * `rawbatch-` covered marker per fold (payload = the file list),
+    * while the append itself records its content id — a crash between
+    * the append and the marker retries the intent-pinned fold, which
+    * no-ops on its content fingerprint, then lands the marker
+    * (effectively-once under at-least-once delivery). A covered file
+    * that was stale-deleted triggers a rebuild over the current
+    * listing (signatures can't subtract — same premise as rollup
+    * partials); init/rebuild reads the canonical layer when current. */
   private def maintainIndexes(schema: Seq[CDTable]): Unit = {
     cfg.maintainedIndexes.foreach { d =>
       schema.find(_.tableName == d.table).foreach { t =>
@@ -3193,7 +3191,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     }
     def ready(table: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(canonicalDir(table))
-      fsOf.exists(p)
+      Fs.of(cfg.warehouseDir, spark).exists(p)
     }
     cfg.maintainedSkipStats.foreach { case (table, cols) =>
       if (ready(table)) {
@@ -3227,7 +3225,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     }
     cfg.manifestTables.foreach { table =>
       val dir = canonicalDir(table)
-      if (fsOf.exists(new org.apache.hadoop.fs.Path(dir))) {
+      if (Fs.of(dir, spark).exists(new org.apache.hadoop.fs.Path(dir))) {
         if (graft.pipeline.Manifest.refresh(spark, dir))
           log.info(s"manifest for $table: new generation committed")
         // SQL-reachable snapshots, refreshed alongside the canonical
@@ -3287,9 +3285,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
           (s"profile_$t", t, graft.operators.Stats.profileSpec(cols,
             cfg.maintainedProfileHists.getOrElse(t, Nil))) }
     if (stores.isEmpty) return
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(cfg.warehouseDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.of(cfg.warehouseDir, spark)
     stores.foreach { case (storeName, tableName, spec) =>
       schema.find(_.tableName == tableName).foreach { t =>
         val tableDir = s"${cfg.warehouseDir}/${Sync.RawPrefix}/$tableName"

@@ -213,8 +213,7 @@ object Components {
 
   private def npartsMarker(spark: SparkSession, storeDir: String,
       write: Option[Int]): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(storeDir, spark)
     val p = new org.apache.hadoop.fs.Path(storeDir, "_nparts")
     write match {
       case Some(n) =>
@@ -293,9 +292,7 @@ object Components {
       maxFiles: Int = 64): Boolean = {
     val edir = s"$storeDir/edges"
     graft.pipeline.SafeSwap.recover(edir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(storeDir, spark)
     val p = new org.apache.hadoop.fs.Path(edir)
     if (!fs.exists(p)) return false
     val files = fs.listStatus(p).filter { st =>
@@ -327,8 +324,7 @@ object Components {
   /** Does a label store live at `storeDir` (healing a crashed swap)? */
   def componentStoreExists(spark: SparkSession, storeDir: String): Boolean = {
     graft.pipeline.SafeSwap.recover(storeDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(storeDir, spark)
     fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/labels"))
   }
 
@@ -452,9 +448,7 @@ object Components {
       graft.pipeline.SafeSwap.recover(s"$storeDir/edges")
       val nParts = npartsMarker(spark, storeDir, None)
       val stage = s"$storeDir/_purge_stage/$id"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(storeDir),
-        spark.sparkContext.hadoopConfiguration)
+      val fs = graft.pipeline.Fs.of(storeDir, spark)
       var unknownIds = false
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$stage/_staged"))) {
         // compute the post-delete truth from the still-intact store

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** [EXT] Corpus-curation operators for training-data pipelines:
   * benchmark decontamination, deterministic train/val splitting, and
@@ -341,6 +342,9 @@ object Curation {
   def appendToPackStore(spark: SparkSession, storeDir: String,
       batch: DataFrame, budget: Long, batchId: String): Unit =
     graft.pipeline.MaintenanceLock.withLock(storeDir, tag = "_frontier") {
+      // heal a crashed build first: an append into an empty live dir
+      // would read a zero frontier and strand the aside copy for good
+      graft.pipeline.SafeSwap.recover(storeDir)
       val base = packFrontier(storeDir)
       val total = tokenTotal(batch)
       graft.pipeline.AppendCommit.appendBatch(spark, storeDir,
@@ -536,9 +540,7 @@ object Curation {
     val spark = batch.sparkSession
     if (!batch.isEmpty) {
       graft.pipeline.SafeSwap.recover(storeDir)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(storeDir),
-        spark.sparkContext.hadoopConfiguration)
+      val fs = graft.pipeline.Fs.of(storeDir, spark)
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/docs")))
         initPackStore(spark, storeDir, batch, budget, s"stream-$id")
       else appendToPackStore(spark, storeDir, batch, budget,
@@ -773,218 +775,67 @@ object Curation {
   // actual data value, quantile_disc semantics).
   // ---------------------------------------------------------------------
   /** Per-`key` threshold = largest `value` v with #(rows ≥ v) ≥ ceil(q·n)
-    * — the upper-tail discrete quantile, computed without sorting the
-    * corpus (see q68 note). */
+    * — the upper-tail discrete quantile ([[OrderStats.upperTail]] over
+    * the (key, value) count table), computed without sorting the corpus
+    * (see q68 note). Rows with a NULL key belong to no group. */
   def quantileThresholds(df: DataFrame, key: String, value: String,
-      q: Double): DataFrame = {
-    val counts = df.groupBy(col(key), col(value))
-      .agg(count(lit(1)).as("cnt"))
-    // per-key totals fold the (key, value) aggregate — NOT a second
-    // corpus scan (guide §2.3: aggregate before you shuffle; the counts
-    // exchange is canonically identical on both references, so the scan
-    // and partial aggregation run once and are reused)
-    val totals = counts.groupBy(col(key)).agg(sum(col("cnt")).as("n"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(value).desc)
-      .rowsBetween(Long.MinValue, 0)
-    counts
-      .withColumn("cum_ge", sum(col("cnt")).over(w))
-      .join(totals, key)
-      .filter(col("cum_ge") >= ceil(col("n") * q).cast("long"))
-      .groupBy(col(key), col("n"))
-      .agg(max(col(value)).as("threshold"))
-  }
+      q: Double): DataFrame =
+    OrderStats.upperTail(
+        OrderStats.counts(df.filter(col(key).isNotNull), Seq(key), value),
+        Seq(key), value, "cnt", Seq(q))
+      .select(col(key), col("n"), col("threshold"))
 
   /** Exact per-`key` upper-tail quantile threshold for CONTINUOUS scores
-    * — same contract as [[quantileThresholds]] (largest v with
-    * #(rows ≥ v) ≥ ceil(q·n); the threshold is an actual data value,
-    * never interpolated), but safe when the score is a double and the
-    * per-(key, value) distinct table is corpus-sized. There the discrete
-    * path's per-key window would sort corpus-sized partitions through
-    * #keys tasks — the exact funnel q68's decomposition exists to avoid.
-    *
-    * Two-level decomposition (the q67 block-scan pattern, applied to
-    * order statistics):
-    *  1. value range → `numBuckets` equi-width buckets (global min/max:
-    *     two scalars to the driver, the Layout stats pattern);
-    *  2. per (key, bucket) counts — a table bounded by keys × buckets,
-    *     independent of corpus size; a top-down cumulative window over
-    *     it locates each key's BOUNDARY bucket (the highest bucket whose
-    *     top-down count covers the quota) and how many rows lie above;
-    *  3. the exact in-bucket order statistic, windowed over the DISTINCT
-    *     VALUES of the boundary bucket only — ~1/numBuckets of the
-    *     stratum's distinct values, never the corpus.
-    * The corpus itself is touched by streaming aggregations only.
-    * Correct for any distribution: eligibility (#≥v ≥ quota) is
-    * monotone downward in v, rows above the boundary bucket can never
-    * meet the quota, and the boundary bucket's minimum always does —
-    * so the answer lives in the boundary bucket. */
-  /** `rangeHint`: caller-supplied [lo, hi] bounds COVERING every non-null
-    * value (they need not be tight — correctness only needs monotone
-    * bucketing over a covering range; a loose bound merely coarsens the
-    * boundary-bucket slice by the slack factor). When the caller already
-    * knows bounds (|x − median| ∈ [0, max − min], the [[Stats.medianMad]]
-    * case) this skips the min/max probe — one full evaluation of an
-    * expensive upstream gone (guide §1.2: don't recompute what a prior
-    * pass already knows). */
+    * — same contract as [[quantileThresholds]], but safe when the score
+    * is a double and the per-(key, value) distinct table is corpus-sized
+    * ([[OrderStats.upperTailBucketed]]; `rangeHint` as documented
+    * there). */
   def quantileThresholdsContinuous(df: DataFrame, key: String,
-      value: String, q: Double, numBuckets: Int = 4096,
-      rangeHint: Option[(Double, Double)] = None): DataFrame = {
-    val (lo, hi) = rangeHint.getOrElse {
-      val range = df.agg(min(col(value)).cast("double"),
-        max(col(value)).cast("double")).head()
-      if (range.isNullAt(0)) (0.0, 0.0)
-      else (range.getDouble(0), range.getDouble(1))
-    }
-    val width = math.max((hi - lo) / numBuckets, java.lang.Double.MIN_VALUE)
-    // NULL scores land in a synthetic bucket BELOW all real ones (bkt -1),
-    // mirroring the discrete path's NULLS-LAST descending order: they
-    // count toward n, can carry the boundary when a key is NULL-heavy,
-    // and then yield that key's threshold = NULL — the discrete contract.
-    // (Without this, max(bkt) over a NULL-only eligible set is NULL and
-    // the key silently vanishes from the output.)
-    val bucketed = df.select(col(key), col(value),
-      when(col(value).isNull, lit(-1L))
-        .otherwise(least(floor((col(value) - lit(lo)) / lit(width)),
-          lit(numBuckets - 1L)).cast("long")).as("bkt"))
-    val bktCounts = bucketed.groupBy(col(key), col("bkt"))
-      .agg(count(lit(1)).as("cnt"))
-    // totals fold the keys×buckets table (every row lands in exactly one
-    // bucket, NULLs included via bkt −1) — one corpus aggregation, not
-    // two (guide §2.3); the duplicated bktCounts exchange is reused
-    val totals = bktCounts.groupBy(col(key)).agg(sum(col("cnt")).as("n"))
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("bkt").desc)
-      .rowsBetween(Long.MinValue, 0)
-    val cum = bktCounts.withColumn("cum_ge", sum(col("cnt")).over(wB))
-      .join(totals, key)
-      .withColumn("need", ceil(col("n") * q).cast("long"))
-    // boundary = highest bucket whose top-down count reaches the quota;
-    // rows strictly above it = cum_ge - cnt at that bucket
-    val boundary = cum.filter(col("cum_ge") >= col("need"))
-      .groupBy(col(key), col("n"), col("need"))
-      .agg(max(col("bkt")).as("bkt"))
-      .join(cum.select(col(key), col("bkt"), col("cnt"), col("cum_ge")),
-        Seq(key, "bkt"))
-      .withColumn("above", col("cum_ge") - col("cnt"))
-      .select(col(key), col("bkt"), col("n"), col("need"), col("above"))
-    val slice = bucketed.join(broadcast(boundary), Seq(key, "bkt"))
-    val wV = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(value).desc)
-      .rowsBetween(Long.MinValue, 0)
-    slice.groupBy(col(key), col(value), col("n"), col("need"), col("above"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("cum_in", sum(col("cnt")).over(wV))
-      .filter(col("above") + col("cum_in") >= col("need"))
-      .groupBy(col(key), col("n"))
-      .agg(max(col(value)).as("threshold"))
-  }
+      value: String, q: Double, numBuckets: Int = OrderStats.DefaultBuckets,
+      rangeHint: Option[(Double, Double)] = None): DataFrame =
+    OrderStats.upperTailBucketed(df, Seq(key), value, Seq(q), numBuckets,
+        rangeHint)
+      .select(col(key), col("n"), col("threshold"))
 
   /** Multi-quantile variant of [[quantileThresholdsContinuous]]: ALL
-    * requested upper-tail boundaries from ONE corpus pass. The
-    * keys×buckets cum table fans out per q only AFTER the reduce (the
-    * small table), and each q's boundary-bucket value slice is tiny —
-    * p50/p90/p99 together cost what one quantile costs. Per-q algebra
-    * is identical to the single-q path (spec-proved equal), so results
-    * are interchangeable. Output: (key, n, q, threshold). */
+    * requested upper-tail boundaries from ONE corpus pass — p50/p90/p99
+    * together cost what one quantile costs. Output: (key, q, n,
+    * threshold). */
   def quantileThresholdsContinuousMulti(df: DataFrame, key: String,
-      value: String, qs: Seq[Double], numBuckets: Int = 4096): DataFrame = {
-    require(qs.nonEmpty, "need at least one quantile")
-    val range = df.agg(min(col(value)).cast("double"),
-      max(col(value)).cast("double")).head()
-    val (lo, hi) =
-      if (range.isNullAt(0)) (0.0, 0.0)
-      else (range.getDouble(0), range.getDouble(1))
-    val width = math.max((hi - lo) / numBuckets, java.lang.Double.MIN_VALUE)
-    val bucketed = df.select(col(key), col(value),
-      when(col(value).isNull, lit(-1L))
-        .otherwise(least(floor((col(value) - lit(lo)) / lit(width)),
-          lit(numBuckets - 1L)).cast("long")).as("bkt"))
-    val bktCounts = bucketed.groupBy(col(key), col("bkt"))
-      .agg(count(lit(1)).as("cnt"))
-    // same one-pass totals as the single-q path (see there)
-    val totals = bktCounts.groupBy(col(key)).agg(sum(col("cnt")).as("n"))
-    val wB = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("bkt").desc)
-      .rowsBetween(Long.MinValue, 0)
-    val cum = bktCounts.withColumn("cum_ge", sum(col("cnt")).over(wB))
-      .join(totals, key)
-    val cumQ = cum
-      .withColumn("q", explode(array(qs.map(lit): _*)))
-      .withColumn("need", ceil(col("n") * col("q")).cast("long"))
-    val boundary = cumQ.filter(col("cum_ge") >= col("need"))
-      .groupBy(col(key), col("q"), col("n"), col("need"))
-      .agg(max(col("bkt")).as("bkt"))
-      .join(cum.select(col(key), col("bkt"), col("cnt"), col("cum_ge")),
-        Seq(key, "bkt"))
-      .withColumn("above", col("cum_ge") - col("cnt"))
-      .select(col(key), col("q"), col("bkt"), col("n"), col("need"),
-        col("above"))
-    val slice = bucketed.join(broadcast(boundary), Seq(key, "bkt"))
-    val wV = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key), col("q")).orderBy(col(value).desc)
-      .rowsBetween(Long.MinValue, 0)
-    slice.groupBy(col(key), col("q"), col(value), col("n"), col("need"),
-        col("above"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("cum_in", sum(col("cnt")).over(wV))
-      .filter(col("above") + col("cum_in") >= col("need"))
-      .groupBy(col(key), col("q"), col("n"))
-      .agg(max(col(value)).as("threshold"))
-  }
+      value: String, qs: Seq[Double],
+      numBuckets: Int = OrderStats.DefaultBuckets): DataFrame =
+    OrderStats.upperTailBucketed(df, Seq(key), value, qs, numBuckets)
 
   // ---------------------------------------------------------------------
   // q94_winsorize — per-stratum outlier clipping (winsorization): clamp
   // each value into [lo, hi] where lo/hi are the stratum's exact
-  // tail-order-statistics. Reuses [[quantileThresholds]] at q and 1−q —
-  // the upper-tail contract ("largest v with #(rows ≥ v) ≥ ceil(q·n)")
-  // gives the hi bound directly and the lo bound by symmetry (q→1−q).
-  // The standard robust-stats pre-step before any mean/variance-based
-  // quality score at corpus scale; thresholds are |keys|-bounded and
-  // broadcast, the clamp itself is map-only.
+  // tail-order-statistics: the upper-tail contract ("largest v with
+  // #(rows ≥ v) ≥ ceil(q·n)") gives the hi bound at q = tail directly and
+  // the lo bound by symmetry at 1−tail, both from one multi-q pass
+  // ([[OrderStats.twoTail]]). The standard robust-stats pre-step before
+  // any mean/variance-based quality score at corpus scale; thresholds are
+  // |keys|-bounded and broadcast, the clamp itself is map-only.
   // ---------------------------------------------------------------------
   def winsorize(df: DataFrame, key: String, value: String,
-      tail: Double): DataFrame = {
-    require(tail > 0 && tail < 0.5, s"tail $tail must be in (0, 0.5)")
-    val hi = quantileThresholds(df, key, value, tail)
-      .select(col(key), col("threshold").as("hi"))
-    val lo = quantileThresholds(df, key, value, 1.0 - tail)
-      .select(col(key), col("threshold").as("lo"))
-    df.join(broadcast(hi), key).join(broadcast(lo), key)
-      .withColumn("clipped",
-        greatest(col("lo"), least(col("hi"), col(value))))
-  }
+      tail: Double): DataFrame =
+    clamp(df, key, value, OrderStats.twoTail(df, key, value, tail, None))
 
   /** Winsorization for CONTINUOUS scores — the production case (a
     * quality score is a double, so the per-(key, value) distinct table
     * is corpus-sized and the discrete path's per-key value window would
-    * funnel each stratum through one sort task). Both tails route
-    * through [[quantileThresholdsContinuous]], which is generic in q:
-    * the upper tail at `tail` directly, the lower tail as the same
-    * upper-tail order statistic at 1−tail (identical contract to the
-    * discrete [[winsorize]] — "largest v with #(rows ≥ v) ≥ ceil(q·n)"
-    * at both quantiles, so the two variants agree wherever both apply).
-    * Thresholds stay |keys|-bounded and broadcast; the clamp is
-    * map-only. */
+    * funnel each stratum through one sort task). Same contract as the
+    * discrete [[winsorize]] at both quantiles, so the two variants agree
+    * wherever both apply; the tails come from the bucketed kernel. */
   def winsorizeContinuous(df: DataFrame, key: String, value: String,
-      tail: Double, numBuckets: Int = 4096): DataFrame = {
-    require(tail > 0 && tail < 0.5, s"tail $tail must be in (0, 0.5)")
-    // both tails from ONE multi-quantile pass (the q168/q174 shape) —
-    // the single-q path ran the range probe, bucket counts, and boundary
-    // slice TWICE over the same input (guide §1.2: two aggregation
-    // pipelines for two scalars of the same distribution); the multi
-    // variant is spec-proved equal per q, so the thresholds are
-    // bit-identical
-    val th = quantileThresholdsContinuousMulti(
-        df.select(col(key), col(value)), key, value,
-        Seq(tail, 1.0 - tail), numBuckets)
-      .groupBy(col(key))
-      .agg(max(when(col("q") === tail, col("threshold"))).as("hi"),
-        max(when(col("q") === 1.0 - tail, col("threshold"))).as("lo"))
-    df.join(broadcast(th), key)
+      tail: Double, numBuckets: Int = OrderStats.DefaultBuckets): DataFrame =
+    clamp(df, key, value,
+      OrderStats.twoTail(df, key, value, tail, Some(numBuckets)))
+
+  private def clamp(df: DataFrame, key: String, value: String,
+      tails: DataFrame): DataFrame =
+    df.join(broadcast(tails.select(col(key), col("hi"), col("lo"))), key)
       .withColumn("clipped",
         greatest(col("lo"), least(col("hi"), col(value))))
-  }
 
   def q94Winsorize(s: SparkSession, dir: String): DataFrame =
     winsorize(t(s, dir, "documents"), "lang", "n_chars", 0.05)
@@ -1682,8 +1533,8 @@ object Curation {
       |FROM corpus""".stripMargin
 
   /** Per-group TRIMMED MEAN: drop both `tail` fractions by the exact
-    * positional thresholds (both from ONE
-    * [[quantileThresholdsContinuousMulti]] pass), then an exact decimal
+    * positional thresholds (both from ONE bucketed
+    * [[OrderStats.twoTail]] pass), then an exact decimal
     * mean of the survivors — the robust location estimate that, unlike
     * q152's median, still uses every central observation. The kept set
     * is a deterministic value-range filter (thresholds are actual data
@@ -1692,14 +1543,9 @@ object Curation {
     * division. */
   def trimmedMean(df: DataFrame, key: String, value: String,
       tail: Double): DataFrame = {
-    require(tail > 0 && tail < 0.5, s"tail $tail must be in (0, 0.5)")
-    val th = quantileThresholdsContinuousMulti(
-        df.select(col(key), col(value)), key, value,
-        Seq(tail, 1.0 - tail))
-      .groupBy(col(key))
-      .agg(max(col("n")).as("n_total"),
-        max(when(col("q") === tail, col("threshold"))).as("hi"),
-        max(when(col("q") === 1.0 - tail, col("threshold"))).as("lo"))
+    val th = OrderStats
+      .twoTail(df, key, value, tail, Some(OrderStats.DefaultBuckets))
+      .withColumnRenamed("n", "n_total")
     df.join(broadcast(th), key)
       .filter(col(value) >= col("lo") && col(value) <= col("hi"))
       .groupBy(col(key), col("n_total"))
@@ -2110,24 +1956,18 @@ object Curation {
     * answers a different question). Same positional contract as
     * [[quantileThresholds]] with weight in place of count: per key the
     * threshold is the largest value v with W(x ≥ v) ≥ ⌈W_total·q⌉ — an
-    * actual data value, integer-exact while weights are integers.
-    * Same decomposition: a (key × distinct value) weight table, one
-    * descending cumulative window over THAT (never the raw corpus), a
-    * filtered max. */
+    * actual data value. Weights must be INTEGERS: the totals fold the
+    * (key × distinct value) weight table, which is exact and
+    * order-independent only for integer sums. */
   def weightedQuantileThresholds(df: DataFrame, key: String, value: String,
       weight: String, q: Double): DataFrame = {
-    val wTbl = df.groupBy(col(key), col(value))
-      .agg(sum(col(weight)).as("wv"))
-    val totals = df.groupBy(col(key)).agg(sum(col(weight)).as("w_total"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(value).desc)
-      .rowsBetween(Long.MinValue, 0)
-    wTbl
-      .withColumn("cum_ge", sum(col("wv")).over(w))
-      .join(totals, key)
-      .filter(col("cum_ge") >= ceil(col("w_total") * q).cast("long"))
-      .groupBy(col(key), col("w_total"))
-      .agg(max(col(value)).as("threshold"))
+    val wType = df.select(col(weight)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(wType),
+      s"weight $weight must be an integer column, got $wType")
+    val wTbl = df.filter(col(key).isNotNull)
+      .groupBy(col(key), col(value)).agg(sum(col(weight)).as("wv"))
+    OrderStats.upperTail(wTbl, Seq(key), value, "wv", Seq(q))
+      .select(col(key), col("n").as("w_total"), col("threshold"))
   }
 
   // ---------------------------------------------------------------------

@@ -69,25 +69,39 @@ object Dedup {
     * score from: (a, b, na, nb, inter) for every pair sharing ≥1
     * shingle. */
   private def sharedShingleCounts(sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // sizes attach at PAIR level, not posting level (guide §2.3: shuffle
-    // keys, not payloads): the old shape joined sizes onto every posting
-    // row BEFORE the shingle self-join — widening each collision row by
-    // two longs through the hottest exchange, and at cluster scale (a
-    // sizes table too big to broadcast) paying a full extra shuffle of
-    // the posting stream by doc_id. The pair table after the partial-
-    // aggregated intersection count is the small side to decorate.
     val a = sh.select(col("doc_id").as("a"), col("s"))
     val b = sh.select(col("doc_id").as("b"), col("s"))
-    val inter = a.join(b, Seq("s")).filter(col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    inter
+    pairCounts(sh, a.join(b, Seq("s")).filter(col("a") < col("b")))
+  }
+
+  /** (a, b, na, nb, inter) from the shingle collisions of a pair join.
+    * Sizes attach at PAIR level, not posting level (guide §2.3: shuffle
+    * keys, not payloads): joining sizes onto every posting row BEFORE
+    * the shingle self-join would widen each collision row by two longs
+    * through the hottest exchange, and at cluster scale (a sizes table
+    * too big to broadcast) pay a full extra shuffle of the posting
+    * stream by doc_id. The pair table after the partial-aggregated
+    * intersection count is the small side to decorate. Sizes come from
+    * the full stream `sh`. */
+  private def pairCounts(sh: DataFrame, collisions: DataFrame): DataFrame = {
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    collisions.groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
       .join(sizes.select(col("doc_id").as("a"), col("n").as("na")),
         Seq("a"))
       .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")),
         Seq("b"))
       .select(col("a"), col("b"), col("na"), col("nb"), col("inter"))
   }
+
+  /** The Jaccard tail every exact pair generator shares: J = inter /
+    * (na + nb − inter) on doubles, kept at J ≥ num/den. */
+  private def jaccardTail(pairs: DataFrame, num: Int, den: Int): DataFrame =
+    pairs
+      .withColumn("jac", col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")))
+      .filter(col("jac") >= lit(num.toDouble / den.toDouble))
+      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
+        col("jac"))
 
   /** CROSS-SIDE exact Jaccard pairs: only pairs whose a-side row fails
     * `rightSide` and whose b-side row satisfies it ever meet — the
@@ -102,32 +116,14 @@ object Dedup {
     * above every left id (the planted-batch convention) so the a < b
     * canonical order is the cross order. */
   def crossJaccardPairs(sh: DataFrame, rightSide: Column): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val a = sh.filter(!rightSide).select(col("doc_id").as("a"), col("s"))
     val b = sh.filter(rightSide).select(col("doc_id").as("b"), col("s"))
-    val inter = a.join(b, Seq("s"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("a"), col("n").as("na")),
-        Seq("a"))
-      .join(sizes.select(col("doc_id").as("b"), col("n").as("nb")),
-        Seq("b"))
-      .withColumn("jac", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")))
-      .filter(col("jac") >= 0.6)
-      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
-        col("jac"))
+    jaccardTail(pairCounts(sh, a.join(b, Seq("s"))), 3, 5)
   }
 
-  /** Exact Jaccard pairs from a precomputed shingle stream (shared with
-    * q34b so the shingle pass runs once). */
-  def jaccardPairs(sh: DataFrame): DataFrame =
-    sharedShingleCounts(sh)
-      .withColumn("jac", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")))
-      .filter(col("jac") >= 0.6)
-      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
-        col("jac"))
+  /** Exact Jaccard pairs (J ≥ 0.6) from a precomputed shingle stream
+    * (shared with q34b so the shingle pass runs once). */
+  def jaccardPairs(sh: DataFrame): DataFrame = jaccardPairsAt(sh, 3, 5)
 
   def q33NgramJaccard(s: SparkSession, dir: String): DataFrame =
     jaccardPairs(shingleRows(t(s, dir, "documents")))
@@ -305,12 +301,7 @@ object Dedup {
     * the plain-inverted-index half of the auto path (τ = 3/5 gives
     * exactly q33's 0.6 double). */
   def jaccardPairsAt(sh: DataFrame, num: Int, den: Int): DataFrame =
-    sharedShingleCounts(sh)
-      .withColumn("jac", col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")))
-      .filter(col("jac") >= lit(num.toDouble / den.toDouble))
-      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
-        col("jac"))
+    jaccardTail(sharedShingleCounts(sh), num, den)
 
   /** Auto near-dup join: read the skew evidence, run the winning plan.
     * Output is identical either way (the q237 gate proves the prefix
@@ -895,8 +886,7 @@ object Dedup {
   private def hasSizesTable(spark: SparkSession, indexDir: String): Boolean = {
     // existence goes through the index's OWN filesystem (java.io.File is
     // always false on hdfs:// or s3:// paths)
-    val idxFs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
+    val idxFs = graft.pipeline.Fs.of(indexDir, spark)
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/bucket_sizes")
     idxFs.exists(p) && idxFs.listStatus(p).exists { st =>
       val n = st.getPath.getName
@@ -1030,8 +1020,7 @@ object Dedup {
       val spark = batch.sparkSession
       if (!batch.isEmpty) {
         graft.pipeline.SafeSwap.recover(indexDir)
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
+        val fs = graft.pipeline.Fs.of(indexDir, spark)
         if (!fs.exists(
             new org.apache.hadoop.fs.Path(s"$indexDir/signatures"))) {
           val b = batch.localCheckpoint() // fingerprint + build consume it

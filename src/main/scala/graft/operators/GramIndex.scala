@@ -62,9 +62,11 @@ object GramIndex {
   }
 
   /** O(batch) append: the batch's distinct grams land file-additively in
-    * their buckets; a replayed batch no-ops on the ledger. */
+    * their buckets; a replayed batch no-ops on the ledger. A build that
+    * crashed between its renames is healed first, as in [[purgeDocs]]. */
   def appendToGramIndex(spark: SparkSession, batch: DataFrame, n: Int,
       indexDir: String): Boolean = {
+    graft.pipeline.SafeSwap.recover(indexDir)
     val id = graft.pipeline.AppendCommit.contentId(fingerprintOf(batch))
     graft.pipeline.AppendCommit.appendBatch(spark, indexDir, id) { tmp =>
       gramsOf(batch, n).repartition(col("gb"))
@@ -83,6 +85,7 @@ object GramIndex {
   def purgeDocs(spark: SparkSession, indexDir: String,
       docIds: Seq[Any]): Long = {
     require(docIds.nonEmpty, "purge needs at least one doc id")
+    graft.pipeline.SafeSwap.recover(indexDir)
     val id = "purge-" + graft.pipeline.AppendCommit.contentId(
       docIds.map(String.valueOf).sorted.mkString("\n"))
     if (graft.pipeline.AppendCommit.isApplied(indexDir, id)) return 0L

@@ -301,8 +301,7 @@ object Sampling {
       .partitionBy("shard").mode("overwrite").parquet(outDir)
     // shard count from the written layout — one directory listing,
     // not a second run of the epoch pipeline
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(outDir),
-      sh.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(outDir, sh.sparkSession)
     fs.listStatus(new org.apache.hadoop.fs.Path(outDir))
       .count(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
       .toLong

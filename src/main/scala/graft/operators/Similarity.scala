@@ -301,8 +301,7 @@ object Similarity {
 
   private[operators] def writeDriftBase(spark: SparkSession,
       dir: String, v: Double): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(dir, spark)
     val os = fs.create(
       new org.apache.hadoop.fs.Path(dir, DriftBaseFile), true)
     try os.write(v.toString.getBytes("UTF-8"))
@@ -314,8 +313,7 @@ object Similarity {
     * maintenance loop then skips the check rather than guessing). */
   def driftBase(spark: SparkSession, indexDir: String): Option[Double] = {
     graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(indexDir, spark)
     val p = new org.apache.hadoop.fs.Path(indexDir, DriftBaseFile)
     if (!fs.exists(p)) None
     else {

@@ -921,8 +921,8 @@ object Stats {
   // the score distribution has a heavy junk tail (the mean chases the
   // tail; the median doesn't — Hampel 1974).
   //
-  // Built as TWO passes of the continuous-quantile machinery
-  // ([[Curation.quantileThresholdsContinuous]], the q68b operator):
+  // Built as TWO passes of the bucketed order-statistics kernel
+  // ([[OrderStats.upperTailBucketed]], the q68b operator):
   // median = its q=0.5 threshold (max v with #(x ≥ v) ≥ ⌈n/2⌉ — a
   // positional pick of an ACTUAL data value, so no interpolation doubles
   // to drift); MAD = the same pick over |x − median|. |x − median| is one
@@ -954,14 +954,14 @@ object Stats {
     // each of them (guide §5: cut lineage when recomputing an
     // intermediate is more expensive than holding it; the held state
     // here is keys-bounded, never corpus-bounded)
-    val med = Curation.quantileThresholdsContinuous(vals, key, "__x", 0.5,
+    val med = OrderStats.upperTailBucketed(vals, Seq(key), "__x", Seq(0.5),
         rangeHint = Some((lo, hi)))
       .select(col(key), col("n"), col("threshold").as("median"))
       .localCheckpoint()
     val dev = vals.join(broadcast(med.select(col(key), col("median"))), key)
       .select(col(key), abs(col("__x") - col("median")).as("__adev"))
-    val mad = Curation.quantileThresholdsContinuous(dev, key, "__adev", 0.5,
-        rangeHint = Some((0.0, math.max(hi - lo, 0.0))))
+    val mad = OrderStats.upperTailBucketed(dev, Seq(key), "__adev",
+        Seq(0.5), rangeHint = Some((0.0, math.max(hi - lo, 0.0))))
       .select(col(key), col("threshold").as("mad"))
     med.join(mad, key)
       .select(col(key), col("n"), col("median"), col("mad"))
@@ -1824,25 +1824,18 @@ object Stats {
     * table behind a quantile-quantile plot, and the distribution-shift
     * readout that names WHERE two cohorts diverge (KS says "they
     * differ", PSI says "how much"; this says "the p90s differ by X").
-    * Built from the discrete positional rule ([[graft.operators
-    * .Curation.quantileThresholds]] contract — thresholds are actual
-    * data values, hash-exact) applied per (cohort, q) from ONE
-    * cumulative window over the (cohort × distinct value) table. */
+    * Built from the discrete positional rule ([[OrderStats.upperTail]]
+    * — thresholds are actual data values, hash-exact) applied per
+    * (cohort, q) from ONE cumulative window over the (cohort × distinct
+    * value) table. */
   def qqTable(df: DataFrame, cohort: String, value: String,
       qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty, "need at least one quantile")
-    val counts = df.groupBy(col(cohort), col(value))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col(cohort)).orderBy(col(value).desc)
-      .rowsBetween(Long.MinValue, 0)
-    val cum = counts
-      .withColumn("cum_ge", sum(col("cnt")).over(w))
-      .withColumn("n", sum(col("cnt")).over(
-        Window.partitionBy(col(cohort))))
+    val th = OrderStats.upperTail(OrderStats.counts(df, Seq(cohort), value),
+      Seq(cohort), value, "cnt", qs)
     val qAggs = qs.map(q =>
-      max(when(col("cum_ge") >= ceil(col("n") * q).cast("long"),
-        col(value))).as(f"p${math.round((1 - q) * 100)}%02d"))
-    cum.groupBy(col(cohort))
+      max(when(col("q") === q, col("threshold")))
+        .as(f"p${math.round((1 - q) * 100)}%02d"))
+    th.groupBy(col(cohort))
       .agg(max(col("n")).as("n"), qAggs: _*)
   }
 
@@ -2138,19 +2131,10 @@ object Stats {
     val joined = base.join(trail, Seq(key))
       .filter(col("__td") <= col("__d") &&
         col("__td") > col("__d") - window)
-    val counts = joined.groupBy(col(key), col("__d"), col("__tv"))
-      .agg(count(lit(1)).as("c"))
-    val w = Window.partitionBy(col(key), col("__d"))
-      .orderBy(col("__tv").desc)
-      .rowsBetween(Long.MinValue, 0)
-    counts
-      .withColumn("cum_ge", sum(col("c")).over(w))
-      .withColumn("n", sum(col("c")).over(
-        Window.partitionBy(col(key), col("__d"))))
-      .filter(col("cum_ge") >= ceil(col("n") * q).cast("long"))
-      .groupBy(col(key), col("__d").as(day))
-      .agg(max(col("n")).as("n_window"),
-        max(col("__tv")).as("rolling_q"))
+    OrderStats.upperTail(OrderStats.counts(joined, Seq(key, "__d"), "__tv"),
+        Seq(key, "__d"), "__tv", "cnt", Seq(q))
+      .select(col(key), col("__d").as(day), col("n").as("n_window"),
+        col("threshold").as("rolling_q"))
   }
 
   // ---------------------------------------------------------------------

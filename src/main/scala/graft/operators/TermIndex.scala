@@ -74,9 +74,11 @@ object TermIndex {
 
   /** O(batch) append: only the batch's own postings files move into the
     * live tree; untouched index files keep physical identity. Replay of
-    * an applied batch is a ledger-probe no-op. */
+    * an applied batch is a ledger-probe no-op. A build that crashed
+    * between its renames is healed first, as in [[purgeDocs]]. */
   def appendToTermIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = {
+    graft.pipeline.SafeSwap.recover(indexDir)
     val (fp, n, sumDl) = fpAndStats(batch)
     val id = graft.pipeline.AppendCommit.contentId(fp)
     graft.pipeline.AppendCommit.appendBatch(spark, indexDir, id,
@@ -100,6 +102,7 @@ object TermIndex {
   def purgeDocs(spark: SparkSession, indexDir: String,
       docIds: Seq[Any]): Long = {
     require(docIds.nonEmpty, "purge needs at least one doc id")
+    graft.pipeline.SafeSwap.recover(indexDir)
     val id = "purge-" + graft.pipeline.AppendCommit.contentId(
       docIds.map(String.valueOf).sorted.mkString("\n"))
     var removed = 0L

@@ -138,21 +138,18 @@ object VectorIndex {
     }
   }
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-
   private val MarkerFile = "_corpus_fingerprint"
 
   private def hasMarker(spark: SparkSession, dir: String): Boolean =
-    fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(dir, MarkerFile))
+    graft.pipeline.Fs.of(dir, spark)
+      .exists(new org.apache.hadoop.fs.Path(dir, MarkerFile))
 
   /** The spec of the index at `dir` — its params are FROZEN at build,
     * so appends and purges follow the store, not the caller. */
   private def storedSpec(spark: SparkSession, dir: String): Spec = {
     require(hasMarker(spark, dir),
       s"no vector index at $dir (missing fingerprint marker)")
-    val in = fsOf(spark, dir).open(
+    val in = graft.pipeline.Fs.of(dir, spark).open(
       new org.apache.hadoop.fs.Path(dir, MarkerFile))
     Spec.parse(try new String(in.readAllBytes(), "UTF-8").trim
       finally in.close())
@@ -187,7 +184,7 @@ object VectorIndex {
         Similarity.writeDriftBase(spark, tmp,
           Similarity.observedAffinity(obs))
       }
-      val os = fsOf(spark, tmp).create(
+      val os = graft.pipeline.Fs.of(tmp, spark).create(
         new org.apache.hadoop.fs.Path(tmp, MarkerFile), true)
       try os.write(spec.marker(Similarity.observedFingerprint(obsFp))
         .getBytes("UTF-8"))

@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import java.net.URI
-
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Idempotent FILE-ADDITIVE append of a batch into a live multi-table
@@ -44,9 +41,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * applied batch).
   */
 object AppendCommit {
-
-  private def fsFor(path: String): FileSystem =
-    FileSystem.get(new URI(path), new Configuration())
 
   private def ledgerPath(root: String, batchId: String): Path =
     new Path(root, s"_applied/$batchId")
@@ -119,7 +113,7 @@ object AppendCommit {
     * size-delta log) must invoke it earlier — before planning that
     * read, or the captured file listing references deleted files. */
   def clearCrashedAttempt(root: String, batchId: String): Unit =
-    deleteTagged(fsFor(root), new Path(root), batchId)
+    deleteTagged(Fs.of(root), new Path(root), batchId)
 
   /** Content-derived batch id — the replay-suppression key every index
     * append/bootstrap shares. ONE definition on purpose: these ids are
@@ -205,7 +199,7 @@ object AppendCommit {
     * the atomic creation of each ledger entry, so data files and
     * fingerprint cannot disagree after a crash-and-retry. */
   def cumulativeFingerprint(root: String): Option[String] = {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val marker = new Path(root, "_corpus_fingerprint")
     if (!fs.exists(marker)) None
     else {
@@ -250,7 +244,7 @@ object AppendCommit {
     * batch, but a batch redelivered afterwards (at-least-once streaming)
     * must still read as applied. No-op when `src` has no ledger. */
   def copyLedger(src: String, dst: String): Unit = {
-    val fs = fsFor(src)
+    val fs = Fs.of(src)
     val from = new Path(src, "_applied")
     if (!fs.exists(from)) return
     val to = new Path(dst, "_applied")
@@ -268,7 +262,7 @@ object AppendCommit {
     * object-level contract). Returns the number of entries the ledger
     * now records. */
   def compactLedger(root: String): Int = {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val dir = new Path(root, "_applied")
     if (!fs.exists(dir)) return 0
     val (gen, compacted) = readCompacted(fs, dir)
@@ -302,7 +296,7 @@ object AppendCommit {
   }
 
   def isApplied(root: String, batchId: String): Boolean = {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     fs.exists(ledgerPath(root, batchId)) ||
       readCompacted(fs, new Path(root, "_applied"))._2.contains(batchId)
   }
@@ -311,7 +305,7 @@ object AppendCommit {
     * fingerprint-tracking consumers ([[graft.operators.Similarity]]'s
     * IVF `ensure`). Unordered (appends are content-commutative). */
   def appliedEntries(root: String): Seq[(String, String)] = {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val dir = new Path(root, "_applied")
     val (_, compacted) = readCompacted(fs, dir)
     val plain = plainEntryFiles(fs, dir).map { st =>
@@ -347,7 +341,7 @@ object AppendCommit {
   def runWithIntent(root: String, id: String)(compute: => String)(
       work: String => Unit): Boolean = {
     if (isApplied(root, id)) return false
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val lp = ledgerPath(root, id)
     fs.mkdirs(lp.getParent)
     val intent = new Path(lp.getParent, s".intent_$id")
@@ -380,7 +374,7 @@ object AppendCommit {
       payload: String = ""): Unit = {
     require(batchId.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"batch id must be path-safe and not hidden, got: $batchId")
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val lp = ledgerPath(root, batchId)
     fs.mkdirs(lp.getParent)
     val os = fs.create(lp, true)
@@ -404,7 +398,7 @@ object AppendCommit {
     * Covers the flat root plus two partition-directory levels (the
     * layouts [[appendBatch]]'s movers produce). */
   def filesOfBatch(root: String, batchId: String): Seq[String] = {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     if (!fs.exists(new Path(root))) return Seq.empty
     val tag = tagOf(batchId)
     Seq(s"$root/$tag*", s"$root/*/$tag*", s"$root/*/*/$tag*")
@@ -472,7 +466,7 @@ object AppendCommit {
     // attempts at the SAME batch id would race tag-delete against the
     // other's in-flight moves — the loser now fails loudly instead
     MaintenanceLock.withLock(root, tag = s"_$batchId") {
-    val fs = fsFor(root)
+    val fs = Fs.of(root)
     val staging = new Path(stagingPath(root, batchId))
     if (isApplied(root, batchId)) {
       // a crash between the ledger write and the staging cleanup leaves

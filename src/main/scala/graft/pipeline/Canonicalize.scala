@@ -30,15 +30,11 @@ object Canonicalize {
     * dominant storage cost. Override per call for CPU-bound clusters. */
   val DefaultCodec = "zstd"
 
-  private def fsFor(path: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), new org.apache.hadoop.conf.Configuration())
-
   /** True if `dir` was written by the streaming sink ([[canonicalizeStream]])
     * — it then carries a `_spark_metadata` commit log that batch readers
     * trust exclusively. */
   def isStreamSinkDir(path: String): Boolean = {
-    val fs = fsFor(path)
+    val fs = Fs.of(path)
     fs.exists(new org.apache.hadoop.fs.Path(path, "_spark_metadata"))
   }
 
@@ -108,7 +104,7 @@ object Canonicalize {
   private[pipeline] def rawListingEntries(spark: SparkSession,
       warehouseDir: String, table: String): Seq[String] = {
     val root = s"$warehouseDir/${Sync.RawPrefix}/$table"
-    val fs = fsFor(warehouseDir)
+    val fs = Fs.of(warehouseDir)
     val p = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(p)) Seq.empty
     else {
@@ -253,7 +249,7 @@ object Canonicalize {
   def rebaseFingerprint(spark: SparkSession, warehouseDir: String,
       table: String, before: String): Unit = {
     val out = s"$warehouseDir/$CanonicalPrefix/$table"
-    val fs = fsFor(warehouseDir)
+    val fs = Fs.of(warehouseDir)
     val marker = new org.apache.hadoop.fs.Path(out, "_raw_fingerprint")
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -297,7 +293,7 @@ object Canonicalize {
     if (isStreamSinkDir(out)) return (out, false)
     val entries = rawListingEntries(spark, warehouseDir, table.tableName)
     val fp = fingerprintOf(entries)
-    val fs = fsFor(warehouseDir)
+    val fs = Fs.of(warehouseDir)
     val marker = new org.apache.hadoop.fs.Path(out, "_raw_fingerprint")
     val current =
       if (!fs.exists(marker)) None
@@ -455,7 +451,7 @@ object Canonicalize {
       targetBytes: Long = 512L * 1024 * 1024,
       maxFiles: Int = 1): (Int, Int) = {
     val out = s"$warehouseDir/$CanonicalPrefix/$table"
-    val fs = fsFor(warehouseDir)
+    val fs = Fs.of(warehouseDir)
     val dir = new org.apache.hadoop.fs.Path(out)
     require(!isStreamSinkDir(out),
       s"$out was written by the streaming sink (_spark_metadata present); " +
@@ -561,7 +557,7 @@ object Canonicalize {
     require(isStreamSinkDir(out),
       s"$out has no _spark_metadata sink log — use compact() for " +
         "batch-written tables")
-    val fs = fsFor(warehouseDir)
+    val fs = Fs.of(warehouseDir)
     val oldLog = new FileStreamSinkLog(FileStreamSinkLog.VERSION, spark,
       s"$out/_spark_metadata", None)
     val oldFiles = oldLog.allFiles()

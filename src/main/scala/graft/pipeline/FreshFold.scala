@@ -1,9 +1,6 @@
 package graft.pipeline
 
-import java.net.URI
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Fold ALL of a listing's fresh files into a maintained store in ONE
   * batch — the backlog-proof refresh unit for the Warehouse's
@@ -44,9 +41,6 @@ object FreshFold {
   val Tag = "rawbatch-"
   private val IntentName = "_fold_intent"
 
-  private def fsFor(path: String): FileSystem =
-    FileSystem.get(new URI(path), new Configuration())
-
   private def intentPath(store: String) = new Path(store, IntentName)
 
   /** Files covered by previous folds: batch payloads plus legacy
@@ -84,7 +78,7 @@ object FreshFold {
   def pendingIntent(store: String): Option[Seq[String]] = readIntent(store)
 
   private def readIntent(store: String): Option[Seq[String]] = {
-    val fs = fsFor(store)
+    val fs = Fs.of(store)
     val p = intentPath(store)
     if (!fs.exists(p)) None
     else {
@@ -96,7 +90,7 @@ object FreshFold {
   }
 
   private def writeIntent(store: String, files: Seq[String]): Unit = {
-    val fs = fsFor(store)
+    val fs = Fs.of(store)
     fs.mkdirs(new Path(store))
     // temp + rename, never a plain overwrite create: a crash mid-write
     // would otherwise leave a TRUNCATED intent whose last line is a
@@ -128,7 +122,7 @@ object FreshFold {
     // encLine'd names; [[covered]] decodes behind the header)
     AppendCommit.markApplied(store, id,
       AppendCommit.encPayload(files.sorted))
-    fsFor(store).delete(intentPath(store), false)
+    Fs.of(store).delete(intentPath(store), false)
   }
 
   /** Fold `listing ∖ covered` in one `fold(files, ledgerId)` call.

@@ -36,12 +36,6 @@ object Maintain {
   final case class CompactSummary(partitionsSeen: Int,
       partitionsCompacted: Int, filesBefore: Long, filesAfter: Long)
 
-  // Path#getFileSystem, not FileSystem.get(new URI(…)): partition values
-  // may hold URI-illegal characters (spaces) that the strict parser
-  // rejects — Path's constructor quotes them (same fix as SafeSwap)
-  private def fsFor(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def dataFiles(fs: FileSystem, dir: Path)
       : Array[org.apache.hadoop.fs.FileStatus] =
     fs.listStatus(dir).filter { st =>
@@ -57,7 +51,7 @@ object Maintain {
       targetBytes: Long, maxFiles: Int = 1): CompactSummary = {
     require(targetBytes > 0 && maxFiles >= 1,
       "targetBytes must be positive and maxFiles at least 1")
-    val fs = fsFor(spark, path)
+    val fs = Fs.of(path, spark)
     val root = new Path(path)
     val managed = Manifest.exists(path)
     if (managed) Manifest.recover(path)
@@ -301,7 +295,7 @@ object Maintain {
       values: Seq[Any]): DeleteSummary = {
     require(values.nonEmpty, "need at least one key to delete")
     import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     val managed = Manifest.exists(tableDir)
     if (managed) {
       Manifest.recover(tableDir)
@@ -578,7 +572,7 @@ object Maintain {
     require(keys.columns.length == 1,
       s"key frame must have exactly one column, got " +
         s"[${keys.columns.mkString(", ")}]")
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     val managed = Manifest.exists(tableDir)
     if (managed) {
       Manifest.recover(tableDir)

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** ENFORCEMENT of the single-maintenance-writer contract the stores in
   * this package document ([[Rollup]], [[AppendCommit]]): a hidden
@@ -23,9 +22,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * check-then-create on local FS (enforcement-grade, not consensus). */
 object MaintenanceLock {
 
-  private def fsFor(path: String): FileSystem =
-    new Path(path).getFileSystem(new Configuration())
-
   /** Hidden sibling, not a child: the guarded dir is SafeSwap-replaced
     * wholesale — a lock inside it would vanish with the swap. */
   private def lockPath(dir: String, tag: String): Path = {
@@ -40,7 +36,7 @@ object MaintenanceLock {
     * live writer holds it. */
   def withLock[T](dir: String, tag: String = "",
       leaseMs: Long = DefaultLeaseMs)(body: => T): T = {
-    val fs = fsFor(dir)
+    val fs = Fs.of(dir)
     val lock = lockPath(dir, tag)
     fs.mkdirs(lock.getParent)
     // Break an orphaned lease (holder died mid-merge) by RENAMING it to

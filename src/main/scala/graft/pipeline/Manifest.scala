@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -91,9 +90,6 @@ object Manifest {
     * unknown to the manifest is treated as a fresh append. */
   private[pipeline] val MaintPrefixes = Seq("del_", "cmp_", "ups_")
 
-  private def fsFor(path: String): FileSystem =
-    new Path(path).getFileSystem(new Configuration())
-
   private def genOf(name: String): Option[Long] =
     if (!name.startsWith(GenPrefix)) None
     else name.stripPrefix(GenPrefix).toLongOption
@@ -113,7 +109,7 @@ object Manifest {
     * (re-commit writes the marker), and the explicit snapshot APIs
     * ([[resolve]]/[[readSnapshot]]) never consult the marker. */
   def exists(tableDir: String): Boolean =
-    fsFor(tableDir).exists(new Path(tableDir, MarkerName))
+    Fs.of(tableDir).exists(new Path(tableDir, MarkerName))
 
   private def readGen(fs: FileSystem, p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -140,7 +136,7 @@ object Manifest {
   /** The current generation's relative file list, if a manifest exists. */
   def current(tableDir: String): Option[Seq[String]] =
     retryingGenRead {
-      val fs = fsFor(tableDir)
+      val fs = Fs.of(tableDir)
       genFiles(fs, new Path(tableDir)).lastOption
         .map { case (_, p) => readGen(fs, p) }
     }
@@ -150,7 +146,7 @@ object Manifest {
   private def lastTwo(tableDir: String)
       : Option[(Long, Seq[String], Seq[String])] =
     retryingGenRead {
-      val fs = fsFor(tableDir)
+      val fs = Fs.of(tableDir)
       val gens = genFiles(fs, new Path(tableDir))
       gens.lastOption.map { case (g, cur) =>
         (g, readGen(fs, cur),
@@ -194,7 +190,7 @@ object Manifest {
     * window would leave the forgotten rows' bytes on disk (and a raw
     * candidate listing could resurrect them into a rewrite). */
   def purgeAllTombs(tableDir: String): Unit = {
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val root = new Path(tableDir)
     tombLists(fs, root).foreach { case (_, p) => purgeTomb(fs, root, p) }
   }
@@ -226,7 +222,7 @@ object Manifest {
     * window, after which [[resolve]] would misread them as appends. */
   def commit(tableDir: String, relFiles: Seq[String],
       tombRels: Seq[String] = Nil): Unit = {
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val root = new Path(tableDir)
     fs.mkdirs(root)
     val gens = genFiles(fs, root)
@@ -267,7 +263,7 @@ object Manifest {
   /** Make `tableDir` manifest-managed: commit generation 1 from the
     * current listing. */
   def enable(spark: SparkSession, tableDir: String): Unit = {
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val tombed = tombedRels(fs, new Path(tableDir))
     commit(tableDir,
       listDataFiles(fs, new Path(tableDir)).filterNot(tombed))
@@ -283,7 +279,7 @@ object Manifest {
     * maintenance-cadence entry point ([[graft.Warehouse]] wires it per
     * sync). Returns whether a generation was committed. */
   def refresh(spark: SparkSession, tableDir: String): Boolean = {
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val root = new Path(tableDir)
     // recover() also ages out deferred-delete tombs that fell behind
     // the two-generation retention window — refresh is the per-sync
@@ -308,7 +304,7 @@ object Manifest {
     * appends (unknown, unprefixed) are untouched. No-op without a
     * manifest. */
   def recover(tableDir: String): Unit = {
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val root = new Path(tableDir)
     lastTwo(tableDir).foreach { case (curGen, cur, prev) =>
       // Heal a crash between a commit's generation write and its marker
@@ -349,7 +345,7 @@ object Manifest {
     * `tableDir`. */
   def resolve(tableDir: String): Option[Seq[String]] =
     lastTwo(tableDir).map { case (_, cur, prev) =>
-      val fs = fsFor(tableDir)
+      val fs = Fs.of(tableDir)
       val known = cur.toSet ++ prev.toSet ++
         tombedRels(fs, new Path(tableDir))
       val appends = listDataFiles(fs, new Path(tableDir)).filter { f =>
@@ -362,7 +358,7 @@ object Manifest {
   /** Retained generation numbers, oldest first (at most two — current
     * and previous; the time-travel window). */
   def generations(tableDir: String): Seq[Long] =
-    genFiles(fsFor(tableDir), new Path(tableDir)).map(_._1)
+    genFiles(Fs.of(tableDir), new Path(tableDir)).map(_._1)
 
   /** File list of a RETAINED generation, at the files' original paths.
     * Files a later commit replaced are still on disk (deferred
@@ -371,7 +367,7 @@ object Manifest {
     * partial generation, and it can never resurrect forgotten rows. */
   def resolveAt(tableDir: String, generation: Long): Option[Seq[String]] =
     retryingGenRead {
-      val fs = fsFor(tableDir)
+      val fs = Fs.of(tableDir)
       genFiles(fs, new Path(tableDir)).find(_._1 == generation)
         .map { case (_, p) =>
           val rels = readGen(fs, p)
@@ -418,7 +414,7 @@ object Manifest {
       tableDir: String, repls: Seq[Replacement]): Seq[Int] = {
     require(repls.forall(r => MaintPrefixes.contains(r.prefix)),
       s"unregistered maintenance prefix in ${repls.map(_.prefix).distinct}")
-    val fs = fsFor(tableDir)
+    val fs = Fs.of(tableDir)
     val runId = java.util.UUID.randomUUID().toString.take(8)
     val placed: Seq[Seq[Path]] = repls.zipWithIndex.map { case (r, i) =>
       val tmpDir = new Path(r.destDir, s".${r.prefix}tmp_$i").toString

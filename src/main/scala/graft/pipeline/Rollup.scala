@@ -210,8 +210,7 @@ object Rollup {
   private def writeHistScale(spark: SparkSession, dir: String,
       spec: Spec): Unit =
     if (spec.histCols.nonEmpty) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+      val fs = Fs.of(dir, spark)
       val os = fs.create(
         new org.apache.hadoop.fs.Path(dir, "_hist_scale"), true)
       try os.write(HistScaleVersion.getBytes("UTF-8"))
@@ -225,9 +224,7 @@ object Rollup {
       spec: Spec, schema: org.apache.spark.sql.types.StructType)
       : Boolean =
     temporalHists(schema, spec).isEmpty || {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(storeDir),
-        spark.sparkContext.hadoopConfiguration)
+      val fs = Fs.of(storeDir, spark)
       val m = new org.apache.hadoop.fs.Path(storeDir, "_hist_scale")
       fs.exists(m) && {
         val in = fs.open(m)
@@ -320,9 +317,7 @@ object Rollup {
   private[pipeline] def stageRetraction(spark: SparkSession,
       storeDir: String, deleted: DataFrame, spec: Spec,
       batchId: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.of(storeDir, spark)
     val intent = new org.apache.hadoop.fs.Path(
       retractIntentDir(storeDir, batchId))
     if (!fs.exists(intent)) {
@@ -411,8 +406,7 @@ object Rollup {
     * WITHOUT the rebuild exists for subtractable specs — [[retract]]. */
   def invalidate(spark: SparkSession, storeDir: String): Unit =
     MaintenanceLock.withLock(storeDir) {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
+      val fs = Fs.of(storeDir, spark)
       fs.delete(new org.apache.hadoop.fs.Path(storeDir), true)
       ()
     }
@@ -420,8 +414,7 @@ object Rollup {
   /** Does a store live at `storeDir` (healing a crashed swap first)? */
   def exists(spark: SparkSession, storeDir: String): Boolean = {
     SafeSwap.recover(storeDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
+    val fs = Fs.of(storeDir, spark)
     fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/partials"))
   }
 
@@ -796,9 +789,7 @@ object Rollup {
       // contract) — emulated exactly: plant the legacy marker, observe
       // the refusal, rebuild from the full snapshot
       locally {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(curStore),
-          s.sparkContext.hadoopConfiguration)
+        val fs = Fs.of(curStore, s)
         val os = fs.create(
           new org.apache.hadoop.fs.Path(curStore, "_hist_scale"), true)
         try os.write("1".getBytes("UTF-8")) finally os.close()

@@ -1,8 +1,6 @@
 package graft.pipeline
 
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Crash-safe directory replacement shared by the copy-on-write layers
   * (merge upsert, compaction): write the new content to a temp dir, rename
@@ -14,13 +12,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * ordering plain rename gives, and the one that minimizes the loss
   * window. */
 object SafeSwap {
-
-  // via Path#getFileSystem, NOT FileSystem.get(new URI(path), …): a raw
-  // path can hold characters illegal in a URI (a Hive partition value
-  // with a space, 'priority=4-NOT SPECIFIED'), which the strict
-  // single-arg URI parser rejects; Path's constructor quotes them
-  private def fsFor(path: String): FileSystem =
-    new Path(path).getFileSystem(new Configuration())
 
   /** Temp/aside names are DOT-PREFIXED siblings: when the swapped dir is
     * itself a Hive partition directory (`root/day=1`), a visible sibling
@@ -42,7 +33,7 @@ object SafeSwap {
     * dataset is the last complete state — restore it. Returns true if a
     * recovery ran. */
   def recover(path: String): Boolean = {
-    val fs = fsFor(path)
+    val fs = Fs.of(path)
     val dst = new Path(path)
     val old = new Path(oldPath(path))
     if (!fs.exists(dst) && fs.exists(old)) fs.rename(old, dst)
@@ -55,7 +46,7 @@ object SafeSwap {
     * degrades to write + rename-in. */
   def replace(path: String)(write: String => Unit): Unit = {
     recover(path)
-    val fs = fsFor(path)
+    val fs = Fs.of(path)
     val dst = new Path(path)
     val tmp = new Path(tmpPath(path))
     val old = new Path(oldPath(path))

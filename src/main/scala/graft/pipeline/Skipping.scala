@@ -55,9 +55,6 @@ object Skipping {
     * data files' stats, or nothing (listing unchanged). */
   final case class Refresh(rebuilt: Boolean, appended: Int)
 
-  private def fsFor(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def canon(s: String) = new Path(s).toUri.getPath
 
   /** Read a stats tree through its EXPLICIT data-file list: passing the
@@ -67,7 +64,7 @@ object Skipping {
     * empty-path error if no stats files exist (callers guard
     * existence). */
   private def statsDf(spark: SparkSession, statsDir: String): DataFrame = {
-    val fs = fsFor(spark, statsDir)
+    val fs = Fs.of(statsDir, spark)
     val files = fs.listStatus(new Path(statsDir)).toSeq.filter { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
@@ -77,7 +74,7 @@ object Skipping {
 
   private def listDataFiles(spark: SparkSession, tableDir: String)
       : Seq[String] = {
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     def walk(p: Path): Seq[String] =
       fs.listStatus(p).toSeq.flatMap { st =>
         val n = st.getPath.getName
@@ -221,7 +218,7 @@ object Skipping {
     * still rebuilds. */
   private def refreshGeneric(spark: SparkSession, tableDir: String,
       statsDir: String, rows: Seq[String] => DataFrame): Refresh = {
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     val live = listDataFiles(spark, tableDir)
     if (live.isEmpty) {
       // an emptied table (total stale-delete) drops its stats outright;
@@ -269,7 +266,7 @@ object Skipping {
     * replay suppression, not content; same carry as the MinHash index
     * compaction). Run on the maintenance cadence; single writer. */
   private def compactGeneric(spark: SparkSession, statsDir: String): Unit = {
-    val fs = fsFor(spark, statsDir)
+    val fs = Fs.of(statsDir, spark)
     if (!fs.exists(new Path(statsDir))) return
     AppendCommit.compactLedger(statsDir)
     val rows = statsDf(spark, statsDir)
@@ -283,11 +280,6 @@ object Skipping {
   /** Compact the min/max stats tree for `tableDir`. */
   def compactStats(spark: SparkSession, tableDir: String): Unit =
     compactGeneric(spark, s"$tableDir/$StatsDir")
-
-  /** Compact the bloom stats tree for column `c` of `tableDir`. */
-  def compactBloom(spark: SparkSession, tableDir: String,
-      c: String): Unit =
-    compactGeneric(spark, s"$tableDir/${bloomDir(c)}")
 
   // --- min/max stats -----------------------------------------------------
 
@@ -355,7 +347,7 @@ object Skipping {
   private[graft] def pruneListing(spark: SparkSession, tableDir: String,
       c: String, lo: Any, hi: Any, listing: Seq[String])
       : Option[Seq[String]] = {
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     val statsDir = s"$tableDir/$StatsDir"
     if (!fs.exists(new Path(statsDir))) return None
     val stats = statsDf(spark, statsDir)
@@ -438,7 +430,7 @@ object Skipping {
   private[graft] def pruneListingEq(spark: SparkSession, tableDir: String,
       c: String, values: Seq[Any], listing: Seq[String])
       : Option[Seq[String]] = {
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     if (values.isEmpty ||
       !fs.exists(new Path(s"$tableDir/${bloomDir(c)}"))) return None
     val hashes = typedProbeHashes(spark, tableDir, c, values) match {
@@ -508,14 +500,6 @@ object Skipping {
       listDataFiles(spark, tableDir),
       bloomRowsFor(spark, tableDir, c, _, expectedItemsPerFile))
 
-  /** O(batch) bloom append for `newFiles` (full table paths/URIs). */
-  def appendBloom(spark: SparkSession, tableDir: String, c: String,
-      newFiles: Seq[String], expectedItemsPerFile: Long = 0L): Boolean = {
-    require(newFiles.nonEmpty, "need at least one new file")
-    appendBatchRows(spark, s"$tableDir/${bloomDir(c)}", newFiles,
-      bloomRowsFor(spark, tableDir, c, _, expectedItemsPerFile))
-  }
-
   /** Converge the bloom stats with the live listing — O(new files) on
     * an append-only table; rebuild on deletion. */
   def refreshBloom(spark: SparkSession, tableDir: String, c: String,
@@ -535,7 +519,7 @@ object Skipping {
     * tree costs O(its stats) + O(new files); absent trees cost one
     * exists(). */
   def refreshAllTrees(spark: SparkSession, tableDir: String): Unit = {
-    val fs = fsFor(spark, tableDir)
+    val fs = Fs.of(tableDir, spark)
     val statsDir = s"$tableDir/$StatsDir"
     if (fs.exists(new Path(statsDir))) {
       val cols = statsDf(spark, statsDir).columns.toSeq

@@ -1,10 +1,8 @@
 package graft.pipeline
 
 import java.io.{BufferedInputStream, BufferedOutputStream}
-import java.net.URI
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -78,7 +76,7 @@ object Sync {
     * prefix (relative to `warehouseDir`). */
   def listState(spark: SparkSession, warehouseDir: String): Dataset[String] = {
     import spark.implicits._
-    val fs = FileSystem.get(new URI(warehouseDir), new Configuration())
+    val fs = Fs.of(warehouseDir)
     val root = new Path(s"$warehouseDir/$RawPrefix")
     val keys =
       if (!fs.exists(root)) Seq.empty[String]
@@ -139,8 +137,7 @@ object Sync {
     } else {
       toFetch.repartition(parallelism).foreachPartition {
         (it: Iterator[FetchTask]) =>
-          val conf = new Configuration()
-          val fs = FileSystem.get(new URI(warehouseDir), conf)
+          val fs = Fs.of(warehouseDir)
           val log = org.slf4j.LoggerFactory.getLogger(Sync.getClass)
           it.foreach { task =>
             val target = new Path(s"$warehouseDir/${task.key}")
@@ -199,7 +196,7 @@ object Sync {
     } else {
       val removedAcc = spark.sparkContext.longAccumulator("removed")
       toDelete.foreachPartition { (it: Iterator[String]) =>
-        val fs = FileSystem.get(new URI(warehouseDir), new Configuration())
+        val fs = Fs.of(warehouseDir)
         it.foreach { k =>
           if (fs.delete(new Path(s"$warehouseDir/$k"), false))
             removedAcc.add(1L)

@@ -168,8 +168,7 @@ object Upsert {
       if (!managed) SafeSwap.recover(pdir)
       val slice = updates.filter(col(partitionCol) === lit(pv))
         .drop(partitionCol)
-      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(pdir),
-        spark.sparkContext.hadoopConfiguration)
+      val fs = Fs.of(pdir, spark)
       if (fs.exists(new org.apache.hadoop.fs.Path(pdir))) {
         // partitionBy layout: files under pc=v/ do not carry the column
         val olds = fs.listStatus(new org.apache.hadoop.fs.Path(pdir))

@@ -69,9 +69,7 @@ object Admission {
         // near-dup probe against everything admitted so far (an exact
         // cross-batch duplicate outside the watermark estimates 1.0 —
         // caught here too); first-ever batch has no index yet
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(indexDir),
-          spark.sparkContext.hadoopConfiguration)
+        val fs = graft.pipeline.Fs.of(indexDir, spark)
         val hasIndex = fs.exists(
           new org.apache.hadoop.fs.Path(s"$indexDir/signatures"))
         val admitted =

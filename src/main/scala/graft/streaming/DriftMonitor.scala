@@ -65,8 +65,7 @@ object DriftMonitor {
   private def evidenceOpt(spark: SparkSession, storeDir: String)
       : Option[DataFrame] = {
     val root = evidenceRoot(storeDir)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(root), spark.sparkContext.hadoopConfiguration)
+    val fs = graft.pipeline.Fs.of(root, spark)
     if (!fs.exists(new org.apache.hadoop.fs.Path(root))) None
     else {
       val files = fs.listStatus(new org.apache.hadoop.fs.Path(root))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -11,30 +11,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * custom state via mapGroupsWithState.
   *
   * Every transform takes a DataFrame and works identically on a batch or
-  * streaming input — the batch twins (q23/q24/q25) are the oracle-checked
+  * streaming input — the batch twins (q23/q25) are the oracle-checked
   * semantics, and the streaming spec proves stream/batch agreement.
   *
   * Scale notes: all stateful ops key on high-cardinality columns (window
   * bucket / user_id), so state shards evenly; watermarks bound state size
-  * (late data past 1 hour is dropped); file-source ingestion reuses the
-  * sync layer's immutable-file model (a landed file never changes —
-  * exactly the reference's content-addressed contract).
+  * (late data past 1 hour is dropped).
   */
 object EventStreams {
-
-  /** Continuous ingestion of the events table layout: the streaming analog
-    * of the reference's daily file sync. The layout stores TIMESTAMP(NANOS)
-    * which Spark's vectorized reader rejects — read as int64 nanos and
-    * convert with integer division (see [[graft.Tables]] for why float
-    * division would corrupt epoch-nanos). */
-  def fileStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.readStream
-      .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING")
-      .parquet(dir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-  }
 
   /** Tumbling 1-hour windows with a 1-hour watermark (streaming twin of
     * q23_tumbling). */
@@ -46,14 +30,6 @@ object EventStreams {
         sum(col("value")).as("sum_value"))
       .select(col("window.start").as("bucket_start"), col("event_type"),
         col("n_events"), col("sum_value"))
-
-  /** Sliding 1-hour/30-min windows (streaming twin of q24_sliding). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("bucket_start"), col("n_events"))
 
   /** Native session windows with a 30-minute gap (streaming twin of
     * q25_sessionize). */
