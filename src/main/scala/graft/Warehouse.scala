@@ -1187,7 +1187,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         schema.foreach { t =>
           val spec = cfg.canonicalSpecs
             .getOrElse(t.tableName, Warehouse.CanonicalSpec())
-          val (path, _) = Canonicalize.canonicalizeIncremental(
+          val (path, changed) = Canonicalize.canonicalizeIncremental(
             spark, cfg.warehouseDir, t,
             partitionBy = spec.partitionBy, derive = spec.derive,
             appendable = spec.appendable)
@@ -1215,7 +1215,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
           // catalog-resolve the canonical layer too — otherwise analyst
           // SQL defaults to the slow raw TSV scan (VERDICT r2 missing #1)
           graft.catalog.CatalogSync.registerCanonicalView(
-            spark, cfg.db, t.tableName, path)
+            spark, cfg.db, t.tableName, path, changed)
         }
       if (!cfg.dryRun) {
         maintainStores(schema); maintainViews(schema)
@@ -2169,9 +2169,10 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
 
   /** Shared machinery of the two purge entry points: one batched
     * discovery pass (only the key column extracted per line, only files
-    * truly holding keys enter the rewrite loop — O(scan) once +
-    * O(hit files) rewrites, never O(files) jobs), then the per-file
-    * aside/rename rewrite protocol. */
+    * truly holding keys are rewritten), then ONE rewrite job per codec
+    * for all hit files ([[graft.pipeline.Maintain.writePerSource]]) and
+    * the per-file aside/rename protocol over its outputs — O(scan) +
+    * O(hit files) renames, never a job per file. */
   private def purgeRawTsvImpl(t: CDTable, c: String,
       onlyFiles: Option[Seq[String]],
       restrict: org.apache.spark.sql.DataFrame =>
@@ -2217,30 +2218,48 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         org.apache.spark.sql.functions.lit(1)).as("__hits"))
       // rawFileName decodes input_file_name's URI escaping — a raw
       // decode-less match would silently SKIP every hit inside a
-      // percent-encodable-named file, leaving forget-keyed rows alive
-      .collect().map(r => (rawFileName(r.getString(0)), r.getLong(1)))
+      // percent-encodable-named file, leaving forget-keyed rows alive;
+      // the undecoded string tags the same file's lines in the rewrite
+      .collect().map(r =>
+        rawFileName(r.getString(0)) -> (r.getString(0), r.getLong(1)))
       .toMap
-    var removed = 0L
-    files.filter(hitFiles.contains).foreach { fname =>
-      val f = s"$tableDir/$fname"
-      val df = graft.sources.TsvSource.read(spark, st,
-        s"$tableDir/${graft.sources.TsvSource.globEscape(fname)}")
-      locally {
-        removed += hitFiles(fname)
-        // NULL-keyed rows survive (the deleteByKey three-valued rule)
-        val kept = keep(df)
-        val tmpDir = new org.apache.hadoop.fs.Path(tableDir,
-          s".forget_tmp_$fname")
-        fs.delete(tmpDir, true)
-        // codec must follow the original NAME: the text reader infers
-        // compression from the extension
-        graft.sources.TsvSource.write(kept.coalesce(1), tmpDir.toString,
-          compression = if (fname.endsWith(".gz")) "gzip" else "none")
-        val part = fs.listStatus(tmpDir).map(_.getPath)
-          .find(p => !p.getName.startsWith("_") &&
-            !p.getName.startsWith("."))
-          .getOrElse(throw new java.io.IOException(
-            s"raw purge produced no output for $f"))
+    val hit = files.filter(hitFiles.contains)
+    // the survivors of every hit file in one write job per codec; the
+    // codec must follow the original NAME: the text reader infers
+    // compression from the extension
+    hit.groupBy(_.endsWith(".gz")).foreach { case (gz, names) =>
+      import org.apache.spark.sql.functions.{element_at, input_file_name,
+        monotonically_increasing_id, typedLit}
+      import graft.pipeline.Maintain.{SrcCol, writePerSource}
+      val idx = names.zipWithIndex.map { case (n, i) => hitFiles(n)._1 -> i }
+        .toMap
+      // a line's position in its file: the split it was read from, then
+      // its order within that split (monotone within a task)
+      val lines = spark.read.text(names.map(f => s"$tableDir/${
+          graft.sources.TsvSource.globEscape(f)}"): _*)
+        .select(col("value"),
+          element_at(typedLit(idx), input_file_name()).as(SrcCol),
+          col("_metadata.file_block_start").as("__graft_blk"),
+          monotonically_increasing_id().as("__graft_pos"))
+      val tmp = new org.apache.hadoop.fs.Path(tableDir,
+        s".forget_tmp_batch/${if (gz) "gz" else "plain"}")
+      val order = Seq("__graft_blk", "__graft_pos")
+      val parts = writePerSource(
+          // NULL-keyed rows survive (the deleteByKey three-valued rule)
+          keep(graft.sources.TsvSource.parse(lines, st, SrcCol +: order)),
+          order, names.size, tmp, fs)(w =>
+        graft.sources.TsvSource.writeWith(w, tmp.toString,
+          compression = if (gz) "gzip" else "none"))
+      names.zipWithIndex.foreach { case (fname, i) =>
+        val f = s"$tableDir/$fname"
+        // every line forgotten: the file stays, empty, under its name
+        // (the name-keyed diff must keep skipping it)
+        val part = parts.getOrElse(i, {
+          val p = new org.apache.hadoop.fs.Path(tmp, s"empty_$i")
+          val out = fs.create(p, true)
+          (if (gz) new java.util.zip.GZIPOutputStream(out) else out).close()
+          p
+        })
         val aside = new org.apache.hadoop.fs.Path(tableDir,
           s"$ForgetAside$fname")
         val orig = new org.apache.hadoop.fs.Path(f)
@@ -2251,10 +2270,11 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
           throw new java.io.IOException(s"cannot place purged $f")
         }
         fs.delete(aside, false)
-        fs.delete(tmpDir, true)
       }
     }
-    removed
+    fs.delete(new org.apache.hadoop.fs.Path(tableDir, ".forget_tmp_batch"),
+      true)
+    hit.map(hitFiles(_)._2).sum
   }
 
   private def canonicalDir(table: String): String =

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 import graft.model.{CDTable, TypeLattice}
 
@@ -96,12 +97,18 @@ object CatalogSync {
     * with the canonical view of `x`; the guard below surfaces that as an
     * explicit error naming the colliding object rather than letting
     * CREATE OR REPLACE VIEW shadow it (or fail with whatever analysis
-    * error fires first). */
+    * error fires first).
+    *
+    * `changed = false` (the canonical refresh rewrote nothing) keeps an
+    * existing view whose text already names this location: the replace
+    * would only re-infer the same parquet schema, one Spark job per
+    * table per no-op sync. */
   def registerCanonicalView(spark: SparkSession, db: String, table: String,
-      location: String): Unit = {
+      location: String, changed: Boolean = true): Unit = {
     ensureDatabase(spark, db)
     val viewName = s"${table}_canonical"
     val fq = s"`${qi(db)}`.`${qi(viewName)}`"
+    val text = s"SELECT * FROM parquet.`${qi(location)}`"
     if (spark.catalog.tableExists(fq)) {
       val kind = spark.catalog.getTable(fq).tableType
       require(kind == "VIEW",
@@ -109,9 +116,11 @@ object CatalogSync {
           "with that name already exists (a raw table carrying the " +
           "_canonical suffix) — rename the raw table or the canonical " +
           "layer would shadow it")
+      if (!changed && spark.sessionState.catalog.getTableMetadata(
+          TableIdentifier(viewName, Some(db))).viewText.contains(text))
+        return
     }
-    spark.sql(s"CREATE OR REPLACE VIEW $fq AS " +
-      s"SELECT * FROM parquet.`${qi(location)}`")
+    spark.sql(s"CREATE OR REPLACE VIEW $fq AS $text")
   }
 
   /** SQL-REACHABLE TIME TRAVEL: one view per RETAINED generation of a

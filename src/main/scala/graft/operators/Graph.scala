@@ -152,8 +152,12 @@ object Graph {
       Seq(count(lit(1)).as("n")))
     val n = nRow.getLong(0)
     // all float arithmetic stays engine-side in one expression shape per
-    // term, mirrored verbatim by the SQL oracle
-    val teleport = (lit(1.0) - lit(d)) / lit(n.toDouble)
+    // term, mirrored verbatim by the SQL oracle. `1 − d` is exact decimal
+    // arithmetic there (`1.0 - 0.85` is DECIMAL 0.15, cast to double only
+    // for the division by n), so it is exact here too: the double
+    // subtraction gives 0.15000000000000002 and drifts every rank.
+    val teleport = lit((BigDecimal(1) - BigDecimal(d)).toDouble) /
+      lit(n.toDouble)
     var ranks = nodes.select(col("node"),
       (lit(1.0) / lit(n.toDouble)).as("rank"))
     for (_ <- 1 to iters) {

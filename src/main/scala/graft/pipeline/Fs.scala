@@ -9,11 +9,30 @@ import org.apache.spark.sql.SparkSession
   * path can hold characters illegal in a URI — a space in a warehouse
   * dir, a Hive partition value such as `priority=4-NOT SPECIFIED` —
   * which the strict single-argument URI parser rejects; Path's
-  * constructor quotes them. */
+  * constructor quotes them.
+  *
+  * The configuration is the session's `sparkContext.hadoopConfiguration`,
+  * never a fresh `Configuration`: a fresh one re-parses the default
+  * resources on first use (the top driver frame of a traced sync, once
+  * per call), and it misses every `spark.hadoop.*` setting — a custom
+  * `fs.<scheme>.impl`, credentials, committer knobs — so the commit
+  * protocols would open a different filesystem than Spark's own reads
+  * and writes. Executor closures carry the driver's conf in a
+  * `SerializableConfiguration` and call the `Configuration` overload. */
 object Fs {
-  def of(path: String): FileSystem =
-    new Path(path).getFileSystem(new Configuration())
+  def of(path: String): FileSystem = of(path, sessionConf)
 
   def of(path: String, spark: SparkSession): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    of(path, spark.sparkContext.hadoopConfiguration)
+
+  def of(path: String, conf: Configuration): FileSystem =
+    new Path(path).getFileSystem(conf)
+
+  /** The active (else default) session's Hadoop conf; a bare
+    * `Configuration` only where no session exists at all (executor
+    * threads report none — they must pass the driver's conf). */
+  private def sessionConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration())
 }

@@ -205,26 +205,110 @@ object Maintain {
       df(c) === col("__graft_k"), "left_anti")
   }
 
-  /** The surviving rows of one file, in the file's OWN physical schema.
-    * The filter must see hive-partition columns (the delete key may be
-    * one, and `dropKeys` resolves by name over the basePath read), but
-    * the REWRITE must not embed them: a rewritten file carrying the
-    * partition column as data while its siblings encode it only in the
-    * directory name splits the tree's schema — partition-scoped
-    * unions/merges over it start failing, and every reader now depends
-    * on Spark's data-over-partition column preference. One footer read
-    * recovers the physical column list. */
-  private def rewriteKeep(spark: SparkSession, tableDir: String,
-      f: String,
-      dropKeys: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** Source-index column of [[writePerSource]]'s input (an Int). */
+  private[graft] val SrcCol = "__graft_src"
+
+  /** ONE write job for many per-file rewrites. `rows` carries each
+    * surviving row's source index in [[SrcCol]] and its position within
+    * that source in the `order` columns; every source's rows land, in source
+    * order, in exactly one file under `tmp/<SrcCol>=i/`: hash-repartition
+    * by source (a source never spans two tasks), sort within partitions
+    * by (source, order) — which also satisfies the partitioned writer's
+    * required ordering, so it adds no sort of its own — and
+    * `partitionBy` the source on write. The source index and the order
+    * columns never reach the data. Returns the part file per source
+    * index that kept at least one row. The caller then publishes each
+    * part under its own per-file protocol; `tmp` is a hidden dir the
+    * caller's crash recovery already clears. */
+  private[graft] def writePerSource(rows: org.apache.spark.sql.DataFrame,
+      order: Seq[String], nSources: Int, tmp: Path, fs: FileSystem)(
+      save: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
+        Unit): Map[Int, Path] = {
     import org.apache.spark.sql.functions.col
-    val physCols = spark.read.parquet(f).schema.fieldNames
-    dropKeys(spark.read.option("basePath", tableDir).parquet(f))
-      .select(physCols.map(col).toIndexedSeq: _*)
+    fs.delete(tmp, true) // a crashed attempt's leftover
+    save(rows.repartition(math.max(1, nSources), col(SrcCol))
+      .sortWithinPartitions((SrcCol +: order).map(col): _*)
+      .drop(order: _*)
+      .write.partitionBy(SrcCol).mode("overwrite"))
+    def visible(p: Path) =
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    fs.listStatus(tmp).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith(s"$SrcCol=")).flatMap { dir =>
+        val i = dir.getName.stripPrefix(s"$SrcCol=").toIntOption
+          .getOrElse(throw new java.io.IOException(
+            s"rewrite rows without a source index under $tmp"))
+        fs.listStatus(dir).map(_.getPath).find(visible).map(i -> _)
+      }.toMap
+  }
+
+  /** Each parquet file's Spark schema from its footer, read on the
+    * driver — the schema Spark's own inference settles on (the Spark
+    * row schema the writer embedded, else the converted parquet
+    * schema), without the inference job a `spark.read.parquet(f)`
+    * launches per call. */
+  private def footerSchemas(spark: SparkSession, files: Seq[String])
+      : Map[String, org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter
+    import org.apache.spark.sql.types.{DataType, StructType}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    files.map { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
+      val meta = try reader.getFooter.getFileMetaData finally reader.close()
+      f -> Option(meta.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+        .collect { case st: StructType => st }
+        .getOrElse(converter.convert(meta.getSchema))
+    }.toMap
+  }
+
+  /** The surviving rows of every partially-hit parquet file, each in the
+    * file's OWN physical schema, written by one job per distinct schema
+    * ([[writePerSource]]). The filter must see hive-partition columns
+    * (the delete key may be one, and `dropKeys` resolves by name over
+    * the basePath read), but the REWRITE must not embed them: a
+    * rewritten file carrying the partition column as data while its
+    * siblings encode it only in the directory name splits the tree's
+    * schema — partition-scoped unions/merges over it start failing, and
+    * every reader now depends on Spark's data-over-partition column
+    * preference. The physical schemas come from the footers, read on the
+    * driver (no inference job per file), and are handed to the reads, so
+    * files of different schema versions never share a write. Returns the
+    * part file written for each input file. */
+  private def rewriteSurvivors(spark: SparkSession, tableDir: String,
+      fs: FileSystem, files: Seq[String],
+      dropKeys: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Map[String, Path] = {
+    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    if (files.isEmpty) return Map.empty
+    val schemaOf = footerSchemas(spark, files)
+    files.groupBy(schemaOf).toSeq.zipWithIndex.flatMap {
+      case ((schema, group), g) =>
+        val idx = group.zipWithIndex.toMap
+        val rows = dropKeys(spark.read.schema(schema)
+            .option("basePath", tableDir).parquet(group: _*)
+            .select(col("*"), col("_metadata.file_path").as("__graft_path"),
+              col("_metadata.row_index").as("__graft_row")))
+          .select(schema.fieldNames.map(col).toIndexedSeq :+
+            element_at(typedLit(idx), col("__graft_path")).as(SrcCol) :+
+            col("__graft_row"): _*)
+        val tmp = new Path(tableDir, s"$DelTmpBatch/g$g")
+        writePerSource(rows, Seq("__graft_row"), group.size, tmp, fs)(
+            _.parquet(tmp.toString))
+          .map { case (i, part) => group(i) -> part }
+      }.toMap
   }
 
   private val DelAside = ".del_aside_"
+
+  /** [[rewriteSurvivors]]' hidden staging dir; [[recoverDeletes]] clears
+    * it with every other `.del_tmp_` leftover. */
+  private val DelTmpBatch = ".del_tmp_batch"
 
   private def delDest(orig: Path): Path =
     new Path(orig.getParent, s"del_${orig.getName}")
@@ -395,73 +479,48 @@ object Maintain {
       hitRows: Seq[(String, Long, Long)],
       dropKeys: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): DeleteSummary = {
-    var rewritten = 0; var dropped = 0; var deleted = 0L
+    val deleted = hitRows.map(_._3).sum
+    // nothing survives in a fully-hit file: it is dropped, not rewritten
+    val (goneRows, partialRows) =
+      hitRows.partition { case (_, n, hits) => hits == n }
+    val gone = goneRows.map(_._1); val partial = partialRows.map(_._1)
+    val parts = rewriteSurvivors(spark, tableDir, fs, partial, dropKeys)
+    def part(f: String) = parts.getOrElse(f, throw new java.io.IOException(
+      s"delete rewrite produced no data file for $f"))
     // manifest mode: (relative orig, relative replacement or None)
-    val swaps = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Option[String])]
-    hitRows.foreach { case (f, total, hits) =>
+    val swaps: Seq[(String, Option[String])] =
       if (managed) {
-        deleted += hits
-        val fp = new Path(f)
-        val rel = Manifest.relativize(tableDir, f)
-        if (hits == total) {
-          // nothing survives: the commit below drops it from the
-          // manifest; the file itself deletes AFTER the commit
-          swaps += ((rel, None))
-          dropped += 1
-        } else {
-          val keep = rewriteKeep(spark, tableDir, f, dropKeys)
-          val tmpDir = new Path(fp.getParent,
-            s".del_tmp_${fp.getName}").toString
-          fs.delete(new Path(tmpDir), true)
-          keep.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-          val part = fs.listStatus(new Path(tmpDir)).map(_.getPath)
-            .find(p => !p.getName.startsWith("_") &&
-              !p.getName.startsWith("."))
-            .getOrElse(throw new java.io.IOException(
-              s"delete rewrite produced no data file for $f"))
-          val dest = delDest(fp)
-          fs.delete(dest, false) // uncommitted leftover (post-recover
-          // this only exists if recover itself raced; defensive)
-          if (!fs.rename(part, dest))
-            throw new java.io.IOException(s"delete: cannot place $dest")
-          fs.delete(new Path(tmpDir), true)
-          swaps += ((rel, Some(Manifest.relativize(tableDir,
-            dest.toString))))
-          rewritten += 1
-        }
+        // the commit below drops a fully-hit file from the manifest; the
+        // file itself deletes AFTER the commit
+        gone.map(f => (Manifest.relativize(tableDir, f), None)) ++
+          partial.map { f =>
+            val dest = delDest(new Path(f))
+            fs.delete(dest, false) // uncommitted leftover (post-recover
+            // this only exists if recover itself raced; defensive)
+            if (!fs.rename(part(f), dest))
+              throw new java.io.IOException(s"delete: cannot place $dest")
+            (Manifest.relativize(tableDir, f),
+              Some(Manifest.relativize(tableDir, dest.toString)))
+          }
       } else {
-        deleted += hits
-        val fp = new Path(f)
-        if (hits == total) {
-          fs.delete(fp, false) // nothing survives — drop the file
-          dropped += 1
-        } else {
-          val keep = rewriteKeep(spark, tableDir, f, dropKeys)
-          val tmpDir = new Path(fp.getParent,
-            s".del_tmp_${fp.getName}").toString
-          fs.delete(new Path(tmpDir), true) // crashed-attempt leftover
-          keep.coalesce(1).write.mode("overwrite").parquet(tmpDir)
-          val part = fs.listStatus(new Path(tmpDir)).map(_.getPath)
-            .find(p => !p.getName.startsWith("_") &&
-              !p.getName.startsWith("."))
-            .getOrElse(throw new java.io.IOException(
-              s"delete rewrite produced no data file for $f"))
+        gone.foreach(f => fs.delete(new Path(f), false))
+        partial.foreach { f =>
+          val fp = new Path(f)
           val aside = new Path(fp.getParent, s"$DelAside${fp.getName}")
           val dest = delDest(fp)
           fs.delete(dest, false) // leftover of a crashed attempt
           if (!fs.rename(fp, aside))
             throw new java.io.IOException(s"delete: cannot set $fp aside")
-          if (!fs.rename(part, dest)) {
+          if (!fs.rename(part(f), dest)) {
             fs.rename(aside, fp) // restore the last complete state
             throw new java.io.IOException(s"delete: cannot place $dest")
           }
           fs.delete(aside, false)
-          fs.delete(new Path(tmpDir), true)
-          rewritten += 1
         }
+        Nil
       }
-    }
+    fs.delete(new Path(tableDir, DelTmpBatch), true)
+    val rewritten = partial.size; val dropped = gone.size
     if (managed && swaps.nonEmpty) {
       // THE commit point: one atomic generation swap replaces every
       // touched original with its rewrite (or drops it) and folds in

@@ -605,8 +605,9 @@ object Rollup {
     ids.toDF("batch_id").coalesce(1).write.parquet(s"$dir/applied")
   }
 
+  /** The ledger's one column is known: no schema-inference job. */
   private def readApplied(spark: SparkSession, dir: String): Seq[String] =
-    spark.read.parquet(s"$dir/applied")
+    spark.read.schema("batch_id STRING").parquet(s"$dir/applied")
       .collect().map(_.getString(0)).toSeq
 
   // ---------------------------------------------------------------------

@@ -3,9 +3,8 @@ package graft.pipeline
 import java.io.{BufferedInputStream, BufferedOutputStream}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 import graft.catalog.CatalogSync
 import graft.model.CDTable
@@ -14,17 +13,21 @@ import graft.model.CDTable
   * reference's orchestrator (`sync-canvas-data-files.py:12-147`):
   *
   *   state scan (A1) → manifest scan (A2) → key projection (A3) →
-  *   anti-join toFetch (A4) / toDelete (A5) + skip counting (A6) →
+  *   diff toFetch (A4) / toDelete (A5) + skip counting (A6) →
   *   parallel fetch fan-out (A7, Spark tasks replace Lambda invocations)
   *   with idempotency guard (A14) and bounded-memory streaming copy (A15) →
   *   stale delete (A9) → catalog upsert (A10-A12) → summary (A13),
   *   all behind a dry-run gate (A16).
   *
-  * Where the reference mutates a Python list in an O(n²) membership loop
-  * (`:62-67`), the diff here is two real `left_anti` joins — at 100 TB the
-  * manifest/state sets are themselves large datasets, and an anti-join
-  * shuffles them once on the key instead of scanning state per manifest
-  * entry.
+  * Both sides of the diff are driver collections by construction: the
+  * manifest arrives as a `Seq` (the reference's one API response) and
+  * the state scan is one recursive listing into a driver buffer. The
+  * diff is therefore two hash-set lookups per key — O(files), no Spark
+  * job — where the reference mutates a Python list in an O(n²)
+  * membership loop (`:62-67`). The cardinality is the FILE count, not
+  * rows; Spark enters only where the work is per-file I/O: the fetch
+  * and stale-delete fan-outs, each launched only when it has work, so a
+  * no-op sync runs no diff or fan-out job at all.
   *
   * The reference's time-budget continuation (A8, `:88-98`) has no Spark
   * analog — jobs aren't time-capped — but its *real* invariant survives:
@@ -40,9 +43,9 @@ object Sync {
 
   /** Diff of manifest vs warehouse state (A4/A5/A6). */
   final case class SyncPlan(
-      toFetch: Dataset[FetchTask],
-      toSkip: Dataset[String],
-      toDelete: Dataset[String])
+      toFetch: Seq[FetchTask],
+      toSkip: Seq[String],
+      toDelete: Seq[String])
 
   /** What the fetch fan-out ships to a worker — the analog of the Lambda
     * event payload `{file_url, s3_bucket, key}` (`:72-76`). */
@@ -74,47 +77,35 @@ object Sync {
 
   /** A1 — state scan: enumerate existing warehouse keys under the raw
     * prefix (relative to `warehouseDir`). */
-  def listState(spark: SparkSession, warehouseDir: String): Dataset[String] = {
-    import spark.implicits._
-    val fs = Fs.of(warehouseDir)
+  def listState(spark: SparkSession, warehouseDir: String): Seq[String] = {
+    val fs = Fs.of(warehouseDir, spark)
     val root = new Path(s"$warehouseDir/$RawPrefix")
-    val keys =
-      if (!fs.exists(root)) Seq.empty[String]
-      else {
-        val it = fs.listFiles(root, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.isFile) {
-            val full = st.getPath.toUri.getPath
-            val rootPath = new Path(warehouseDir).toUri.getPath
-            buf += full.stripPrefix(rootPath).stripPrefix("/")
-          }
-        }
-        buf.toSeq
+    if (!fs.exists(root)) Seq.empty
+    else {
+      val rootPath = new Path(warehouseDir).toUri.getPath
+      val it = fs.listFiles(root, true)
+      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile)
+          buf += st.getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/")
       }
-    keys.toDS()
+      buf.toSeq
+    }
   }
 
   /** A3 — key projection: manifest entry → storage key
     * `raw_files/{table}/{filename}` (`:60`). */
   def keyOf(e: ManifestEntry): String = s"$RawPrefix/${e.table}/${e.filename}"
 
-  /** A4/A5/A6 — the diff: two anti-joins over the key sets. */
-  def plan(spark: SparkSession, manifest: Dataset[ManifestEntry],
-      state: Dataset[String]): SyncPlan = {
-    import spark.implicits._
-    val m = manifest
-      .withColumn("key", concat(lit(RawPrefix + "/"), col("table"),
-        lit("/"), col("filename")))
-    val st = state.toDF("key")
-    val toFetch = m.join(st, Seq("key"), "left_anti")
-      .select(col("key"), col("url")).as[FetchTask]
-    val toSkip = m.join(st, Seq("key"), "left_semi")
-      .select(col("key")).as[String]
-    val toDelete = st.join(m, Seq("key"), "left_anti")
-      .select(col("key")).as[String]
-    SyncPlan(toFetch, toSkip, toDelete)
+  /** A4/A5/A6 — the diff: set membership over the two key lists
+    * (manifest order and multiplicity kept, as a semi/anti join would). */
+  def plan(manifest: Seq[ManifestEntry], state: Seq[String]): SyncPlan = {
+    val have = state.toSet
+    val (skip, fetch) = manifest.partition(e => have(keyOf(e)))
+    val want = manifest.iterator.map(keyOf).toSet
+    SyncPlan(fetch.map(e => FetchTask(keyOf(e), e.url)), skip.map(keyOf),
+      state.filterNot(want))
   }
 
   /** A7 + A14 + A15 — parallel fetch: one Spark task partition per batch of
@@ -124,20 +115,24 @@ object Sync {
     * 8 MiB chunks so executor memory stays bounded no matter the file size.
     */
   def fetchAll(spark: SparkSession, warehouseDir: String,
-      toFetch: Dataset[FetchTask], parallelism: Int = 32,
+      toFetch: Seq[FetchTask], parallelism: Int = 32,
       dryRun: Boolean = false): FetchResult = {
-    val fetchedAcc: LongAccumulator =
-      spark.sparkContext.longAccumulator("fetched")
-    val failedAcc =
-      spark.sparkContext.collectionAccumulator[String]("failedKeys")
     if (dryRun) {
-      toFetch.collect().foreach(t =>
+      toFetch.foreach(t =>
         println(s"[dry-run] would fetch ${t.url} -> ${t.key}"))
       FetchResult(0L, Seq.empty)
-    } else {
-      toFetch.repartition(parallelism).foreachPartition {
+    } else if (toFetch.isEmpty) FetchResult(0L, Seq.empty)
+    else {
+      val fetchedAcc: LongAccumulator =
+        spark.sparkContext.longAccumulator("fetched")
+      val failedAcc =
+        spark.sparkContext.collectionAccumulator[String]("failedKeys")
+      val conf = new SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(toFetch,
+          math.max(1, math.min(parallelism, toFetch.size))).foreachPartition {
         (it: Iterator[FetchTask]) =>
-          val fs = Fs.of(warehouseDir)
+          val fs = Fs.of(warehouseDir, conf.value)
           val log = org.slf4j.LoggerFactory.getLogger(Sync.getClass)
           it.foreach { task =>
             val target = new Path(s"$warehouseDir/${task.key}")
@@ -186,21 +181,27 @@ object Sync {
   }
 
   /** A9 — stale delete: state keys no longer in the manifest, deleted
-    * task-parallel (a daily manifest is small, but the 100 TB framing says
-    * never collect an unbounded key list to the driver). */
+    * task-parallel (one object-store delete per key); no job when there
+    * is nothing to delete. */
   def deleteStale(spark: SparkSession, warehouseDir: String,
-      toDelete: Dataset[String], dryRun: Boolean = false): Long = {
+      toDelete: Seq[String], dryRun: Boolean = false,
+      parallelism: Int = 32): Long = {
     if (dryRun) {
-      toDelete.collect().foreach(k => println(s"[dry-run] would delete $k"))
+      toDelete.foreach(k => println(s"[dry-run] would delete $k"))
       0L
-    } else {
+    } else if (toDelete.isEmpty) 0L
+    else {
       val removedAcc = spark.sparkContext.longAccumulator("removed")
-      toDelete.foreachPartition { (it: Iterator[String]) =>
-        val fs = Fs.of(warehouseDir)
-        it.foreach { k =>
-          if (fs.delete(new Path(s"$warehouseDir/$k"), false))
-            removedAcc.add(1L)
-        }
+      val conf = new SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration)
+      spark.sparkContext.parallelize(toDelete,
+          math.max(1, math.min(parallelism, toDelete.size))).foreachPartition {
+        (it: Iterator[String]) =>
+          val fs = Fs.of(warehouseDir, conf.value)
+          it.foreach { k =>
+            if (fs.delete(new Path(s"$warehouseDir/$k"), false))
+              removedAcc.add(1L)
+          }
       }
       removedAcc.value
     }
@@ -217,26 +218,22 @@ object Sync {
       dryRun: Boolean = false,
       parallelism: Int = 32,
       suppressedKeys: Set[String] = Set.empty): SyncSummary = {
-    import spark.implicits._
     // suppressed keys (age-RETIRED raw files the upstream manifest
     // still lists — [[graft.Warehouse.retireRawOlderThan]]'s ledger)
     // leave the manifest BEFORE the diff: their bytes were reclaimed
     // deliberately, so their absence from state must read as "skip",
-    // never "fetch" — the anti-join would otherwise resurrect every
+    // never "fetch" — the diff would otherwise resurrect every
     // retired file on the next sync forever. Bounded by file COUNT
     // (the same cardinality as the manifest itself, already a driver
     // Seq), not rows.
     val live = manifest.filterNot(e => suppressedKeys(keyOf(e)))
     val suppressed = (manifest.size - live.size).toLong
-    val manifestDs = live.toDS()
-    val state = listState(spark, warehouseDir)
-    val p = plan(spark, manifestDs, state)
-
-    val toFetchCount = p.toFetch.count()
-    val skipped = p.toSkip.count() + suppressed
+    val p = plan(live, listState(spark, warehouseDir))
+    val skipped = p.toSkip.size.toLong + suppressed
 
     val fetch = fetchAll(spark, warehouseDir, p.toFetch, parallelism, dryRun)
-    val removed = deleteStale(spark, warehouseDir, p.toDelete, dryRun)
+    val removed =
+      deleteStale(spark, warehouseDir, p.toDelete, dryRun, parallelism)
 
     var created = 0L
     var updated = 0L
@@ -251,7 +248,7 @@ object Sync {
     }
     SyncSummary(
       totalFiles = manifest.size.toLong,
-      fetched = if (dryRun) toFetchCount else fetch.fetched,
+      fetched = if (dryRun) p.toFetch.size.toLong else fetch.fetched,
       skipped = skipped,
       removed = removed,
       tablesCreated = created,

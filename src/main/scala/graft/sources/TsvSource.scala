@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** LazySimpleSerDe-compatible gzip TSV source/sink — the reference's one
@@ -45,12 +45,15 @@ object TsvSource {
     *    the new DDL without error and so must this scan
     *    (`try_element_at`: out-of-bounds → NULL even under ANSI mode,
     *    where plain `element_at` throws).
+    * `carry` names columns of `raw` that pass through after the parsed
+    * ones (the batched raw purge tags each line with its source file).
     */
-  def parse(raw: DataFrame, schema: StructType): DataFrame = {
+  def parse(raw: DataFrame, schema: StructType,
+      carry: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.functions._
     val parts = split(col("value"), "\t", -1)
     val tmp = raw.select(schema.fields.indices.map(i =>
-      try_element_at(parts, lit(i + 1)).as(s"_c$i")): _*)
+      try_element_at(parts, lit(i + 1)).as(s"_c$i")) ++ carry.map(col): _*)
     val cols = schema.fields.zipWithIndex.map { case (f, i) =>
       val c = f.dataType match {
         case org.apache.spark.sql.types.StringType =>
@@ -60,7 +63,7 @@ object TsvSource {
       }
       c.as(f.name)
     }
-    tmp.select(cols: _*)
+    tmp.select(cols.toSeq ++ carry.map(col): _*)
   }
 
   /** Escape Hadoop glob metacharacters in a path: `DataFrameReader`
@@ -95,7 +98,12 @@ object TsvSource {
     * garbage. */
   def write(df: DataFrame, path: String,
       compression: String = "gzip"): Unit =
-    df.write
+    writeWith(df.write, path, compression)
+
+  /** [[write]] through a caller-shaped writer (a partitioned one). */
+  def writeWith(w: DataFrameWriter[Row], path: String,
+      compression: String): Unit =
+    w
       .options(Map(
         "sep" -> "\t",
         "nullValue" -> "\\N",

@@ -52,7 +52,8 @@ class GraphSpec extends SparkSpec {
     // directed a -> b with no out-edge from b: b never contributes
     val r = Graph.pageRank(edges(("a", "b")), 2, 0.85)
       .as[(String, Double)].collect().toMap
-    val tp = (1.0 - 0.85) / 2.0
+    // 1 − d is exact decimal arithmetic, as in the SQL oracle: 0.15 / 2
+    val tp = 0.15 / 2.0
     assert(r("a") === tp) // nothing points at a after iteration 1
   }
 

@@ -59,12 +59,11 @@ class FetchHttpSpec extends SparkSpec {
     withServer(Map("/files/ok.tsv" -> "1\n".getBytes("UTF-8"))) { port =>
       val wh = Files.createTempDirectory("http_wh2").toUri.toString
         .stripSuffix("/")
-      import spark.implicits._
       val tasks = Seq(
         FetchTask("raw_files/t/missing.tsv",
           s"http://127.0.0.1:$port/files/missing.tsv"),
         FetchTask("raw_files/t/ok.tsv",
-          s"http://127.0.0.1:$port/files/ok.tsv")).toDS()
+          s"http://127.0.0.1:$port/files/ok.tsv"))
       val res = Sync.fetchAll(spark, wh, tasks, parallelism = 1)
       // the failure is isolated and reported, not thrown
       assert(res.failedKeys == Seq("raw_files/t/missing.tsv"))

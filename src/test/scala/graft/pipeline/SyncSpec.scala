@@ -85,13 +85,12 @@ class SyncSpec extends SparkSpec {
     val s = Sync.run(spark, wh, manifest, sch, db = "cd_dry", dryRun = true,
       parallelism = 2)
     assert(s.dryRun)
-    assert(Sync.listState(spark, wh).count() == 0)
+    assert(Sync.listState(spark, wh).size == 0)
     assert(!spark.catalog.databaseExists("cd_dry") ||
       spark.catalog.listTables("cd_dry").count() == 0)
   }
 
   test("diff properties: fetch ∪ skip = manifest, delete = state ∖ manifest") {
-    import spark.implicits._
     val keyGen = Gen.listOf(Gen.choose(0, 30).map(i => s"t/f$i"))
     val prop = Prop.forAll(keyGen, keyGen) {
       (manifestKeys: List[String], stateKeys: List[String]) =>
@@ -100,16 +99,16 @@ class SyncSpec extends SparkSpec {
           ManifestEntry(t, f, s"file:///dev/null/$k")
         }
         val state = stateKeys.distinct.map(k => s"${Sync.RawPrefix}/$k")
-        val p = Sync.plan(spark, manifest.toDS(), state.toDS())
-        val fetch = p.toFetch.collect().map(_.key).toSet
-        val skip = p.toSkip.collect().toSet
-        val delete = p.toDelete.collect().toSet
+        val p = Sync.plan(manifest, state)
+        val fetch = p.toFetch.map(_.key).toSet
+        val skip = p.toSkip.toSet
+        val delete = p.toDelete.toSet
         val mKeys = manifest.map(Sync.keyOf).toSet
         (fetch ++ skip) == mKeys &&
           fetch.intersect(skip).isEmpty &&
           delete == (state.toSet -- mKeys)
     }
-    // each trial runs 3 tiny Spark jobs — keep the count modest
+    // the diff is a driver-side set lookup (no Spark job per trial)
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
     assert(res.passed, res.status.toString)
