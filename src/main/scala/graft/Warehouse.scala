@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.CDTable
-import graft.pipeline.{Canonicalize, Fs, Sync}
+import graft.pipeline.{Canonicalize, Fs, PersistedStore, Sync}
 
 /** The user-facing facade: what a reference deployment migrates to.
   *
@@ -1219,8 +1219,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         }
       if (!cfg.dryRun) {
         maintainStores(schema); maintainViews(schema)
-        maintainIndexes(schema); maintainVectorIndexes(schema)
-        maintainPacks(schema)
+        maintainPersisted(schema)
         maintainSkipping(); maintainManifests()
         // retention watermarks re-apply LAST (manifests are current):
         // late-arriving old rows the canonicalize step just appended,
@@ -1427,26 +1426,16 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   private def validateStoreMappings(t: CDTable, c: String): Unit = {
     val st = graft.model.TypeLattice.toStructType(t)
     val tn = t.tableName
-    (cfg.maintainedIndexes.filter(_.table == tn)
-        .map(d => s"index ${d.name}" -> d.idCol) ++
-      cfg.maintainedVectorIndexes.filter(_.table == tn)
-        .map(d => s"vector index ${d.name}" -> d.idCol) ++
-      cfg.maintainedPacks.filter(_.table == tn)
-        .filterNot(_.invalidateOnForget)
-        .map(d => s"pack store ${d.name}" -> d.idCol))
-      .foreach { case (n, ic) =>
-        require(ic == c || st.fieldNames.contains(ic),
-          s"maintained $n is keyed by $ic, which is not a column of " +
-            s"$tn — a forget keyed by $c cannot map to it")
-      }
+    purgedStoresOf(tn).foreach { s =>
+      require(s.idCol == c || st.fieldNames.contains(s.idCol),
+        s"maintained ${s.label} is keyed by ${s.idCol}, which is not a " +
+          s"column of $tn — a forget keyed by $c cannot map to it")
+    }
   }
 
   private def forgetInternal(schema: Seq[CDTable], t: CDTable, c: String,
       keys: Seq[Any], reqId: String): ForgetSummary = {
     val tableName = t.tableName
-    val idxDefs = cfg.maintainedIndexes.filter(_.table == tableName)
-    val vDefs = cfg.maintainedVectorIndexes.filter(_.table == tableName)
-    import org.apache.spark.sql.functions.col
     val files = rawListing(tableName)
     // captured from the still-intact table (canonical when current,
     // raw otherwise); consumed by the purge hooks BEFORE any
@@ -1472,24 +1461,27 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       })
     val purged = scala.collection.mutable.Map.empty[String, Long]
     val invalidated = scala.collection.mutable.ArrayBuffer.empty[String]
-    idxDefs.foreach { d =>
-      val store = s"${cfg.warehouseDir}/_maintained/index_${d.name}"
-      val ik = idKeysFor(d.idCol)
-      purged(s"index_${d.name}") =
-        if (ik.isEmpty) 0L
-        else graft.operators.Dedup.purgeMinhashIndex(spark, store, ik)
+    persistedStores.filter(_.table == tableName).foreach { s =>
+      val dir = new org.apache.hadoop.fs.Path(s.dir)
+      if (PersistedStore.open(s.dir)(Fs.of(s.dir, spark).exists(dir))) {
+        if (s.invalidateOnForget) {
+          // conservative stance (opt-in flag): drop the store, the next
+          // sync rebuilds over the filtered corpus — a corpus-scale job
+          Fs.of(s.dir, spark).delete(dir, true)
+          invalidated += s.name
+        } else {
+          // O(hit rows), never a rebuild: a pack store keeps its
+          // placements and frontier (holes), an index subtracts the
+          // rows' contribution from its ledger
+          val ik = idKeysFor(s.idCol)
+          purged(s.name) =
+            if (ik.isEmpty) 0L
+            else s.family.purge(spark, s.dir, ik,
+              () => s.project(deletedFull))
+        }
+      }
     }
-    vDefs.foreach { d =>
-      val store = s"${cfg.warehouseDir}/_maintained/vindex_${d.name}"
-      val ik = idKeysFor(d.idCol)
-      def vecs = deletedFull.select(col(d.idCol).as("vec_id"),
-        d.parseEmbedding(col(d.embedCol)).as("embedding"))
-      purged(s"vindex_${d.name}") =
-        if (ik.isEmpty) 0L
-        else graft.operators.VectorIndex.purge(spark, store, ik, vecs)
-    }
-    val retractId = "purge-" + graft.pipeline.AppendCommit.contentId(
-      keys.map(String.valueOf).sorted.mkString("\n"))
+    val retractId = graft.pipeline.AppendCommit.purgeId(keys)
     cfg.maintainedRollups.filter(_.table == tableName).foreach { r =>
       val store = s"${cfg.warehouseDir}/_maintained/rollup_${r.name}"
       if (graft.pipeline.Rollup.exists(spark, store)) {
@@ -1510,27 +1502,6 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
         // purged files
         graft.pipeline.Rollup.invalidate(spark, store)
         invalidated += s"profile_$tableName"
-      }
-    }
-    cfg.maintainedPacks.filter(_.table == tableName).foreach { d =>
-      val store = s"${cfg.warehouseDir}/_maintained/pack_${d.name}"
-      if (Fs.of(store, spark).exists(new org.apache.hadoop.fs.Path(store))) {
-        if (d.invalidateOnForget) {
-          // conservative stance (opt-in flag): drop the store, the next
-          // sync re-packs the filtered corpus — a corpus-scale job
-          Fs.of(store, spark).delete(new org.apache.hadoop.fs.Path(store), true)
-          invalidated += s"pack_${d.name}"
-        } else {
-          // placement-preserving purge (default): the deleted docs'
-          // placement rows leave, their bins keep holes, surviving
-          // placements stay byte-identical and the frontier is
-          // untouched — O(hit rows), never a corpus re-pack
-          val ik = idKeysFor(d.idCol)
-          purged(s"pack_${d.name}") =
-            if (ik.isEmpty) 0L
-            else graft.operators.Curation.purgePackStore(spark, store,
-              ik)
-        }
       }
     }
     // destructive steps LAST (the captures above replay from their
@@ -1591,11 +1562,7 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   /** Maintained-store id columns a forget keyed by `c` must map
     * through (cross-column cascade). */
   private def mappedIdCols(tn: String, c: String): Seq[String] =
-    (cfg.maintainedIndexes.filter(_.table == tn).map(_.idCol) ++
-      cfg.maintainedVectorIndexes.filter(_.table == tn).map(_.idCol) ++
-      cfg.maintainedPacks.filter(_.table == tn)
-        .filterNot(_.invalidateOnForget).map(_.idCol))
-      .distinct.filterNot(_ == c)
+    purgedStoresOf(tn).map(_.idCol).distinct.filterNot(_ == c)
 
   /** The mapping capture itself: matching rows' distinct `ic` values,
     * under the [[Warehouse.Config.forgetMaxMappedIds]] ceiling — the
@@ -2414,57 +2381,16 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     graft.pipeline.JoinView.read(spark,
       s"${cfg.warehouseDir}/_maintained/view_$name")
 
-  /** Per-sync-batch refresh of the configured pack stores (see
-    * [[Warehouse.PackDef]]): fresh raw files pack at the frontier in
-    * one intent-pinned fold; init/rebuild packs the full snapshot. */
-  private def maintainPacks(schema: Seq[CDTable]): Unit = {
-    cfg.maintainedPacks.foreach { d =>
-      schema.find(_.tableName == d.table).foreach { t =>
-        val files = rawListing(d.table)
-        if (files.nonEmpty) {
-          val store = s"${cfg.warehouseDir}/_maintained/pack_${d.name}"
-          def docsOf(df: DataFrame) = df
-            .select(org.apache.spark.sql.functions.col(d.idCol)
-              .as("doc_id"),
-              org.apache.spark.sql.functions.col(d.textCol).as("text"))
-          maintainAdditive(store, files, s"pack_${d.name}") { all =>
-            graft.operators.Curation.initPackStore(spark, store,
-              docsOf(readTableSnapshot(t, all)._1), d.budget,
-              graft.pipeline.AppendCommit.contentId(
-                all.sorted.mkString("\n")),
-              ledger = rebuildLedger(all))
-          } { (fresh, foldId) =>
-            graft.operators.Curation.appendToPackStore(spark, store,
-              docsOf(readRaw(t, fresh)), d.budget, foldId)
-          }
-          // hole-reclamation debt bound (opt-in): forget holes past the
-          // configured fraction of the token span trigger the epoch
-          // re-pack — after the fold, inside the same single-writer
-          // maintenance pass
-          if (d.compactHoleRatio > 0)
-            graft.operators.Curation.compactPackStore(spark, store,
-              d.budget, d.compactHoleRatio).foreach { ep =>
-              log.info(s"pack_${d.name}: hole ratio exceeded " +
-                s"${d.compactHoleRatio} — compacted to epoch $ep")
-            }
-        }
-      }
-    }
-  }
-
   /** Manual epoch re-pack of a maintained pack store (see
     * [[Warehouse.PackDef.compactHoleRatio]] for the auto-triggered
     * form). Returns the new epoch if the hole ratio cleared
     * `minHoleRatio` and the store rewrote. Run AFTER a sync has
     * converged (single-writer, like [[compactVectorIndex]]). */
   def compactPackStore(name: String, minHoleRatio: Double = 0.25)
-      : Option[Long] = {
-    val d = cfg.maintainedPacks.find(_.name == name).getOrElse(
+      : Option[Long] =
+    persistedStores.find(_.name == s"pack_$name").getOrElse(
       throw new IllegalArgumentException(s"unknown pack store $name"))
-    graft.operators.Curation.compactPackStore(spark,
-      s"${cfg.warehouseDir}/_maintained/pack_$name", d.budget,
-      minHoleRatio)
-  }
+      .compact(minHoleRatio)
 
   /** Current pack epoch of a maintained pack store — the placement
     * version downstream shard consumers pin
@@ -3041,116 +2967,139 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     graft.operators.Curation.readPackStore(spark,
       s"${cfg.warehouseDir}/_maintained/pack_$name")
 
-  /** Per-sync-batch maintenance of the configured MinHash indexes —
-    * the dedup reference corpus kept probe-ready with O(new files)
-    * work. Ledger ids are NAMESPACED: the warehouse records a
-    * `rawbatch-` covered marker per fold (payload = the file list),
-    * while the append itself records its content id — a crash between
-    * the append and the marker retries the intent-pinned fold, which
-    * no-ops on its content fingerprint, then lands the marker
-    * (effectively-once under at-least-once delivery). A covered file
-    * that was stale-deleted triggers a rebuild over the current
-    * listing (signatures can't subtract — same premise as rollup
-    * partials); init/rebuild reads the canonical layer when current. */
-  private def maintainIndexes(schema: Seq[CDTable]): Unit = {
-    cfg.maintainedIndexes.foreach { d =>
-      schema.find(_.tableName == d.table).foreach { t =>
-        val files = rawListing(d.table)
-        if (files.nonEmpty) {
-          val store = s"${cfg.warehouseDir}/_maintained/index_${d.name}"
-          def docsOf(df: DataFrame) = df
-            .select(org.apache.spark.sql.functions.col(d.idCol)
-              .as("doc_id"),
-              org.apache.spark.sql.functions.col(d.textCol).as("text"))
-          maintainAdditive(store, files, s"index_${d.name}") { all =>
-            graft.operators.Dedup.buildMinhashIndex(spark,
-              docsOf(readTableSnapshot(t, all)._1), store,
-              ledger = rebuildLedger(all))
-          } { (fresh, _) =>
-            graft.operators.Dedup.appendToMinhashIndex(spark,
-              docsOf(readRaw(t, fresh)), store)
-          }
-        }
-      }
+  /** One maintained persisted store ([[graft.pipeline.PersistedStore]])
+    * as the warehouse drives it — a MinHash index ([[IndexDef]]), a
+    * vector index ([[VectorIndexDef]]) or a pack store ([[PackDef]]).
+    * `project` maps table rows to the store's input (and forgotten rows
+    * to what its purge reads); `build` rebuilds over a full listing,
+    * `append` folds one batch of fresh files; `after` is the kind's own
+    * per-sync extra, given the rebuild over the full listing; `compact`
+    * the pack store's epoch re-pack. */
+  private final class MaintainedStore(val label: String, val name: String,
+      val table: String, val idCol: String,
+      val family: PersistedStore.Family,
+      val project: DataFrame => DataFrame,
+      val build: (DataFrame, Seq[String]) => Unit,
+      val append: (DataFrame, String) => Unit,
+      val after: (() => Unit) => Unit = _ => (),
+      val compact: Double => Option[Long] = _ => None,
+      val invalidateOnForget: Boolean = false) {
+    def dir: String = s"${cfg.warehouseDir}/_maintained/$name"
+  }
+
+  /** Every configured persisted store, maintenance order. Built per
+    * call: the vector kinds' drift evidence lives for one sync. */
+  private def persistedStores: Seq[MaintainedStore] = {
+    import graft.operators.{Curation, Dedup, Quantize, Similarity,
+      VectorIndex}
+    import org.apache.spark.sql.functions.col
+    def docs(idCol: String, textCol: String)(df: DataFrame) =
+      df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    cfg.maintainedIndexes.map { d =>
+      val dir = s"${cfg.warehouseDir}/_maintained/index_${d.name}"
+      new MaintainedStore(s"index ${d.name}", s"index_${d.name}", d.table,
+        d.idCol, Dedup.minhashFamily, docs(d.idCol, d.textCol),
+        (df, all) => Dedup.buildMinhashIndex(spark, df, dir,
+          ledger = rebuildLedger(all)),
+        (df, _) => Dedup.appendToMinhashIndex(spark, df, dir))
+    } ++ cfg.maintainedVectorIndexes.map { d =>
+      val dir = s"${cfg.warehouseDir}/_maintained/vindex_${d.name}"
+      // drift-triggered retrain (opt-in): one cheap evidence aggregate
+      // per append batch — SQ8: the clamp rate against the frozen
+      // per-dim ranges; IVF/PQ: the angular top-1 affinity drop against
+      // the build-time baseline. A breach rebuilds the index AFTER the
+      // fold (fresh centroids/params over the whole listing) — closing
+      // the loop the frozen-param append model otherwise leaves to a
+      // manual "delete the store" retrain.
+      var driftMsg: Option[String] = None
+      def checkDrift(batch: DataFrame): Unit =
+        if (d.retrainDriftThreshold > 0 && driftMsg.isEmpty)
+          driftMsg =
+            if (d.codec == VectorIndex.Sq8) {
+              val r = Quantize.sqClampRate(spark, dir, batch)
+              if (r > d.retrainDriftThreshold)
+                Some(f"SQ8 clamp rate $r%.4f > " +
+                  f"${d.retrainDriftThreshold}%.4f")
+              else None
+            } else Similarity.driftBase(spark, dir).flatMap { base =>
+              val a = Similarity.batchAffinity(spark, dir, batch)
+              if (base - a > d.retrainDriftThreshold)
+                Some(f"top-1 affinity drop ${base - a}%.4f " +
+                  f"(base $base%.4f, batch $a%.4f) > " +
+                  f"${d.retrainDriftThreshold}%.4f")
+              else None
+            }
+      new MaintainedStore(s"vector index ${d.name}", s"vindex_${d.name}",
+        d.table, d.idCol, VectorIndex.family,
+        df => df.select(col(d.idCol).as("vec_id"),
+          d.parseEmbedding(col(d.embedCol)).as("embedding")),
+        (df, all) => VectorIndex.build(spark, VectorIndex.Spec(d.codec,
+          Some(VectorIndex.Routing(d.nlist, d.replicas))), df, dir,
+          ledger = rebuildLedger(all)),
+        (df, _) => { checkDrift(df); VectorIndex.append(spark, df, dir) },
+        after = retrain => driftMsg.foreach { msg =>
+          log.warn(s"vindex_${d.name}: drift evidence breached " +
+            s"($msg) — retraining over the full listing")
+          // no pre-delete: the build commits via SafeSwap, which
+          // atomically supersedes the stale index — a crash (or a
+          // concurrent annIn reader) mid-retrain always sees a complete
+          // old or complete new store
+          retrain()
+        })
+    } ++ cfg.maintainedPacks.map { d =>
+      val dir = s"${cfg.warehouseDir}/_maintained/pack_${d.name}"
+      def compact(ratio: Double) =
+        Curation.compactPackStore(spark, dir, d.budget, ratio)
+      new MaintainedStore(s"pack store ${d.name}", s"pack_${d.name}", d.table,
+        d.idCol, Curation.packFamily, docs(d.idCol, d.textCol),
+        (df, all) => Curation.initPackStore(spark, dir, df, d.budget,
+          graft.pipeline.AppendCommit.contentId(all.sorted.mkString("\n")),
+          ledger = rebuildLedger(all)),
+        (df, foldId) =>
+          Curation.appendToPackStore(spark, dir, df, d.budget, foldId),
+        // hole-reclamation debt bound (opt-in): forget holes past the
+        // configured fraction of the token span trigger the epoch
+        // re-pack — after the fold, inside the same single-writer
+        // maintenance pass
+        after = _ => if (d.compactHoleRatio > 0)
+          compact(d.compactHoleRatio).foreach { ep =>
+            log.info(s"pack_${d.name}: hole ratio exceeded " +
+              s"${d.compactHoleRatio} — compacted to epoch $ep")
+          },
+        compact = compact,
+        invalidateOnForget = d.invalidateOnForget)
     }
   }
 
-  /** Per-sync-batch maintenance of the configured IVF ANN indexes —
-    * the embedding corpus kept probe-ready with O(new files) work:
-    * fresh files' vectors assign under the index's FROZEN centroids
-    * and append into only the affected cells
-    * ([[graft.operators.VectorIndex.append]]'s additive
-    * fingerprint commit), one intent-pinned batch per sync. Same
-    * namespaced-ledger crash convergence as the MinHash indexes; a
-    * stale-delete rebuilds (and thereby RETRAINS — the drift remedy)
-    * over the current listing. */
-  private def maintainVectorIndexes(schema: Seq[CDTable]): Unit = {
-    cfg.maintainedVectorIndexes.foreach { d =>
-      schema.find(_.tableName == d.table).foreach { t =>
-        val files = rawListing(d.table)
+  /** The stores a forget on `table` purges (and maps its keys through). */
+  private def purgedStoresOf(table: String): Seq[MaintainedStore] =
+    persistedStores.filter(s => s.table == table && !s.invalidateOnForget)
+
+  /** Per-sync-batch maintenance of every persisted store, O(new files)
+    * each: the fresh raw files fold in one intent-pinned batch
+    * ([[maintainAdditive]]); init/rebuild reads the canonical layer
+    * when current. Ledger ids are NAMESPACED: the warehouse records a
+    * `rawbatch-` covered marker per fold (payload = the file list),
+    * while the append records its own batch id — a crash between the
+    * append and the marker retries the fold, which no-ops on that id,
+    * then lands the marker (effectively-once under at-least-once
+    * delivery). A covered file that was stale-deleted rebuilds over the
+    * current listing (MinHash signatures can't subtract; a vector
+    * rebuild thereby RETRAINS — the drift remedy). */
+  private def maintainPersisted(schema: Seq[CDTable]): Unit =
+    persistedStores.foreach { s =>
+      schema.find(_.tableName == s.table).foreach { t =>
+        val files = rawListing(s.table)
         if (files.nonEmpty) {
-          val store =
-            s"${cfg.warehouseDir}/_maintained/vindex_${d.name}"
-          def vecsOf(df: DataFrame) = df
-            .select(org.apache.spark.sql.functions.col(d.idCol)
-              .as("vec_id"),
-              d.parseEmbedding(org.apache.spark.sql.functions
-                .col(d.embedCol)).as("embedding"))
           def rebuild(all: Seq[String]): Unit =
-            graft.operators.VectorIndex.build(spark,
-              graft.operators.VectorIndex.Spec(d.codec,
-                Some(graft.operators.VectorIndex.Routing(d.nlist,
-                  d.replicas))),
-              vecsOf(readTableSnapshot(t, all)._1), store,
-              ledger = rebuildLedger(all))
-          // drift-triggered retrain (opt-in): one cheap evidence
-          // aggregate per append batch — SQ8: the clamp rate against
-          // the frozen per-dim ranges; IVF/PQ: the angular top-1
-          // affinity drop against the build-time baseline. A breach
-          // marks the index for a full rebuild AFTER the fold (fresh
-          // centroids/params over the whole listing) — closing the
-          // loop the frozen-param append model otherwise leaves to a
-          // manual "delete the store" retrain.
-          var driftMsg: Option[String] = None
-          def checkDrift(batch: DataFrame): Unit =
-            if (d.retrainDriftThreshold > 0 && driftMsg.isEmpty)
-              driftMsg =
-                if (d.codec == graft.operators.VectorIndex.Sq8) {
-                  val r = graft.operators.Quantize.sqClampRate(spark,
-                    store, batch)
-                  if (r > d.retrainDriftThreshold)
-                    Some(f"SQ8 clamp rate $r%.4f > " +
-                      f"${d.retrainDriftThreshold}%.4f")
-                  else None
-                } else graft.operators.Similarity.driftBase(spark, store)
-                  .flatMap { base =>
-                    val a = graft.operators.Similarity.batchAffinity(
-                      spark, store, batch)
-                    if (base - a > d.retrainDriftThreshold)
-                      Some(f"top-1 affinity drop ${base - a}%.4f " +
-                        f"(base $base%.4f, batch $a%.4f) > " +
-                        f"${d.retrainDriftThreshold}%.4f")
-                    else None
-                  }
-          maintainAdditive(store, files, s"vindex_${d.name}")(rebuild) {
-            (fresh, _) =>
-              val batch = vecsOf(readRaw(t, fresh))
-              checkDrift(batch)
-              graft.operators.VectorIndex.append(spark, batch, store)
+            s.build(s.project(readTableSnapshot(t, all)._1), all)
+          maintainAdditive(s.dir, files, s.name)(rebuild) { (fresh, id) =>
+            s.append(s.project(readRaw(t, fresh)), id)
           }
-          driftMsg.foreach { msg =>
-            log.warn(s"vindex_${d.name}: drift evidence breached " +
-              s"($msg) — retraining over the full listing")
-            // no pre-delete: every build* path commits via
-            // SafeSwap.replace, which atomically supersedes the stale
-            // index — a crash (or a concurrent annIn reader) mid-retrain
-            // always sees a complete old or complete new store
-            rebuild(files)
-          }
+          s.after(() => rebuild(files))
         }
       }
     }
-  }
 
   /** Approximate-nearest-neighbor probe of a maintained IVF index:
     * top-k cosine matches per query row (needs `q_id`, `q_emb`

@@ -95,7 +95,9 @@ object Classify {
     // (−score, lbl) structs ≡ the former row_number pick over
     // (score desc, lbl asc) — IEEE negation is exact, so the winner is
     // bit-identical — but it partial-aggregates map-side and drops the
-    // per-doc sort (guide §2.3)
+    // per-doc sort (guide §2.3). The equivalence assumes FINITE scores
+    // (the scorer's log-sums are): a NaN sorts largest, so the window
+    // ranked it first while this min ranks it last.
     naiveBayesScores(train, predict, labelCol, idCol)
       .groupBy(col("doc_id"))
       .agg(min(struct((-col("score")).as("negs"), col("lbl"))).as("__m"))

@@ -440,8 +440,7 @@ object Components {
     require(ids.nonEmpty, "purge needs at least one id")
     import graft.pipeline.{AppendCommit, Maintain, MaintenanceLock, Upsert}
     graft.pipeline.SafeSwap.recover(storeDir)
-    val id = "purge-" + AppendCommit.contentId(
-      ids.map(String.valueOf).sorted.mkString("\n"))
+    val id = AppendCommit.purgeId(ids)
     if (AppendCommit.isApplied(storeDir, id)) return 0L
     MaintenanceLock.withLock(storeDir, "purge") {
       // heal a crashed archive compaction before touching edges/

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
+import graft.pipeline.{AppendCommit, MaintenanceLock, PersistedStore}
+
 /** [EXT] Corpus-curation operators for training-data pipelines:
   * benchmark decontamination, deterministic train/val splitting, and
   * intra-document repetition filtering — the standard curation passes
@@ -308,7 +310,7 @@ object Curation {
     * payload; the prefix keeps frontier entries distinct from the
     * warehouse loop's FreshFold covered markers sharing the ledger). */
   private def packFrontier(storeDir: String): Long =
-    graft.pipeline.AppendCommit.appliedEntries(storeDir)
+    AppendCommit.appliedEntries(storeDir)
       .filter(_._1.startsWith("pk_"))
       .map(_._2.trim).filter(_.nonEmpty).map(_.toLong).sum
 
@@ -319,21 +321,15 @@ object Curation {
 
   /** Create a pack store from the initial corpus batch. `ledger` lets
     * the warehouse rebuild path record its covered-file markers in the
-    * same atomic swap (the [[graft.operators.Dedup.buildMinhashIndex]]
-    * shape). */
+    * same atomic swap ([[graft.pipeline.PersistedStore.build]]). */
   def initPackStore(spark: SparkSession, storeDir: String,
       docs: DataFrame, budget: Long, batchId: String,
-      ledger: Seq[(String, String)] = Nil): Unit = {
-    val total = tokenTotal(docs)
-    graft.pipeline.SafeSwap.replace(storeDir) { tmp =>
-      ledger.foreach { case (id, p) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, p) }
+      ledger: Seq[(String, String)] = Nil): Unit =
+    PersistedStore.build(storeDir,
+        ledger :+ (s"pk_$batchId" -> tokenTotal(docs).toString)) { tmp =>
       packSequences(docs, budget).sortWithinPartitions(col("bin"))
         .write.parquet(s"$tmp/docs")
-      graft.pipeline.AppendCommit.markApplied(tmp, s"pk_$batchId",
-        total.toString)
     }
-  }
 
   /** O(batch) append at the frontier. Appends are ORDER-DEPENDENT
     * (every batch's offsets build on the frontier before it), so the
@@ -341,15 +337,14 @@ object Curation {
     * is already sequential; concurrent callers queue here. */
   def appendToPackStore(spark: SparkSession, storeDir: String,
       batch: DataFrame, budget: Long, batchId: String): Unit =
-    graft.pipeline.MaintenanceLock.withLock(storeDir, tag = "_frontier") {
-      // heal a crashed build first: an append into an empty live dir
-      // would read a zero frontier and strand the aside copy for good
-      graft.pipeline.SafeSwap.recover(storeDir)
-      val base = packFrontier(storeDir)
+    MaintenanceLock.withLock(storeDir, tag = "_frontier") {
       val total = tokenTotal(batch)
-      graft.pipeline.AppendCommit.appendBatch(spark, storeDir,
-          s"pk_$batchId", total.toString) { tmp =>
-        packSequences(batch, budget, baseOffset = base)
+      PersistedStore.append(spark, storeDir, s"pk_$batchId",
+          total.toString) {
+        // the frontier is read after the heal: an empty live dir would
+        // read zero
+        val base = packFrontier(storeDir)
+        tmp => packSequences(batch, budget, baseOffset = base)
           .sortWithinPartitions(col("bin")).write.parquet(s"$tmp/docs")
       }
       ()
@@ -357,10 +352,8 @@ object Curation {
 
   /** All placements (doc_id, n_tokens, off, bin, straddle). Offsets are
     * immutable once written — see the q267 note. */
-  def readPackStore(spark: SparkSession, storeDir: String): DataFrame = {
-    graft.pipeline.SafeSwap.recover(storeDir)
-    spark.read.parquet(s"$storeDir/docs")
-  }
+  def readPackStore(spark: SparkSession, storeDir: String): DataFrame =
+    PersistedStore.open(storeDir)(spark.read.parquet(s"$storeDir/docs"))
 
   /** Bin-window read — the TRAINING-LOADER entry point: a shard
     * consumer reads its contiguous bin range, not the whole placement
@@ -397,12 +390,11 @@ object Curation {
     * — stays available via [[graft.Warehouse.PackDef]]'s
     * `invalidateOnForget` flag. Idempotent: a replay finds no rows. */
   def purgePackStore(spark: SparkSession, storeDir: String,
-      docIds: Seq[Any]): Long = {
-    require(docIds.nonEmpty, "purge needs at least one doc id")
-    graft.pipeline.SafeSwap.recover(storeDir)
-    graft.pipeline.Maintain.deleteByKey(spark, s"$storeDir/docs",
-      "doc_id", docIds).rowsDeleted
-  }
+      docIds: Seq[Any]): Long =
+    PersistedStore.deleteRows(spark, storeDir, docIds, "doc_id", Seq("docs"))
+
+  private[graft] val packFamily: PersistedStore.Family =
+    (spark, dir, keys, _) => purgePackStore(spark, dir, keys)
 
   /** Pack EPOCH of a store: bumped by every [[compactPackStore]]
     * rewrite. Placements are stable WITHIN an epoch (the q267
@@ -411,25 +403,27 @@ object Curation {
     * shards cut under epoch N are invalid against epoch N+1's offsets.
     * 0 = never compacted (the store as [[initPackStore]] and appends
     * built it). */
-  def packEpoch(storeDir: String): Long =
-    graft.pipeline.AppendCommit.appliedEntries(storeDir)
+  def packEpoch(storeDir: String): Long = PersistedStore.open(storeDir) {
+    AppendCommit.appliedEntries(storeDir)
       .filter(_._1.startsWith("ep_"))
       .map(_._2.trim).filter(_.nonEmpty).map(_.toLong)
       .maxOption.getOrElse(0L)
+  }
 
   /** Fraction of the store's token span that is DEAD (forget holes):
     * (frontier − live tokens) / frontier. The frontier counts what was
     * PLACED (Σ `pk_` ledger payloads); live counts what survives. */
-  def packHoleRatio(spark: SparkSession, storeDir: String): Double = {
-    graft.pipeline.SafeSwap.recover(storeDir)
-    val frontier = packFrontier(storeDir)
-    if (frontier <= 0L) 0.0
-    else {
-      val live = spark.read.parquet(s"$storeDir/docs")
-        .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-      (frontier - live).toDouble / frontier.toDouble
+  def packHoleRatio(spark: SparkSession, storeDir: String): Double =
+    PersistedStore.open(storeDir) {
+      val frontier = packFrontier(storeDir)
+      if (frontier <= 0L) 0.0
+      else (frontier - liveTokens(spark, storeDir)).toDouble /
+        frontier.toDouble
     }
-  }
+
+  private def liveTokens(spark: SparkSession, storeDir: String): Long =
+    spark.read.parquet(s"$storeDir/docs")
+      .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
 
   /** Dense re-pack of surviving placements in their ORIGINAL offset
     * order — the q67 two-level prefix sum keyed by the old bin (never
@@ -490,36 +484,29 @@ object Curation {
     * compaction elsewhere in the engine. */
   def compactPackStore(spark: SparkSession, storeDir: String,
       budget: Long, minHoleRatio: Double = 0.25): Option[Long] =
-    graft.pipeline.MaintenanceLock.withLock(storeDir,
-        tag = "_frontier") {
-      graft.pipeline.SafeSwap.recover(storeDir)
-      val frontier = packFrontier(storeDir)
-      val live = spark.read.parquet(s"$storeDir/docs")
-        .agg(coalesce(sum(col("n_tokens")), lit(0L))).head().getLong(0)
-      val holes = frontier - live
-      if (frontier <= 0L || holes <= 0L ||
-          holes.toDouble / frontier.toDouble < minHoleRatio) None
-      else {
-        val entries = graft.pipeline.AppendCommit
-          .appliedEntries(storeDir)
-        val epoch = packEpoch(storeDir) + 1L
-        val repacked =
-          repackPlacements(spark.read.parquet(s"$storeDir/docs"), budget)
-        graft.pipeline.SafeSwap.replace(storeDir) { tmp =>
-          // the lazy read of the live placements executes inside this
-          // write, strictly before SafeSwap renames the old tree aside
-          repacked.sortWithinPartitions(col("bin"))
-            .write.parquet(s"$tmp/docs")
-          entries.foreach { case (id, p) =>
-            graft.pipeline.AppendCommit.markApplied(tmp, id,
-              if (id.startsWith("pk_")) "0" else p)
+    MaintenanceLock.withLock(storeDir, tag = "_frontier") {
+      PersistedStore.open(storeDir) {
+        val frontier = packFrontier(storeDir)
+        val live = liveTokens(spark, storeDir)
+        val holes = frontier - live
+        if (frontier <= 0L || holes <= 0L ||
+            holes.toDouble / frontier.toDouble < minHoleRatio) None
+        else {
+          val epoch = packEpoch(storeDir) + 1L
+          val repacked =
+            repackPlacements(spark.read.parquet(s"$storeDir/docs"), budget)
+          PersistedStore.build(storeDir,
+              AppendCommit.appliedEntries(storeDir).map { case (id, p) =>
+                id -> (if (id.startsWith("pk_")) "0" else p) } ++
+              Seq(s"pk_epoch$epoch" -> live.toString,
+                s"ep_$epoch" -> epoch.toString)) { tmp =>
+            // the lazy read of the live placements executes inside this
+            // write, strictly before SafeSwap renames the old tree aside
+            repacked.sortWithinPartitions(col("bin"))
+              .write.parquet(s"$tmp/docs")
           }
-          graft.pipeline.AppendCommit.markApplied(tmp,
-            s"pk_epoch$epoch", live.toString)
-          graft.pipeline.AppendCommit.markApplied(tmp,
-            s"ep_$epoch", epoch.toString)
+          Some(epoch)
         }
-        Some(epoch)
       }
     }
 
@@ -536,18 +523,14 @@ object Curation {
     * exactly the single-writer contract [[appendToPackStore]]'s
     * frontier lock enforces. */
   def foreachBatchPackSink(storeDir: String,
-      budget: Long): (DataFrame, Long) => Unit = { (batch, id) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      graft.pipeline.SafeSwap.recover(storeDir)
-      val fs = graft.pipeline.Fs.of(storeDir, spark)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$storeDir/docs")))
-        initPackStore(spark, storeDir, batch, budget, s"stream-$id")
-      else appendToPackStore(spark, storeDir, batch, budget,
+      budget: Long): (DataFrame, Long) => Unit =
+    PersistedStore.foreachBatchSink(storeDir, "docs") { (batch, id) =>
+      initPackStore(batch.sparkSession, storeDir, batch, budget,
+        s"stream-$id")
+    } { (batch, id) =>
+      appendToPackStore(batch.sparkSession, storeDir, batch, budget,
         s"stream-$id")
     }
-    ()
-  }
 
   private lazy val packGateBase: String =
     java.nio.file.Files.createTempDirectory("graft_ipack_").toString

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.{AppendCommit, Maintain, PersistedStore}
+
 /** [EXT] Deduplication operators over `documents`: exact, n-gram Jaccard,
   * MinHash+LSH, SimHash. The reference's own dedup is file-level
   * ("key already in S3 → skip", `sync-canvas-data-files.py:62-67`); these
@@ -114,11 +116,15 @@ object Dedup {
     * stream, so scores are identical to post-filtering [[jaccardPairs]].
     * Requires the two sides to be DISJOINT id ranges with every right id
     * above every left id (the planted-batch convention) so the a < b
-    * canonical order is the cross order. */
+    * canonical order is the cross order; a pair that breaks it fails the
+    * query (checked in the tail projection — no extra job). */
   def crossJaccardPairs(sh: DataFrame, rightSide: Column): DataFrame = {
     val a = sh.filter(!rightSide).select(col("doc_id").as("a"), col("s"))
     val b = sh.filter(rightSide).select(col("doc_id").as("b"), col("s"))
     jaccardTail(pairCounts(sh, a.join(b, Seq("s"))), 3, 5)
+      .withColumn("a", when(col("a") < col("b"), col("a")).otherwise(
+        raise_error(lit("crossJaccardPairs: a right-side id is not above " +
+          "every left-side id"))))
   }
 
   /** Exact Jaccard pairs (J ≥ 0.6) from a precomputed shingle stream
@@ -834,9 +840,7 @@ object Dedup {
       indexDir: String, ledger: Seq[(String, String)] = Nil): Unit = {
     val sig = minhashSignatures(docs).cache()
     sig.count() // three writers below — materialize once
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      ledger.foreach { case (id, payload) =>
-        graft.pipeline.AppendCommit.markApplied(tmp, id, payload) }
+    PersistedStore.build(indexDir, ledger) { tmp =>
       sig.write.parquet(s"$tmp/signatures")
       // hot-bucket cap applied at BUILD time (the incremental analog of
       // minhashCandidates' skew guard): a stored bucket over the cap is
@@ -862,14 +866,9 @@ object Dedup {
   }
 
   /** Content-derived batch fingerprint "n|h" — the append idempotency
-    * key (the IVF corpusFingerprint convention, over (doc_id, text)). */
-  private def docsFingerprint(batch: DataFrame): String = {
-    val r = batch.agg(
-      count(lit(1)).as("n"),
-      sum(xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)"))
-        .as("h")).head()
-    s"${r.getLong(0)}|${if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString}"
-  }
+    * key, over (doc_id, text). */
+  private def docsFingerprint(batch: DataFrame): String =
+    PersistedStore.fingerprint(batch, "doc_id", "text")
 
   /** Raw bucket-size DELTAS (band, bh, sz) — the true size of a bucket
     * is sum(sz) over its delta rows. Consumers restrict to the buckets
@@ -919,10 +918,12 @@ object Dedup {
     * actually touch (see [[incrementalNearDups]]); this whole-index view
     * is for equivalence checks and compaction. */
   def readMinhashBands(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/bands")
-      .join(minhashBucketSizes(spark, indexDir)
-          .filter(col("sz") <= MaxBucketSize).select(col("band"), col("bh")),
-        Seq("band", "bh"), "left_semi")
+    PersistedStore.open(indexDir) {
+      spark.read.parquet(s"$indexDir/bands")
+        .join(minhashBucketSizes(spark, indexDir)
+            .filter(col("sz") <= MaxBucketSize).select(col("band"), col("bh")),
+          Seq("band", "bh"), "left_semi")
+    }
 
   /** Merge a batch's signatures and band rows into a persisted index —
     * the complement of [[incrementalNearDups]]'s read path: after a daily
@@ -959,51 +960,45 @@ object Dedup {
     * maintenance writer, like every index maintenance op. */
   def appendToMinhashIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = {
-    graft.pipeline.SafeSwap.recover(indexDir)
     val fpBatch = docsFingerprint(batch)
-    val batchId = graft.pipeline.AppendCommit.contentId(fpBatch)
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, batchId)) return
-    // a crashed attempt's partially-placed files must go BEFORE the
-    // size-delta read below is planned: the stage would otherwise
-    // either double-count them as corpus base (cap on base + its own
-    // half-placed deltas) or — once appendBatch tag-deletes them —
-    // fail on the stale captured file listing
-    graft.pipeline.AppendCommit.clearCrashedAttempt(indexDir, batchId)
-    val sigNew = minhashSignatures(batch).cache()
-    sigNew.count() // band derivation + signature writer both consume it
-    val bandsNew = bandRows(sigNew)
-    val sizesNew = bandsNew.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("sz")).cache()
-    sizesNew.count() // cap decision + delta writer both consume it
-    // stored sizes confined (pre-aggregation) to buckets the batch
-    // touches — the only part of the existing index this append reads
-    // beyond the legacy fallback
-    val oldTouched = minhashSizeDeltas(spark, indexDir)
-      .join(sizesNew.select(col("band"), col("bh")),
-        Seq("band", "bh"), "left_semi")
-      .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("old_sz"))
-    val keep = sizesNew.join(oldTouched, Seq("band", "bh"), "left")
-      .filter(coalesce(col("old_sz"), lit(0L)) + col("sz") <= MaxBucketSize)
-      .select(col("band"), col("bh"))
-    val legacyNoSizes = !hasSizesTable(spark, indexDir)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, batchId,
-        fpBatch) { tmp =>
-      sigNew.write.parquet(s"$tmp/signatures")
-      bandsNew.join(keep, Seq("band", "bh"), "left_semi")
-        .select(col("doc_id"), col("band"), col("bh"))
-        .write.parquet(s"$tmp/bands")
-      // UNCAPPED size deltas — future appends and the live view sum
-      // them. A legacy tree gets its derived base sizes folded into this
-      // first delta (one-time O(corpus-bands) migration write).
-      val delta =
-        if (legacyNoSizes)
-          minhashBucketSizes(spark, indexDir).unionByName(sizesNew)
-            .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("sz"))
-        else sizesNew
-      delta.write.parquet(s"$tmp/bucket_sizes")
+    PersistedStore.append(spark, indexDir, AppendCommit.contentId(fpBatch),
+        fpBatch) {
+      val sigNew = minhashSignatures(batch).cache()
+      sigNew.count() // band derivation + signature writer both consume it
+      val bandsNew = bandRows(sigNew)
+      val sizesNew = bandsNew.groupBy(col("band"), col("bh"))
+        .agg(count(lit(1)).as("sz")).cache()
+      sizesNew.count() // cap decision + delta writer both consume it
+      // stored sizes confined (pre-aggregation) to buckets the batch
+      // touches — the only part of the existing index this append reads
+      // beyond the legacy fallback
+      val oldTouched = minhashSizeDeltas(spark, indexDir)
+        .join(sizesNew.select(col("band"), col("bh")),
+          Seq("band", "bh"), "left_semi")
+        .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("old_sz"))
+      val keep = sizesNew.join(oldTouched, Seq("band", "bh"), "left")
+        .filter(coalesce(col("old_sz"), lit(0L)) + col("sz") <= MaxBucketSize)
+        .select(col("band"), col("bh"))
+      val legacyNoSizes = !hasSizesTable(spark, indexDir)
+      tmp => {
+        sigNew.write.parquet(s"$tmp/signatures")
+        bandsNew.join(keep, Seq("band", "bh"), "left_semi")
+          .select(col("doc_id"), col("band"), col("bh"))
+          .write.parquet(s"$tmp/bands")
+        // UNCAPPED size deltas — future appends and the live view sum
+        // them. A legacy tree gets its derived base sizes folded into this
+        // first delta (one-time O(corpus-bands) migration write).
+        val delta =
+          if (legacyNoSizes)
+            minhashBucketSizes(spark, indexDir).unionByName(sizesNew)
+              .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("sz"))
+          else sizesNew
+        delta.write.parquet(s"$tmp/bucket_sizes")
+        sizesNew.unpersist()
+        sigNew.unpersist()
+      }
     }
-    sizesNew.unpersist()
-    sigNew.unpersist()
+    ()
   }
 
   /** Streaming index maintenance: a `foreachBatch` sink that folds each
@@ -1015,21 +1010,14 @@ object Dedup {
     * index maintenance on top of foreachBatch's at-least-once contract,
     * with no ordering assumptions beyond the id-disjoint batches the
     * batch append already requires. */
-  def foreachBatchIndexSink(indexDir: String): (DataFrame, Long) => Unit = {
-    (batch, _) =>
-      val spark = batch.sparkSession
-      if (!batch.isEmpty) {
-        graft.pipeline.SafeSwap.recover(indexDir)
-        val fs = graft.pipeline.Fs.of(indexDir, spark)
-        if (!fs.exists(
-            new org.apache.hadoop.fs.Path(s"$indexDir/signatures"))) {
-          val b = batch.localCheckpoint() // fingerprint + build consume it
-          val id = graft.pipeline.AppendCommit.contentId(docsFingerprint(b))
-          buildMinhashIndex(spark, b, indexDir, Seq(id -> "0|0"))
-        } else appendToMinhashIndex(spark, batch, indexDir)
-      }
-      ()
-  }
+  def foreachBatchIndexSink(indexDir: String): (DataFrame, Long) => Unit =
+    PersistedStore.foreachBatchSink(indexDir, "signatures") { (batch, _) =>
+      val b = batch.localCheckpoint() // fingerprint + build consume it
+      buildMinhashIndex(b.sparkSession, b, indexDir,
+        PersistedStore.founding(docsFingerprint(b)))
+    } { (batch, _) =>
+      appendToMinhashIndex(batch.sparkSession, batch, indexDir)
+    }
 
   /** Periodic maintenance: purge physically-stale band rows (buckets
     * that crossed the cap after their rows were stored) and collapse the
@@ -1044,20 +1032,21 @@ object Dedup {
     * signatures and size deltas double-apply. The ledger itself is
     * folded to one generation file first, so the carry is O(1) files.
     * Single-writer, like every maintenance op. */
-  def compactMinhashIndex(spark: SparkSession, indexDir: String): Unit = {
-    val sigs = spark.read.parquet(s"$indexDir/signatures")
-    val live = readMinhashBands(spark, indexDir)
-    val sizes = minhashBucketSizes(spark, indexDir)
-    graft.pipeline.AppendCommit.compactLedger(indexDir)
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      // lazy reads of the live tree execute inside these write actions,
-      // strictly before SafeSwap renames it aside
-      sigs.write.parquet(s"$tmp/signatures")
-      live.write.parquet(s"$tmp/bands")
-      sizes.write.parquet(s"$tmp/bucket_sizes")
-      graft.pipeline.AppendCommit.copyLedger(indexDir, tmp)
+  def compactMinhashIndex(spark: SparkSession, indexDir: String): Unit =
+    PersistedStore.open(indexDir) {
+      val sigs = spark.read.parquet(s"$indexDir/signatures")
+      val live = readMinhashBands(spark, indexDir)
+      val sizes = minhashBucketSizes(spark, indexDir)
+      AppendCommit.compactLedger(indexDir)
+      PersistedStore.build(indexDir) { tmp =>
+        // lazy reads of the live tree execute inside these write actions,
+        // strictly before SafeSwap renames it aside
+        sigs.write.parquet(s"$tmp/signatures")
+        live.write.parquet(s"$tmp/bands")
+        sizes.write.parquet(s"$tmp/bucket_sizes")
+        AppendCommit.copyLedger(indexDir, tmp)
+      }
     }
-  }
 
   /** RTBF cascade hook: physically remove `docIds` from the persisted
     * index — their signature rows, their band rows, AND their
@@ -1066,7 +1055,7 @@ object Dedup {
     * its surviving rows exactly as a fresh build over the filtered
     * corpus would hide/show them). The negative deltas are derived from
     * the stored signatures BEFORE the rows leave, committed as an
-    * idempotent content-keyed [[graft.pipeline.AppendCommit]] batch
+    * idempotent [[PersistedStore.append]] under the purge id
     * (crash-retry converges; replay no-ops); the row removal itself is
     * unconditional and idempotent
     * ([[graft.pipeline.Maintain.deleteByKey]] — rewrites only files
@@ -1081,12 +1070,8 @@ object Dedup {
   def purgeMinhashIndex(spark: SparkSession, indexDir: String,
       docIds: Seq[Any]): Long = {
     require(docIds.nonEmpty, "purge needs at least one doc id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val id = "purge-" + graft.pipeline.AppendCommit.contentId(
-      docIds.map(String.valueOf).sorted.mkString("\n"))
-    if (!graft.pipeline.AppendCommit.isApplied(indexDir, id)) {
-      graft.pipeline.AppendCommit.clearCrashedAttempt(indexDir, id)
-      val sigDel = graft.pipeline.Maintain.matchingKeys(
+    PersistedStore.append(spark, indexDir, AppendCommit.purgeId(docIds)) {
+      val sigDel = Maintain.matchingKeys(
         spark.read.parquet(s"$indexDir/signatures"), "doc_id", docIds)
       val neg = bandRows(sigDel).groupBy(col("band"), col("bh"))
         .agg((count(lit(1)) * lit(-1L)).as("sz"))
@@ -1097,16 +1082,14 @@ object Dedup {
         if (hasSizesTable(spark, indexDir)) neg
         else minhashBucketSizes(spark, indexDir).unionByName(neg)
           .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("sz"))
-      graft.pipeline.AppendCommit.appendBatch(spark, indexDir, id) {
-        tmp => delta.write.parquet(s"$tmp/bucket_sizes")
-      }
+      tmp => delta.write.parquet(s"$tmp/bucket_sizes")
     }
-    val sigs = graft.pipeline.Maintain.deleteByKey(spark,
-      s"$indexDir/signatures", "doc_id", docIds).rowsDeleted
-    graft.pipeline.Maintain.deleteByKey(spark,
-      s"$indexDir/bands", "doc_id", docIds)
-    sigs
+    PersistedStore.deleteRows(spark, indexDir, docIds, "doc_id",
+      Seq("signatures", "bands"))
   }
+
+  private[graft] val minhashFamily: PersistedStore.Family =
+    (spark, dir, keys, _) => purgeMinhashIndex(spark, dir, keys)
 
   /** Near-dup pairs (corpus doc `a`, incoming doc `b`) between a persisted
     * index and an incoming batch: banding collision against the stored
@@ -1115,44 +1098,45 @@ object Dedup {
     * corpus-side shingle pass. Incoming docs are assumed id-disjoint from
     * the corpus (the sync layer's immutable-file contract). */
   def incrementalNearDups(spark: SparkSession, indexDir: String,
-      incoming: DataFrame, minEst: Double = 0.5): DataFrame = {
-    // no cache: this is the hot per-batch probe path, and a cache pinned
-    // here can never be unpersisted (the returned DataFrame consumes it
-    // lazily) — one leaked entry per daily batch for the session's
-    // lifetime. The two consumers (band derivation, rerank join) instead
-    // recompute the batch signatures — 2× the BATCH's shingle+minhash
-    // cost, zero extra corpus cost; a caller probing the same batch
-    // repeatedly should cache `incoming` itself, which it owns.
-    val sigNew = minhashSignatures(incoming)
-    val bandsNew = bandRows(sigNew)
-      .select(col("band"), col("bh"), col("doc_id").as("b"))
-    // live-bucket filter (the read-time half of the append's cap
-    // contract), confined to buckets the batch actually collides with:
-    // the size aggregation runs over the deltas of candidate buckets
-    // only, so probe cost stays O(batch + collisions) however large the
-    // index's bucket population is
-    val liveTouched = minhashSizeDeltas(spark, indexDir)
-      .join(bandsNew.select(col("band"), col("bh")).distinct(),
-        Seq("band", "bh"), "left_semi")
-      .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("sz"))
-      .filter(col("sz") <= MaxBucketSize)
-      .select(col("band"), col("bh"))
-    val bandsOld = spark.read.parquet(s"$indexDir/bands")
-      .join(liveTouched, Seq("band", "bh"), "left_semi")
-      .select(col("band"), col("bh"), col("doc_id").as("a"))
-    val cand = bandsOld.join(bandsNew, Seq("band", "bh"))
-      .select(col("a"), col("b")).distinct()
-    val sigOld = spark.read.parquet(s"$indexDir/signatures")
-      .select(col("doc_id").as("a"), col("sig").as("sig_a"))
-    cand.join(sigOld, "a")
-      .join(sigNew.select(col("doc_id").as("b"), col("sig").as("sig_b")), "b")
-      .withColumn("est",
-        size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => when(x === y, 1).otherwise(0)), v => v === 1))
-          .cast("double") / MinhashPerms)
-      .filter(col("est") >= minEst)
-      .select(col("a"), col("b"), col("est"))
-  }
+      incoming: DataFrame, minEst: Double = 0.5): DataFrame =
+    PersistedStore.open(indexDir) {
+      // no cache: this is the hot per-batch probe path, and a cache pinned
+      // here can never be unpersisted (the returned DataFrame consumes it
+      // lazily) — one leaked entry per daily batch for the session's
+      // lifetime. The two consumers (band derivation, rerank join) instead
+      // recompute the batch signatures — 2× the BATCH's shingle+minhash
+      // cost, zero extra corpus cost; a caller probing the same batch
+      // repeatedly should cache `incoming` itself, which it owns.
+      val sigNew = minhashSignatures(incoming)
+      val bandsNew = bandRows(sigNew)
+        .select(col("band"), col("bh"), col("doc_id").as("b"))
+      // live-bucket filter (the read-time half of the append's cap
+      // contract), confined to buckets the batch actually collides with:
+      // the size aggregation runs over the deltas of candidate buckets
+      // only, so probe cost stays O(batch + collisions) however large the
+      // index's bucket population is
+      val liveTouched = minhashSizeDeltas(spark, indexDir)
+        .join(bandsNew.select(col("band"), col("bh")).distinct(),
+          Seq("band", "bh"), "left_semi")
+        .groupBy(col("band"), col("bh")).agg(sum(col("sz")).as("sz"))
+        .filter(col("sz") <= MaxBucketSize)
+        .select(col("band"), col("bh"))
+      val bandsOld = spark.read.parquet(s"$indexDir/bands")
+        .join(liveTouched, Seq("band", "bh"), "left_semi")
+        .select(col("band"), col("bh"), col("doc_id").as("a"))
+      val cand = bandsOld.join(bandsNew, Seq("band", "bh"))
+        .select(col("a"), col("b")).distinct()
+      val sigOld = spark.read.parquet(s"$indexDir/signatures")
+        .select(col("doc_id").as("a"), col("sig").as("sig_a"))
+      cand.join(sigOld, "a")
+        .join(sigNew.select(col("doc_id").as("b"), col("sig").as("sig_b")), "b")
+        .withColumn("est",
+          size(filter(zip_with(col("sig_a"), col("sig_b"),
+            (x, y) => when(x === y, 1).otherwise(0)), v => v === 1))
+            .cast("double") / MinhashPerms)
+        .filter(col("est") >= minEst)
+        .select(col("a"), col("b"), col("est"))
+    }
 
   /** Per-process index dir for the gate query (same rationale as
     * [[VectorIndex.gateDir]]: cross-JVM tmp sharing races SafeSwap). */

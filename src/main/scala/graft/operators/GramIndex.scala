@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.{AppendCommit, PersistedStore}
+
 /** [EXT] Persisted n-gram PRESENCE index with O(batch) append — the
   * reference-corpus side of novelty scoring ([[TextAnalysis
   * .ngramNovelty]]) made incremental. q156 re-shingles the reference
@@ -42,37 +44,25 @@ object GramIndex {
       .withColumn("gb", pmod(xxhash64(col("g")), lit(NBuckets.toLong))
         .cast("int"))
 
-  private def fingerprintOf(docs: DataFrame): String = {
-    val r = docs.agg(count(lit(1)).as("n"),
-      sum(xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)"))
-        .as("h")).head()
-    s"${r.getLong(0)}|${if (r.isNullAt(1)) "0"
-      else r.getDecimal(1).toBigInteger.toString}"
-  }
+  private def batchId(docs: DataFrame): String =
+    AppendCommit.contentId(PersistedStore.fingerprint(docs, "doc_id", "text"))
+
+  private def writeGrams(docs: DataFrame, n: Int, tmp: String): Unit =
+    gramsOf(docs, n).repartition(col("gb"))
+      .write.partitionBy("gb").parquet(s"$tmp/grams")
 
   /** Full rebuild, swapped in atomically with its base ledger entry. */
   def buildGramIndex(spark: SparkSession, docs: DataFrame, n: Int,
-      indexDir: String): Unit = {
-    val id = graft.pipeline.AppendCommit.contentId(fingerprintOf(docs))
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      gramsOf(docs, n).repartition(col("gb"))
-        .write.partitionBy("gb").parquet(s"$tmp/grams")
-      graft.pipeline.AppendCommit.markApplied(tmp, id)
-    }
-  }
+      indexDir: String): Unit =
+    PersistedStore.build(indexDir, Seq(batchId(docs) -> ""))(
+      writeGrams(docs, n, _))
 
   /** O(batch) append: the batch's distinct grams land file-additively in
-    * their buckets; a replayed batch no-ops on the ledger. A build that
-    * crashed between its renames is healed first, as in [[purgeDocs]]. */
+    * their buckets; a replayed batch no-ops on the ledger. */
   def appendToGramIndex(spark: SparkSession, batch: DataFrame, n: Int,
-      indexDir: String): Boolean = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val id = graft.pipeline.AppendCommit.contentId(fingerprintOf(batch))
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, id) { tmp =>
-      gramsOf(batch, n).repartition(col("gb"))
-        .write.partitionBy("gb").parquet(s"$tmp/grams")
-    }
-  }
+      indexDir: String): Boolean =
+    PersistedStore.append(spark, indexDir, batchId(batch))(
+      writeGrams(batch, n, _))
 
   /** RTBF cascade hook: physically remove `docIds`' gram rows from the
     * index files — after which a [[noveltyProbe]] is indistinguishable
@@ -81,19 +71,14 @@ object GramIndex {
     * the deleted rows instead of a corpus rescan). Rewrites touch only
     * files holding the ids ([[graft.pipeline.Maintain.deleteByKey]] —
     * O(hit files), never O(index)); a replayed purge no-ops on the
-    * ledger. Returns gram rows removed. */
+    * ledger (an empty payload: a presence set has no counts to
+    * subtract). Returns gram rows removed. */
   def purgeDocs(spark: SparkSession, indexDir: String,
-      docIds: Seq[Any]): Long = {
-    require(docIds.nonEmpty, "purge needs at least one doc id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val id = "purge-" + graft.pipeline.AppendCommit.contentId(
-      docIds.map(String.valueOf).sorted.mkString("\n"))
-    if (graft.pipeline.AppendCommit.isApplied(indexDir, id)) return 0L
-    val removed = graft.pipeline.Maintain.deleteByKey(spark,
-      s"$indexDir/grams", "doc_id", docIds).rowsDeleted
-    graft.pipeline.AppendCommit.markApplied(indexDir, id)
-    removed
-  }
+      docIds: Seq[Any]): Long =
+    PersistedStore.purge(spark, indexDir, docIds, "doc_id", "grams")("")
+
+  private[graft] val family: PersistedStore.Family =
+    (spark, dir, keys, _) => purgeDocs(spark, dir, keys)
 
   /** Streaming maintenance: a `foreachBatch` sink appending each
     * micro-batch's grams. The replay unit is the batch's CONTENT id
@@ -111,7 +96,7 @@ object GramIndex {
     * LEFT SEMI marks seen grams, so index-side duplicates from
     * overlapping batches never multiply probe rows. */
   def noveltyProbe(spark: SparkSession, docs: DataFrame, n: Int,
-      indexDir: String): DataFrame = {
+      indexDir: String): DataFrame = PersistedStore.open(indexDir) {
     val idx = spark.read.parquet(s"$indexDir/grams").select(col("g"))
     val grams = NGrams.nGramRows(docs, n)(ws => concat_ws("|", ws: _*))
       .select(col("doc_id"), col("s").as("g"))

@@ -165,16 +165,6 @@ object Quantize {
   def appendToPqIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
 
-  /** `deleted` supplies the ids' (vec_id, embedding) rows — the store
-    * holds codes only ([[VectorIndex.purge]]). */
-  def purgePqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long =
-    VectorIndex.purge(spark, indexDir, vecIds, deleted)
-
-  def purgeIvfPqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long =
-    VectorIndex.purge(spark, indexDir, vecIds, deleted)
-
   /** ADC probe of a persisted PQ index. `queries` (q_id, q_emb) is a
     * BOUNDED batch (collected to build the per-query lookup tables —
     * nQueries × m × k doubles, KBs; same driver-side contract as the
@@ -189,7 +179,8 @@ object Quantize {
   def probePqIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, e: DataFrame, k: Int = 5,
       rerankN: Int = 64): DataFrame = {
-    val cb = readCodebook(spark, indexDir)
+    val cb = graft.pipeline.PersistedStore.open(indexDir)(
+      readCodebook(spark, indexDir))
     val m = cb.length
     val sub = cb(0)(0).length
     val qRows = queries.select(col("q_id"),
@@ -700,11 +691,11 @@ object Quantize {
   def sqClampRate(spark: SparkSession, indexDir: String,
       batch: DataFrame): Double = {
     // heal a crashed build swap before reading store files — the drift
-    // check runs ahead of the append's own recover, and wedging every
+    // check runs ahead of the append's own heal, and wedging every
     // future sync on a half-swapped store would be the exact failure
     // mode the sweep-quarantine work exists to prevent
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val (mns, scales) = readSqParams(spark, indexDir)
+    val (mns, scales) = graft.pipeline.PersistedStore.open(indexDir)(
+      readSqParams(spark, indexDir))
     // clamped = the ENCODE saturates: the test runs the IDENTICAL
     // arithmetic as [[sqEncodeCol]] — floor((x-mn)/scale + 0.5)
     // outside [0,255], same operand order, same doubles — so the rate
@@ -735,10 +726,6 @@ object Quantize {
     * code 0/255) — the periodic retrain-rebuild refreshes both. */
   def appendToIvfSqIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
-
-  def purgeIvfSqIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any], deleted: DataFrame): Long =
-    VectorIndex.purge(spark, indexDir, vecIds, deleted)
 
   /** IVF-SQ8 probe: queries route to their `nprobe` best cells (static
     * partition IN-filter, the [[Similarity.probeIvfIndex]] contract);

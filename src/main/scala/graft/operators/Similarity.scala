@@ -311,27 +311,24 @@ object Similarity {
   /** The build-time mean top-1 affinity of an IVF-family index — None
     * for stores built before the drift instrument existed (the
     * maintenance loop then skips the check rather than guessing). */
-  def driftBase(spark: SparkSession, indexDir: String): Option[Double] = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val fs = graft.pipeline.Fs.of(indexDir, spark)
-    val p = new org.apache.hadoop.fs.Path(indexDir, DriftBaseFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toDouble)
-      finally in.close()
+  def driftBase(spark: SparkSession, indexDir: String): Option[Double] =
+    graft.pipeline.PersistedStore.open(indexDir) {
+      val fs = graft.pipeline.Fs.of(indexDir, spark)
+      val p = new org.apache.hadoop.fs.Path(indexDir, DriftBaseFile)
+      if (!fs.exists(p)) None
+      else {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(), "UTF-8").trim.toDouble)
+        finally in.close()
+      }
     }
-  }
 
   /** Mean top-1 affinity of an append batch under the index's FROZEN
     * centroids — one aggregate over the batch (the centroids are
     * nlist-bounded plan literals). */
   def batchAffinity(spark: SparkSession, indexDir: String,
-      batch: DataFrame): Double = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val centroids = VectorIndex.readCentroids(spark, indexDir)
-    meanTopAffinity(batch, centroids)
-  }
+      batch: DataFrame): Double =
+    meanTopAffinity(batch, VectorIndex.readCentroids(spark, indexDir))
 
   /** One-shot IVF (train + assign + probe in a single plan) — the spec
     * harness's shape for small fixtures. Production uses the build/probe
@@ -393,50 +390,11 @@ object Similarity {
   // (routed, Raw codec: the cells hold the original embeddings).
   // ---------------------------------------------------------------------
 
-  /** Order-independent corpus fingerprint: one distributed pass, O(1)
-    * driver result — the rebuild trigger at any corpus size. */
-  def corpusFingerprint(e: DataFrame): String = {
-    // decimal accumulator: a long sum of 2^63-magnitude hashes overflows
-    // (an error under ANSI mode); decimal(38,0) holds ~10^12 rows' worth
-    val r = e.agg(
-      count(lit(1)).as("n"),
-      sum(xxhash64(col("vec_id"), col("embedding")).cast("decimal(38,0)"))
-        .as("h")).head()
-    s"${r.getLong(0)}|${if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString}"
-  }
-
-  /** The corpus fingerprint as an OBSERVED sidecar of the caller's
-    * corpus write — the [[observeTopAffinity]] trick applied once more,
-    * cutting every index build's dedicated fingerprint pass: the fold
-    * (count + decimal sum of per-row xxhash64) is order-insensitive and
-    * exact, so the observed value is BIT-IDENTICAL to what
-    * [[corpusFingerprint]] computes in its own pass (spec-pinned).
-    * Observe sits on the pre-explode projection, so each corpus row
-    * hashes once, not `replicas` times. */
-  private[operators] def observeFingerprint(e: DataFrame)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = new org.apache.spark.sql.Observation()
-    (e.observe(obs, count(lit(1)).as("n"),
-      sum(xxhash64(col("vec_id"), col("embedding"))
-        .cast("decimal(38,0)")).as("h")), obs)
-  }
-
-  /** Read back the observed fingerprint after the observed plan's
-    * action completed — same `n|h` form as [[corpusFingerprint]]
-    * (empty corpus → "0|0"). */
-  private[operators] def observedFingerprint(
-      obs: org.apache.spark.sql.Observation): String = {
-    val m = obs.get
-    val n = m.getOrElse("n", 0L) match {
-      case l: java.lang.Long => l.longValue
-      case _ => 0L
-    }
-    val h = m.getOrElse("h", null) match {
-      case d: java.math.BigDecimal => d.toBigInteger.toString
-      case _ => "0"
-    }
-    s"$n|$h"
-  }
+  /** Order-independent corpus fingerprint `n|h` over (vec_id,
+    * embedding): one distributed pass, O(1) driver result — the rebuild
+    * trigger at any corpus size. */
+  def corpusFingerprint(e: DataFrame): String =
+    graft.pipeline.PersistedStore.fingerprint(e, "vec_id", "embedding")
 
   def buildIvfIndex(spark: SparkSession, e: DataFrame, indexDir: String,
       nlist: Int = 16, replicas: Int = 2,
@@ -453,13 +411,6 @@ object Similarity {
     * only the affected `cells/cell=N/` dirs ([[VectorIndex.append]]). */
   def appendToIvfIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = VectorIndex.append(spark, batch, indexDir)
-
-  /** RTBF cascade hook: the stored rows carry the original embeddings,
-    * so the negative fingerprint comes from the index itself
-    * ([[VectorIndex.purge]]). Returns cell rows removed. */
-  def purgeIvfIndex(spark: SparkSession, indexDir: String,
-      vecIds: Seq[Any]): Long =
-    VectorIndex.purge(spark, indexDir, vecIds, spark.emptyDataFrame)
 
   private def ivf(nlist: Int, replicas: Int): VectorIndex.Spec =
     VectorIndex.Spec(VectorIndex.Raw,

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.{AppendCommit, Maintain, PersistedStore}
+import graft.pipeline.PersistedStore.{fingerprintCols, fingerprintOf}
+
 /** [EXT] Persisted inverted term index with O(batch) append — the lexical
   * sibling of the persisted MinHash (Dedup) and IVF (Similarity) indexes,
   * under the same [[graft.pipeline.AppendCommit]] protocol. A BM25 probe
@@ -44,113 +47,95 @@ object TermIndex {
   }
 
   /** Batch fingerprint ("n|h", the append idempotency key) AND additive
-    * corpus stats (n_docs, sum_dl) from ONE scan+tokenize pass — they
-    * were two separate aggregation jobs over the same docs (guide §1.2:
-    * don't pay a corpus pass per scalar). Formats unchanged. */
-  private def fpAndStats(docs: DataFrame): (String, Long, Long) = {
-    val r = docs.agg(count(lit(1)).as("n"),
-      sum(xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)"))
-        .as("h"),
-      sum(size(TextAnalysis.words(col("text"))).cast("long")).as("sdl"))
-      .head()
-    val n = r.getLong(0)
-    val fp = s"$n|${if (r.isNullAt(1)) "0"
-      else r.getDecimal(1).toBigInteger.toString}"
-    (fp, n, if (r.isNullAt(2)) 0L else r.getLong(2))
+    * corpus stats (n_docs, sum_dl) from ONE scan+tokenize pass (guide
+    * §1.2: don't pay a corpus pass per scalar). */
+  private def fpAndStats(docs: DataFrame): (String, String) = {
+    val Seq(n, h) = fingerprintCols(col("doc_id"), col("text"))
+    val r = docs.agg(n, h,
+      sum(size(TextAnalysis.words(col("text"))).cast("long"))).head()
+    (fingerprintOf(r), s"${r.getLong(0)}:${if (r.isNullAt(2)) 0L
+      else r.getLong(2)}")
   }
+
+  private def writePostings(docs: DataFrame, tmp: String): Unit =
+    postingsOf(docs).repartition(col("tb"))
+      .write.partitionBy("tb").parquet(s"$tmp/postings")
 
   /** Full rebuild: postings tree + base ledger entry, swapped in
     * atomically. */
   def buildTermIndex(spark: SparkSession, docs: DataFrame,
       indexDir: String): Unit = {
-    val (fp, n, sumDl) = fpAndStats(docs)
-    val id = graft.pipeline.AppendCommit.contentId(fp)
-    graft.pipeline.SafeSwap.replace(indexDir) { tmp =>
-      postingsOf(docs).repartition(col("tb"))
-        .write.partitionBy("tb").parquet(s"$tmp/postings")
-      graft.pipeline.AppendCommit.markApplied(tmp, id, s"$n:$sumDl")
-    }
+    val (fp, stats) = fpAndStats(docs)
+    PersistedStore.build(indexDir, Seq(AppendCommit.contentId(fp) -> stats))(
+      writePostings(docs, _))
   }
 
   /** O(batch) append: only the batch's own postings files move into the
     * live tree; untouched index files keep physical identity. Replay of
-    * an applied batch is a ledger-probe no-op. A build that crashed
-    * between its renames is healed first, as in [[purgeDocs]]. */
+    * an applied batch is a ledger-probe no-op. */
   def appendToTermIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = {
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val (fp, n, sumDl) = fpAndStats(batch)
-    val id = graft.pipeline.AppendCommit.contentId(fp)
-    graft.pipeline.AppendCommit.appendBatch(spark, indexDir, id,
-        s"$n:$sumDl") { tmp =>
-      postingsOf(batch).repartition(col("tb"))
-        .write.partitionBy("tb").parquet(s"$tmp/postings")
-    }
+    val (fp, stats) = fpAndStats(batch)
+    PersistedStore.append(spark, indexDir, AppendCommit.contentId(fp),
+      stats)(writePostings(batch, _))
   }
 
   /** RTBF cascade hook: physically remove `docIds`' postings from the
     * index files and SUBTRACT their corpus-stats contribution (n_docs,
     * Σdl) via a negative ledger entry — so a post-purge probe scores
     * BM25 exactly as a from-scratch build over the filtered corpus
-    * would. The negative stats are computed from the stored postings
-    * BEFORE the rows leave and staged as an intent
-    * ([[graft.pipeline.AppendCommit.runWithIntent]]): a crash-retry
-    * reuses the staged numbers instead of recomputing zeros over the
-    * already-purged store. Rewrites touch only files holding the docs
-    * ([[graft.pipeline.Maintain.deleteByKey]] — O(hit files), never
-    * O(index)). Returns posting rows removed. */
+    * would. The negative stats come from the stored postings BEFORE the
+    * rows leave ([[PersistedStore.purge]]'s intent). Returns posting
+    * rows removed. */
   def purgeDocs(spark: SparkSession, indexDir: String,
-      docIds: Seq[Any]): Long = {
-    require(docIds.nonEmpty, "purge needs at least one doc id")
-    graft.pipeline.SafeSwap.recover(indexDir)
-    val id = "purge-" + graft.pipeline.AppendCommit.contentId(
-      docIds.map(String.valueOf).sorted.mkString("\n"))
-    var removed = 0L
-    graft.pipeline.AppendCommit.runWithIntent(indexDir, id) {
-      val r = graft.pipeline.Maintain.matchingKeys(
+      docIds: Seq[Any]): Long =
+    PersistedStore.purge(spark, indexDir, docIds, "doc_id", "postings") {
+      val r = Maintain.matchingKeys(
           spark.read.parquet(s"$indexDir/postings"), "doc_id", docIds)
         .select(col("doc_id"), col("dl")).distinct()
         .agg(count(lit(1)), sum(col("dl"))).head()
-      val n = r.getLong(0)
-      val dl = if (r.isNullAt(1)) 0L else r.getLong(1)
-      s"${-n}:${-dl}"
-    } { _ =>
-      removed = graft.pipeline.Maintain.deleteByKey(spark,
-        s"$indexDir/postings", "doc_id", docIds).rowsDeleted
+      s"${-r.getLong(0)}:${if (r.isNullAt(1)) 0L else -r.getLong(1)}"
     }
-    removed
-  }
+
+  private[graft] val family: PersistedStore.Family =
+    (spark, dir, keys, _) => purgeDocs(spark, dir, keys)
+
+  /** (n_docs, Σdl) of the indexed corpus: the ledger's stats payloads,
+    * summed. */
+  private[graft] def corpusStats(indexDir: String): (Long, Long) =
+    AppendCommit.appliedEntries(indexDir)
+      .map(_._2.split(":") match { case Array(a, c) => (a.toLong, c.toLong) })
+      .foldLeft((0L, 0L)) { case ((an, ad), (bn, bd)) => (an + bn, ad + bd) }
 
   /** BM25 top-k through the index: postings pruned to the query terms'
     * buckets, stats from the ledger. Matches [[TextAnalysis.bm25TopK]]
     * over the same corpus bit-exactly. */
   def probeTermIndex(spark: SparkSession, indexDir: String,
       terms: Seq[String], k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "probe needs at least one query term")
-    // term→bucket via the engine's own xxhash64 (one |terms|-row job, no
-    // host-side hash reimplementation to drift)
-    import scala.jdk.CollectionConverters._
-    val tbs = spark.createDataFrame(
-        terms.map(Row(_)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("tok",
-            org.apache.spark.sql.types.StringType))))
-      .select(pmod(xxhash64(col("tok")), lit(NBuckets.toLong)).cast("int"))
-      .collect().map(_.getInt(0)).distinct.toSeq
-    val (n, sumDl) = graft.pipeline.AppendCommit.appliedEntries(indexDir)
-      .map(_._2.split(":") match { case Array(a, c) => (a.toLong, c.toLong) })
-      .foldLeft((0L, 0L)) { case ((an, ad), (bn, bd)) => (an + bn, ad + bd) }
-    require(n > 0, s"term index at $indexDir is empty")
-    val stats = spark.range(1).select(
-      lit(n).cast("double").as("n_docs"),
-      (lit(sumDl).cast("double") / lit(n).cast("double")).as("avgdl"))
-    val tf = spark.read.parquet(s"$indexDir/postings")
-      .filter(col("tb").isin(tbs: _*) && col("tok").isInCollection(terms))
-      .select(col("doc_id"), col("dl").cast("double").as("dl"),
-        col("tok"), col("tf").cast("double").as("tf"))
-    TextAnalysis.bm25FromTf(tf, stats, terms, k, k1, b)
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    PersistedStore.open(indexDir) {
+      require(terms.nonEmpty, "probe needs at least one query term")
+      // term→bucket via the engine's own xxhash64 (one |terms|-row job, no
+      // host-side hash reimplementation to drift)
+      import scala.jdk.CollectionConverters._
+      val tbs = spark.createDataFrame(
+          terms.map(Row(_)).asJava,
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("tok",
+              org.apache.spark.sql.types.StringType))))
+        .select(pmod(xxhash64(col("tok")), lit(NBuckets.toLong)).cast("int"))
+        .collect().map(_.getInt(0)).distinct.toSeq
+      val (n, sumDl) = corpusStats(indexDir)
+      require(n > 0, s"term index at $indexDir is empty")
+      val stats = spark.range(1).select(
+        lit(n).cast("double").as("n_docs"),
+        (lit(sumDl).cast("double") / lit(n).cast("double")).as("avgdl"))
+      val tf = spark.read.parquet(s"$indexDir/postings")
+        .filter(col("tb").isin(tbs: _*) && col("tok").isInCollection(terms))
+        .select(col("doc_id"), col("dl").cast("double").as("dl"),
+          col("tok"), col("tf").cast("double").as("tf"))
+      TextAnalysis.bm25FromTf(tf, stats, terms, k, k1, b)
+    }
 
   // ---------------------------------------------------------------------
   // q129_term_index — the gate assembles the index through BOTH write

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{AppendCommit, Maintain, SafeSwap}
+import graft.pipeline.{AppendCommit, Maintain, PersistedStore}
 
 /** The one persisted lifecycle behind every vector index — IVF
   * ([[Similarity]]), PQ, IVFADC and IVF-SQ8 ([[Quantize]]). A [[Spec]]
@@ -60,8 +60,9 @@ object VectorIndex {
         case Sq8 => "|sq=8"
       })
 
-    private[operators] def rowsDir(dir: String): String =
-      if (routing.isDefined) s"$dir/cells" else s"$dir/codes"
+    /** The stored rows' dir under the index. */
+    private[operators] def rowsDir: String =
+      if (routing.isDefined) "cells" else "codes"
   }
 
   object Spec {
@@ -116,11 +117,14 @@ object VectorIndex {
       Sq8Model(mns, scales)
   }
 
-  /** The index's centroids, ordered by cell — nlist × dim doubles. */
+  /** The index's centroids, ordered by cell — nlist × dim doubles. The
+    * first store read of every routed probe, so it heals a crashed
+    * build swap first. */
   private[operators] def readCentroids(spark: SparkSession,
-      dir: String): Array[Array[Double]] =
+      dir: String): Array[Array[Double]] = PersistedStore.open(dir) {
     spark.read.parquet(s"$dir/centroids").orderBy(col("cell")).collect()
       .map(_.getSeq[Double](1).toArray)
+  }
 
   /** One projection writes the rows: `vec_id`, the codec's stored
     * column, and — routed — the `replicas` best cells, exploded into
@@ -140,17 +144,14 @@ object VectorIndex {
 
   private val MarkerFile = "_corpus_fingerprint"
 
-  private def hasMarker(spark: SparkSession, dir: String): Boolean =
-    graft.pipeline.Fs.of(dir, spark)
-      .exists(new org.apache.hadoop.fs.Path(dir, MarkerFile))
-
   /** The spec of the index at `dir` — its params are FROZEN at build,
     * so appends and purges follow the store, not the caller. */
   private def storedSpec(spark: SparkSession, dir: String): Spec = {
-    require(hasMarker(spark, dir),
+    val fs = graft.pipeline.Fs.of(dir, spark)
+    val marker = new org.apache.hadoop.fs.Path(dir, MarkerFile)
+    require(fs.exists(marker),
       s"no vector index at $dir (missing fingerprint marker)")
-    val in = graft.pipeline.Fs.of(dir, spark).open(
-      new org.apache.hadoop.fs.Path(dir, MarkerFile))
+    val in = fs.open(marker)
     Spec.parse(try new String(in.readAllBytes(), "UTF-8").trim
       finally in.close())
   }
@@ -167,12 +168,13 @@ object VectorIndex {
     val cells = spec.routing.map(r =>
       (Similarity.trainCentroids(e, r.nlist), r.replicas))
     val model = train(spec.codec, e)
-    val (withFp, obsFp) = Similarity.observeFingerprint(e)
+    val obsFp = new org.apache.spark.sql.Observation()
+    val Seq(n, h) =
+      PersistedStore.fingerprintCols(col("vec_id"), col("embedding"))
+    val withFp = e.observe(obsFp, n, h)
     val affinity = cells.map(c => Similarity.observeTopAffinity(withFp, c._1))
-    SafeSwap.replace(dir) { tmp =>
+    PersistedStore.build(dir, ledger) { tmp =>
       import spark.implicits._
-      ledger.foreach { case (id, payload) =>
-        AppendCommit.markApplied(tmp, id, payload) }
       cells.foreach { case (centroids, _) =>
         centroids.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }
           .toDF("cell", "centroid").coalesce(1)
@@ -186,10 +188,21 @@ object VectorIndex {
       }
       val os = graft.pipeline.Fs.of(tmp, spark).create(
         new org.apache.hadoop.fs.Path(tmp, MarkerFile), true)
-      try os.write(spec.marker(Similarity.observedFingerprint(obsFp))
+      try os.write(spec.marker(observedFingerprint(obsFp))
         .getBytes("UTF-8"))
       finally os.close()
     }
+  }
+
+  /** Read back the observed `n|h` after the observed plan's action
+    * completed — what [[Similarity.corpusFingerprint]] computes in its own
+    * pass (the fold is exact and order-insensitive; spec-pinned). */
+  private def observedFingerprint(
+      obs: org.apache.spark.sql.Observation): String = {
+    val m = obs.get
+    s"${m.getOrElse("n", 0L)}|${m.get("h").collect {
+      case d: java.math.BigDecimal => d.toBigInteger.toString
+    }.getOrElse("0")}"
   }
 
   /** Build-if-stale: rebuilds when the corpus content or the spec
@@ -198,8 +211,7 @@ object VectorIndex {
     * build swap heals first, so it never reads as a missing index.
     * Returns true when a rebuild ran. */
   def ensure(spark: SparkSession, spec: Spec, e: DataFrame,
-      dir: String): Boolean = {
-    SafeSwap.recover(dir)
+      dir: String): Boolean = PersistedStore.open(dir) {
     val expected = spec.marker(Similarity.corpusFingerprint(e))
     if (AppendCommit.cumulativeFingerprint(dir).contains(expected)) false
     else { build(spark, spec, e, dir); true }
@@ -215,16 +227,15 @@ object VectorIndex {
     * duplication, and the fingerprint advances exactly once: a later
     * [[ensure]] over the union sees a match and does not rebuild. */
   def append(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    SafeSwap.recover(dir)
-    val spec = storedSpec(spark, dir)
     // one pass over the batch: idempotency key AND ledger payload
     val fpBatch = Similarity.corpusFingerprint(batch)
-    val batchId = AppendCommit.contentId(fpBatch)
-    if (AppendCommit.isApplied(dir, batchId)) return
-    val cells = spec.routing.map(r => (readCentroids(spark, dir), r.replicas))
-    val model = readModel(spark, spec.codec, dir)
-    AppendCommit.appendBatch(spark, dir, batchId, fpBatch) { tmp =>
-      writeRows(batch, cells, model, tmp)
+    PersistedStore.append(spark, dir, AppendCommit.contentId(fpBatch),
+        fpBatch) {
+      val spec = storedSpec(spark, dir)
+      val cells = spec.routing.map(r =>
+        (readCentroids(spark, dir), r.replicas))
+      val model = readModel(spark, spec.codec, dir)
+      writeRows(batch, cells, model, _)
     }
   }
 
@@ -232,44 +243,31 @@ object VectorIndex {
     * and codes are both decodable content) and SUBTRACT their
     * contribution from the cumulative fingerprint through a negative
     * `-n|-h` ledger entry, so an [[ensure]] over the filtered corpus
-    * still matches and no probe can reach a purged vector. The negative
-    * fingerprint is staged as an intent
-    * ([[graft.pipeline.AppendCommit.runWithIntent]]), so a crash-retry
-    * reuses the pre-purge numbers. A [[Raw]] store computes it from its
-    * own rows (replicas collapsed); a code store holds no embeddings,
-    * so `deleted` must supply the ids' (vec_id, embedding) rows,
-    * captured before the corpus's own purge — on a retry the staged
-    * intent wins and `deleted` may be empty. Returns stored rows removed
-    * (≈ replicas × vecs present); centroids and model stay frozen. */
+    * still matches and no probe can reach a purged vector. A [[Raw]]
+    * store computes it from its own rows (replicas collapsed); a code
+    * store holds no embeddings, so `deleted` must supply the ids'
+    * (vec_id, embedding) rows, captured before the corpus's own purge —
+    * on a retry the staged intent wins and `deleted` is never read.
+    * Returns stored rows removed (≈ replicas × vecs present); centroids
+    * and model stay frozen. */
   def purge(spark: SparkSession, dir: String, vecIds: Seq[Any],
-      deleted: => DataFrame): Long = {
-    require(vecIds.nonEmpty, "purge needs at least one vec id")
-    SafeSwap.recover(dir)
+      deleted: => DataFrame): Long = PersistedStore.open(dir) {
     val spec = storedSpec(spark, dir)
-    val rows = spec.rowsDir(dir)
-    val id = "purge-" + AppendCommit.contentId(
-      vecIds.map(String.valueOf).sorted.mkString("\n"))
-    var removed = 0L
-    AppendCommit.runWithIntent(dir, id) {
+    val rows = spec.rowsDir
+    PersistedStore.purge(spark, dir, vecIds, "vec_id", rows) {
       val gone = spec.codec match {
-        case Raw => Maintain.matchingKeys(spark.read.parquet(rows),
-          "vec_id", vecIds)
+        case Raw => Maintain.matchingKeys(
+          spark.read.parquet(s"$dir/$rows"), "vec_id", vecIds)
         case _ => deleted
       }
-      val r = gone.select(col("vec_id"), col("embedding")).distinct()
-        .agg(count(lit(1)).as("n"),
-          sum(xxhash64(col("vec_id"), col("embedding"))
-            .cast("decimal(38,0)")).as("h")).head()
-      val n = r.getLong(0)
-      val h = if (r.isNullAt(1)) BigInt(0)
-        else BigInt(r.getDecimal(1).toBigInteger)
-      s"${-n}|${-h}"
-    } { _ =>
-      removed = Maintain.deleteByKey(spark, rows, "vec_id", vecIds)
-        .rowsDeleted
+      Similarity.corpusFingerprint(
+          gone.select(col("vec_id"), col("embedding")).distinct())
+        .split('|').map(x => (-BigInt(x)).toString).mkString("|")
     }
-    removed
   }
+
+  private[graft] val family: PersistedStore.Family =
+    (spark, dir, keys, deleted) => purge(spark, dir, keys, deleted())
 
   /** Cell-file compaction of a routed index: every append lands one
     * small file set per affected cell, so daily batches fragment the
@@ -287,8 +285,9 @@ object VectorIndex {
     * double-counting the partial portion. */
   def compact(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024, maxFiles: Int = 4)
-      : Maintain.CompactSummary =
+      : Maintain.CompactSummary = PersistedStore.open(dir) {
     Maintain.compactPartitions(spark, s"$dir/cells", targetBytes, maxFiles)
+  }
 
   /** Streaming maintenance (`foreachBatch`): the first non-empty
     * micro-batch bootstraps — the model trained on it, its content id
@@ -299,21 +298,15 @@ object VectorIndex {
     * with its engine batch id (drift evidence). */
   def foreachBatchSink(spec: Spec, dir: String,
       beforeAppend: (DataFrame, Long) => Unit = (_, _) => ())
-      : (DataFrame, Long) => Unit = { (batch, batchId) =>
-    val spark = batch.sparkSession
-    if (!batch.isEmpty) {
-      SafeSwap.recover(dir)
-      if (!hasMarker(spark, dir)) {
-        val b = batch.localCheckpoint() // fingerprint + build consume it
-        build(spark, spec, b, dir, Seq(
-          AppendCommit.contentId(Similarity.corpusFingerprint(b)) -> "0|0"))
-      } else {
-        beforeAppend(batch, batchId)
-        append(spark, batch, dir)
-      }
+      : (DataFrame, Long) => Unit =
+    PersistedStore.foreachBatchSink(dir, MarkerFile) { (batch, _) =>
+      val b = batch.localCheckpoint() // fingerprint + build consume it
+      build(b.sparkSession, spec, b, dir,
+        PersistedStore.founding(Similarity.corpusFingerprint(b)))
+    } { (batch, batchId) =>
+      beforeAppend(batch, batchId)
+      append(batch.sparkSession, batch, dir)
     }
-    ()
-  }
 
   /** Per-process base for the gate queries' indexes: a shared tmp
     * location keyed only by data dir would race across concurrent

@@ -124,6 +124,12 @@ object AppendCommit {
       .digest(fingerprint.getBytes("UTF-8")).map("%02x".format(_))
       .mkString.take(16)
 
+  /** The ledger id of a purge (or rollup retraction) of `keys` —
+    * order-insensitive, so a replayed request under any key order maps to
+    * the same entry. Ledgers on disk hold these ids: the form is fixed. */
+  def purgeId(keys: Seq[Any]): String =
+    "purge-" + contentId(keys.map(String.valueOf).sorted.mkString("\n"))
+
   /** Percent-codec for USER-CONTROLLED strings riding newline-delimited
     * control files (ledger payloads, intents, journals, listings).
     * Raw filenames come from upstream manifests and forget keys from
@@ -483,7 +489,7 @@ object AppendCommit {
     // writes must call [[clearCrashedAttempt]] before PLANNING that
     // read — spark.read captures the file listing eagerly, so files
     // deleted here after planning fail the stage with FILE_NOT_EXIST
-    // (appendToMinhashIndex's bucket_sizes read is the case in point).
+    // ([[PersistedStore.append]] does, for every persisted store).
     deleteTagged(fs, new Path(root), batchId)
     SafeSwap.replace(stagingPath(root, batchId))(stage)
     moveTagged(fs, staging, new Path(root), batchId)

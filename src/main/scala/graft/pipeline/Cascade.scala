@@ -103,27 +103,38 @@ object Cascade {
     case Target.Cms(d, _, _) => s"cms:$d"
   }
 
+  /** A persisted-store target: its dir and family ([[PersistedStore]]). */
+  private object Persisted {
+    import graft.operators.{Dedup, GramIndex, TermIndex, VectorIndex}
+    def unapply(t: Target): Option[(String, PersistedStore.Family)] =
+      t match {
+        case Target.Minhash(d) => Some(d -> Dedup.minhashFamily)
+        case Target.Term(d) => Some(d -> TermIndex.family)
+        case Target.Gram(d) => Some(d -> GramIndex.family)
+        case Target.Ivf(d) => Some(d -> VectorIndex.family)
+        case Target.Pq(d) => Some(d -> VectorIndex.family)
+        case Target.IvfPq(d) => Some(d -> VectorIndex.family)
+        case _ => None
+      }
+  }
+
   /** Cascade-delete `keys` of column `c` from the corpus at `tableDir`
     * and from every maintained store in `targets`. `embeddingCol` is
-    * read from the corpus for the codes-only vector stores (ignored
-    * when no Pq/IvfPq target is present). */
+    * read from the corpus only when a store's purge asks for the
+    * deleted rows — a codes-only vector store, which holds no
+    * embeddings to fingerprint. */
   def deleteByKey(spark: SparkSession, tableDir: String, c: String,
       keys: Seq[Any], targets: Seq[Target],
       embeddingCol: String = "embedding"): Summary = {
     import Target._
     require(keys.nonEmpty, "need at least one key to cascade-delete")
-    val needEmb = targets.exists {
-      case Pq(_) | IvfPq(_) => true
-      case _ => false
-    }
-    // captured BEFORE any destruction; on a converging re-run after the
-    // table delete this is legitimately empty — the purge hooks' staged
-    // intents carry the first run's numbers
-    val deletedRows =
-      if (!needEmb) spark.emptyDataFrame
-      else Maintain.matchingKeys(
-          Manifest.readSnapshot(spark, tableDir), c, keys)
-        .select(col(c).as("vec_id"), col(embeddingCol).as("embedding"))
+    // read BEFORE any destruction (every purge runs before the table
+    // delete); on a converging re-run after the table delete this is
+    // legitimately empty — the purge hooks' staged intents carry the
+    // first run's numbers
+    lazy val deletedRows = Maintain.matchingKeys(
+        Manifest.readSnapshot(spark, tableDir), c, keys)
+      .select(col(c).as("vec_id"), col(embeddingCol).as("embedding"))
     val needFull = targets.exists {
       case RollupStore(_, spec) => Rollup.subtractable(spec)
       case Cms(_, _, _) => true
@@ -133,31 +144,15 @@ object Cascade {
       if (!needFull) spark.emptyDataFrame
       else Maintain.matchingKeys(
         Manifest.readSnapshot(spark, tableDir), c, keys)
-    val retractId = "purge-" + AppendCommit.contentId(
-      keys.map(String.valueOf).sorted.mkString("\n"))
+    val retractId = AppendCommit.purgeId(keys)
     val purged = scala.collection.mutable.Map.empty[String, Long]
     val retracted = scala.collection.mutable.Map.empty[String, Long]
     val invalidated = scala.collection.mutable.ArrayBuffer.empty[String]
     targets.foreach { tg =>
       tg match {
-        case Minhash(dir) =>
-          purged(label(tg)) = graft.operators.Dedup
-            .purgeMinhashIndex(spark, dir, keys)
-        case Term(dir) =>
-          purged(label(tg)) = graft.operators.TermIndex
-            .purgeDocs(spark, dir, keys)
-        case Ivf(dir) =>
-          purged(label(tg)) = graft.operators.Similarity
-            .purgeIvfIndex(spark, dir, keys)
-        case Pq(dir) =>
-          purged(label(tg)) = graft.operators.Quantize
-            .purgePqIndex(spark, dir, keys, deletedRows)
-        case IvfPq(dir) =>
-          purged(label(tg)) = graft.operators.Quantize
-            .purgeIvfPqIndex(spark, dir, keys, deletedRows)
-        case Gram(dir) =>
-          purged(label(tg)) = graft.operators.GramIndex
-            .purgeDocs(spark, dir, keys)
+        case Persisted(dir, family) =>
+          purged(label(tg)) =
+            family.purge(spark, dir, keys, () => deletedRows)
         case Comp(dir) =>
           purged(label(tg)) = graft.operators.Components
             .purgeNodes(spark, dir, keys)
@@ -173,7 +168,7 @@ object Cascade {
           // convergent
           retracted(label(tg)) =
             Rollup.retract(spark, dir, deletedFull, spec, retractId)
-        case View(_, _) | RollupStore(_, _) => () // after the table delete
+        case _ => () // views, invalidated rollups: after the table delete
       }
     }
     val table = Maintain.deleteByKey(spark, tableDir, c, keys)
@@ -256,9 +251,7 @@ object Cascade {
     val delDoc = col("doc_id") % 7 === 3
     val delVec = col("vec_id") % 7 === 3
     def n(df: DataFrame): Long = df.count()
-    val (statsN, statsDl) = AppendCommit.appliedEntries(term)
-      .map(_._2.split(":") match { case Array(a, c) => (a.toLong, c.toLong) })
-      .foldLeft((0L, 0L)) { case ((an, ad), (bn, bd)) => (an + bn, ad + bd) }
+    val (statsN, statsDl) = graft.operators.TermIndex.corpusStats(term)
     // probe the IVF index with the PURGED vectors' own embeddings (from
     // the untouched source table — a purged vector's nearest neighbor
     // would be itself at cosine 1.0): any hit on a purged id is a leak

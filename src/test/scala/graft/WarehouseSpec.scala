@@ -8,7 +8,7 @@ import graft.pipeline.Sync.ManifestEntry
 /** End-to-end "reference user" scenario: sync a two-table extract, then run
   * analyst SQL (a join + aggregate) against the catalog — the full
   * migration surface in one test. */
-class WarehouseSpec extends SparkSpec {
+class WarehouseSpec extends WarehouseSessionSpec {
 
   test("sync then analyst SQL across synced tables") {
     val src = Files.createTempDirectory("wh_src")
@@ -1302,6 +1302,31 @@ class WarehouseSpec extends SparkSpec {
     // stable under further syncs: quarantined files stay out of the way
     wh.sync(m, schema)
     assert(names().contains("failed_req_badcol"))
+  }
+
+  test("a forget heals a pack store whose build crashed mid-swap, then " +
+      "purges it") {
+    val src = Files.createTempDirectory("wh_pkc_src")
+    val f = src.resolve("d1.tsv")
+    Files.writeString(f, "1\ta b c\n2\td e f g\n")
+    val m = Seq(ManifestEntry("docs", "d1.tsv", f.toUri.toString))
+    val schema = Seq(CDTable("docs", None, Seq(
+      CDColumn("doc_id", "bigint"), CDColumn("body", "text"))))
+    val whDir = Files.createTempDirectory("wh_pkc_root")
+    val wh = new Warehouse(spark, Warehouse.Config(
+      whDir.toUri.toString.stripSuffix("/"), db = "cd_whpc",
+      parallelism = 2, maintainedPacks =
+        Seq(Warehouse.PackDef("train", "docs", "doc_id", "body",
+          budget = 8L))))
+    wh.sync(m, schema)
+    // the crash point: the live store renamed aside, swap-in never ran
+    val store = whDir.resolve("_maintained")
+    assert(store.resolve("pack_train").toFile
+      .renameTo(store.resolve(".pack_train.__old").toFile))
+    val sum = wh.forget(schema, "docs", "doc_id", Seq(2L))
+    assert(sum.purged.get("pack_train").contains(1L), s"$sum")
+    assert(wh.packOf("train").select("doc_id").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("pack-store forget (default, placement-preserving): deleted " +

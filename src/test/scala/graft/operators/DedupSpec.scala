@@ -681,4 +681,19 @@ class DedupSpec extends SparkSpec {
     assert(sh == Set((5001L, 5002L)),
       s"simhash pairs must be exactly the planted uncapped pair: $sh")
   }
+
+  test("cross-side Jaccard pairs: overlapping sides fail loudly, " +
+      "disjoint sides keep every pair") {
+    import spark.implicits._
+    val text = "alpha beta gamma delta epsilon zeta eta theta"
+    val sh = Dedup.shingleRows(
+      Seq((1L, text), (2L, text), (3L, text)).toDF("doc_id", "text"))
+    val ok = Dedup.crossJaccardPairs(sh, $"doc_id" === 3L)
+      .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(ok.toSet == Set((1L, 3L), (2L, 3L)))
+    // doc 1 on the right side lies below left-side docs 2 and 3
+    val e = intercept[Exception](
+      Dedup.crossJaccardPairs(sh, $"doc_id" === 1L).collect())
+    assert(e.getMessage.contains("right-side id is not above"))
+  }
 }

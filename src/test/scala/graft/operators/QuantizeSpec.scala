@@ -473,7 +473,7 @@ class QuantizeSpec extends SparkSpec {
     // RTBF purge: code rows leave; fingerprint subtracts so ensure over
     // the filtered corpus does NOT rebuild; the probe can't reach them
     val doomed: Seq[Any] = Seq(2L, 3L)
-    val removed = Quantize.purgeIvfSqIndex(spark, idx, doomed,
+    val removed = VectorIndex.purge(spark, idx, doomed,
       df.filter(col("vec_id").isInCollection(doomed)))
     assert(removed > 0L)
     assert(spark.read.parquet(s"$idx/cells")

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.operators.{Dedup, Quantize, Similarity, TermIndex}
+import graft.operators.{Dedup, Quantize, Similarity, TermIndex, VectorIndex}
 import org.apache.spark.sql.functions._
 
 /** RTBF cascade ([[Cascade]]): a key delete must leave every maintained
@@ -88,7 +88,8 @@ class CascadeSpec extends SparkSpec {
     Similarity.buildIvfIndex(spark, emb.filter(col("vec_id") % 2 === 0), idx)
     Similarity.appendToIvfIndex(spark,
       emb.filter(col("vec_id") % 2 === 1), idx)
-    val removed = Similarity.purgeIvfIndex(spark, idx, delDocs)
+    val removed = VectorIndex.purge(spark, idx, delDocs,
+      spark.emptyDataFrame)
     assert(removed > 0L)
     assert(spark.read.parquet(s"$idx/cells")
       .filter(col("vec_id").isInCollection(delDocs)).count() == 0L)
@@ -105,7 +106,8 @@ class CascadeSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(got.intersect(delDocs.map(_.asInstanceOf[Long]).toSet).isEmpty,
       "a purged vector must be unreachable")
-    assert(Similarity.purgeIvfIndex(spark, idx, delDocs) == 0L,
+    assert(VectorIndex.purge(spark, idx, delDocs,
+      spark.emptyDataFrame) == 0L,
       "replayed purge is a no-op")
   }
 
@@ -120,8 +122,8 @@ class CascadeSpec extends SparkSpec {
     Quantize.appendToIvfPqIndex(spark,
       emb.filter(col("vec_id") % 2 === 1), ivfpq)
     val deleted = emb.filter(col("vec_id").isInCollection(delDocs))
-    assert(Quantize.purgePqIndex(spark, pq, delDocs, deleted) > 0L)
-    assert(Quantize.purgeIvfPqIndex(spark, ivfpq, delDocs, deleted) > 0L)
+    assert(VectorIndex.purge(spark, pq, delDocs, deleted) > 0L)
+    assert(VectorIndex.purge(spark, ivfpq, delDocs, deleted) > 0L)
     assert(spark.read.parquet(s"$pq/codes")
       .filter(col("vec_id").isInCollection(delDocs)).count() == 0L)
     assert(spark.read.parquet(s"$ivfpq/cells")
