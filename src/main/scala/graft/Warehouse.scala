@@ -161,6 +161,9 @@ object Warehouse {
       warehouseDir: String,
       db: String = "canvasdata",
       dryRun: Boolean = false,
+      /** fan-out width of a sync: the fetch and stale-delete task
+        * count, and the most catalog upserts, per-table pipelines and
+        * stores of one table that run at once (see [[Warehouse.sync]]) */
       parallelism: Int = 32,
       /** also rewrite synced tables to the splittable Parquet canonical
         * layer (beyond-reference; recommended for analytic workloads) */
@@ -1162,9 +1165,19 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   graft.plans.SkippingFilePrune.register(spark)
   graft.plans.ManifestResolve.register(spark)
 
-  /** One sync run: diff → fetch → stale-delete → catalog upsert (+ optional
-    * canonicalize) → summary notification. Idempotent; re-running
-    * converges. */
+  /** One sync run: diff → fetch → stale-delete → catalog upsert →
+    * forget sweep → per-table refresh → cross-table maintenance →
+    * summary notification. Idempotent; re-running converges.
+    *
+    * Tables are independent between the forget sweep and the cross-table
+    * work, so each runs as one pipeline, concurrently with the others:
+    * canonical refresh → auto-compaction → canonical view → its stores
+    * (rollups, profile and persisted stores, concurrently with each
+    * other) → skip and bloom stats → manifest and snapshot views. Join
+    * views, retention and raw retirement span tables and run after every
+    * pipeline. At most [[Warehouse.Config.parallelism]] tables (and
+    * stores of one table) run at once; a failing pipeline lets the
+    * others finish before its exception reaches the caller. */
   def sync(manifest: Seq[Sync.ManifestEntry],
       schema: Seq[CDTable]): Sync.SyncSummary = {
     // age-retired raw files the upstream manifest still lists must
@@ -1176,51 +1189,28 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       cfg.db, cfg.dryRun, cfg.parallelism, retired)
     // the summary describes the sync — notify unconditionally (the
     // reference publishes to SNS before anything else can fail), even if
-    // the optional canonical refresh below throws
+    // the maintenance below throws
     try {
-      // forget enforcement FIRST: a freshly fetched file re-delivering
-      // forgotten content must purge before the canonical layer or any
-      // maintained store reads it; crashed cascades complete here too
-      if (!cfg.dryRun) sweepForgets(schema)
-      if (cfg.canonicalize && !cfg.dryRun)
-        // incremental: unchanged tables cost one file listing, no rewrite
-        schema.foreach { t =>
-          val spec = cfg.canonicalSpecs
-            .getOrElse(t.tableName, Warehouse.CanonicalSpec())
-          val (path, changed) = Canonicalize.canonicalizeIncremental(
-            spark, cfg.warehouseDir, t,
-            partitionBy = spec.partitionBy, derive = spec.derive,
-            appendable = spec.appendable)
-          // auto-compaction rides the refresh: the append fast path
-          // accretes a few tagged files per sync on the hottest tables
-          // — past the policy bound, out-of-shape leaves rewrite (the
-          // decision is one listing; in-shape leaves keep file
-          // identity). BEFORE skip-stats/manifest maintenance, which
-          // then follow the compacted file set in this same sync.
-          if (spec.compactAtFiles > 0 &&
-              !Canonicalize.isStreamSinkDir(path) &&
-              Fs.of(path, spark).exists(new org.apache.hadoop.fs.Path(path))) {
-            if (graft.pipeline.Manifest.exists(path))
-              // reader-atomic for manifest-managed tables: one
-              // manifest generation swaps every compacted partition's
-              // file set together; root markers are untouched
-              graft.pipeline.Maintain.compactPartitions(spark, path,
-                spec.compactTargetBytes, spec.compactAtFiles)
-            else
-              // marker-preserving per-leaf rewrite (fingerprint,
-              // listing, schema key, append ledger all survive)
-              Canonicalize.compact(spark, cfg.warehouseDir, t.tableName,
-                spec.compactTargetBytes, spec.compactAtFiles)
-          }
-          // catalog-resolve the canonical layer too — otherwise analyst
-          // SQL defaults to the slow raw TSV scan (VERDICT r2 missing #1)
-          graft.catalog.CatalogSync.registerCanonicalView(
-            spark, cfg.db, t.tableName, path, changed)
-        }
       if (!cfg.dryRun) {
-        maintainStores(schema); maintainViews(schema)
-        maintainPersisted(schema)
-        maintainSkipping(); maintainManifests()
+        // forget enforcement FIRST: a freshly fetched file re-delivering
+        // forgotten content must purge before the canonical layer or any
+        // maintained store reads it; crashed cascades complete here too
+        sweepForgets(schema)
+        if (!cfg.canonicalize && (cfg.maintainedSkipStats.nonEmpty ||
+            cfg.maintainedBloomStats.nonEmpty || cfg.manifestTables.nonEmpty))
+          log.warn("maintainedSkipStats/maintainedBloomStats/manifestTables " +
+            "need canonicalize = true (they index and manage the parquet " +
+            "layer) — skipped")
+        val stores = persistedStores
+        // a configured stats or manifest table outside `schema` still
+        // refreshes over its canonical dir
+        val tables = (schema.map(_.tableName) ++
+          cfg.maintainedSkipStats.keys ++ cfg.maintainedBloomStats.keys ++
+          cfg.manifestTables).distinct
+        graft.pipeline.Par.each(tables, cfg.parallelism) { table =>
+          refreshTable(table, schema.find(_.tableName == table), stores)
+        }
+        maintainViews(schema)
         // retention watermarks re-apply LAST (manifests are current):
         // late-arriving old rows the canonicalize step just appended,
         // and partitions a full canonical rebuild resurrected, retire
@@ -1236,6 +1226,64 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       }
     } finally cfg.onSummary(summary)
     summary
+  }
+
+  /** One table's sync pipeline (see [[sync]]): `t` is None for a stats
+    * or manifest table outside the synced schema. */
+  private def refreshTable(table: String, t: Option[CDTable],
+      stores: Seq[MaintainedStore]): Unit = {
+    t.foreach { t =>
+      if (cfg.canonicalize) refreshCanonical(t)
+      val files = rawListing(table)
+      if (files.nonEmpty)
+        graft.pipeline.Par.each(
+          rollupStoresOf(table).map(s => () =>
+            maintainRollup(t, s._1, s._2, files)) ++
+          stores.filter(_.table == table).map(s => () =>
+            maintainPersisted(s, t, files)),
+          cfg.parallelism)(_())
+    }
+    if (cfg.canonicalize) {
+      maintainSkipping(table)
+      maintainManifest(table)
+    }
+  }
+
+  /** Canonical refresh of one table — incremental: an unchanged table
+    * costs one file listing, no rewrite — then auto-compaction, then
+    * its catalog view. */
+  private def refreshCanonical(t: CDTable): Unit = {
+    val spec = cfg.canonicalSpecs
+      .getOrElse(t.tableName, Warehouse.CanonicalSpec())
+    val (path, changed) = Canonicalize.canonicalizeIncremental(
+      spark, cfg.warehouseDir, t,
+      partitionBy = spec.partitionBy, derive = spec.derive,
+      appendable = spec.appendable)
+    // auto-compaction rides the refresh: the append fast path
+    // accretes a few tagged files per sync on the hottest tables
+    // — past the policy bound, out-of-shape leaves rewrite (the
+    // decision is one listing; in-shape leaves keep file
+    // identity). BEFORE skip-stats/manifest maintenance, which
+    // then follow the compacted file set in this same sync.
+    if (spec.compactAtFiles > 0 &&
+        !Canonicalize.isStreamSinkDir(path) &&
+        Fs.of(path, spark).exists(new org.apache.hadoop.fs.Path(path))) {
+      if (graft.pipeline.Manifest.exists(path))
+        // reader-atomic for manifest-managed tables: one
+        // manifest generation swaps every compacted partition's
+        // file set together; root markers are untouched
+        graft.pipeline.Maintain.compactPartitions(spark, path,
+          spec.compactTargetBytes, spec.compactAtFiles)
+      else
+        // marker-preserving per-leaf rewrite (fingerprint,
+        // listing, schema key, append ledger all survive)
+        Canonicalize.compact(spark, cfg.warehouseDir, t.tableName,
+          spec.compactTargetBytes, spec.compactAtFiles)
+    }
+    // catalog-resolve the canonical layer too — otherwise analyst
+    // SQL defaults to the slow raw TSV scan (VERDICT r2 missing #1)
+    graft.catalog.CatalogSync.registerCanonicalView(
+      spark, cfg.db, t.tableName, path, changed)
   }
 
   private def log =
@@ -2987,8 +3035,9 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     def dir: String = s"${cfg.warehouseDir}/_maintained/$name"
   }
 
-  /** Every configured persisted store, maintenance order. Built per
-    * call: the vector kinds' drift evidence lives for one sync. */
+  /** Every configured persisted store. Built once per sync: the vector
+    * kinds' drift evidence lives for one sync, and each store is
+    * maintained by one thread of it. */
   private def persistedStores: Seq[MaintainedStore] = {
     import graft.operators.{Curation, Dedup, Quantize, Similarity,
       VectorIndex}
@@ -3075,8 +3124,8 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
   private def purgedStoresOf(table: String): Seq[MaintainedStore] =
     persistedStores.filter(s => s.table == table && !s.invalidateOnForget)
 
-  /** Per-sync-batch maintenance of every persisted store, O(new files)
-    * each: the fresh raw files fold in one intent-pinned batch
+  /** Per-sync-batch maintenance of one persisted store, O(new files):
+    * the fresh raw files fold in one intent-pinned batch
     * ([[maintainAdditive]]); init/rebuild reads the canonical layer
     * when current. Ledger ids are NAMESPACED: the warehouse records a
     * `rawbatch-` covered marker per fold (payload = the file list),
@@ -3086,20 +3135,15 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * delivery). A covered file that was stale-deleted rebuilds over the
     * current listing (MinHash signatures can't subtract; a vector
     * rebuild thereby RETRAINS — the drift remedy). */
-  private def maintainPersisted(schema: Seq[CDTable]): Unit =
-    persistedStores.foreach { s =>
-      schema.find(_.tableName == s.table).foreach { t =>
-        val files = rawListing(s.table)
-        if (files.nonEmpty) {
-          def rebuild(all: Seq[String]): Unit =
-            s.build(s.project(readTableSnapshot(t, all)._1), all)
-          maintainAdditive(s.dir, files, s.name)(rebuild) { (fresh, id) =>
-            s.append(s.project(readRaw(t, fresh)), id)
-          }
-          s.after(() => rebuild(files))
-        }
-      }
+  private def maintainPersisted(s: MaintainedStore, t: CDTable,
+      files: Seq[String]): Unit = {
+    def rebuild(all: Seq[String]): Unit =
+      s.build(s.project(readTableSnapshot(t, all)._1), all)
+    maintainAdditive(s.dir, files, s.name)(rebuild) { (fresh, id) =>
+      s.append(s.project(readRaw(t, fresh)), id)
     }
+    s.after(() => rebuild(files))
+  }
 
   /** Approximate-nearest-neighbor probe of a maintained IVF index:
     * top-k cosine matches per query row (needs `q_id`, `q_emb`
@@ -3141,66 +3185,49 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       s"${cfg.warehouseDir}/_maintained/vindex_$indexName", queries,
       corpus, k, nprobe, rerankN)
 
-  /** Per-sync refresh of the configured file-skipping stats over the
-    * canonical parquet layer ([[graft.pipeline.Skipping]]). On
+  /** Per-sync refresh of one table's configured file-skipping stats
+    * over the canonical parquet layer ([[graft.pipeline.Skipping]]). On
     * file-additive canonical tables (the streaming sink) this appends
     * O(new files); after a batch canonical rewrite the file set is new,
     * so the stats rebuild with it — bounded by the scan the rewrite
     * itself already paid (and the rewrite's SafeSwap drops the old
     * stats tree with the old files, which is exactly right: those
     * stats described replaced content). */
-  private def maintainSkipping(): Unit = {
+  private def maintainSkipping(table: String): Unit = {
     import graft.pipeline.Skipping
-    if (cfg.maintainedSkipStats.isEmpty &&
-      cfg.maintainedBloomStats.isEmpty) return
-    if (!cfg.canonicalize) {
-      log.warn("maintainedSkipStats/maintainedBloomStats need " +
-        "canonicalize = true (stats index the parquet layer) — skipped")
-      return
+    val skipCols = cfg.maintainedSkipStats.get(table)
+    val bloomCols = cfg.maintainedBloomStats.getOrElse(table, Nil)
+    if ((skipCols.isEmpty && bloomCols.isEmpty) ||
+        !Fs.of(cfg.warehouseDir, spark).exists(
+          new org.apache.hadoop.fs.Path(canonicalDir(table)))) return
+    skipCols.foreach { cols =>
+      val r = Skipping.refreshStats(spark, canonicalDir(table), cols)
+      if (r.rebuilt) log.info(s"skip stats for $table: rebuilt")
+      else if (r.appended > 0)
+        log.info(s"skip stats for $table: +${r.appended} files")
     }
-    def ready(table: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(canonicalDir(table))
-      Fs.of(cfg.warehouseDir, spark).exists(p)
-    }
-    cfg.maintainedSkipStats.foreach { case (table, cols) =>
-      if (ready(table)) {
-        val r = Skipping.refreshStats(spark, canonicalDir(table), cols)
-        if (r.rebuilt) log.info(s"skip stats for $table: rebuilt")
-        else if (r.appended > 0)
-          log.info(s"skip stats for $table: +${r.appended} files")
-      }
-    }
-    cfg.maintainedBloomStats.foreach { case (table, cols) =>
-      if (ready(table)) cols.foreach { c =>
-        val r = Skipping.refreshBloom(spark, canonicalDir(table), c)
-        if (r.rebuilt) log.info(s"bloom stats for $table.$c: rebuilt")
-      }
+    bloomCols.foreach { c =>
+      val r = Skipping.refreshBloom(spark, canonicalDir(table), c)
+      if (r.rebuilt) log.info(s"bloom stats for $table.$c: rebuilt")
     }
   }
 
-  /** Keep the configured canonical dirs manifest-managed: one
+  /** Keep a configured canonical dir manifest-managed: one
     * [[graft.pipeline.Manifest.refresh]] per sync — O(listing) when
     * nothing moved, one generation commit when files landed or a batch
     * canonical rewrite replaced the dir (taking the old manifest with
     * it). Snapshot readers over these dirs then survive concurrent
     * maintenance (delete/compact/merge) without ever seeing a half
     * state. */
-  private def maintainManifests(): Unit = {
-    if (cfg.manifestTables.isEmpty) return
-    if (!cfg.canonicalize) {
-      log.warn("manifestTables need canonicalize = true (manifests " +
-        "manage the parquet canonical layer) — skipped")
-      return
-    }
-    cfg.manifestTables.foreach { table =>
-      val dir = canonicalDir(table)
-      if (Fs.of(dir, spark).exists(new org.apache.hadoop.fs.Path(dir))) {
-        if (graft.pipeline.Manifest.refresh(spark, dir))
-          log.info(s"manifest for $table: new generation committed")
-        // SQL-reachable snapshots, refreshed alongside the canonical
-        // views: <table>__at_g<N> per retained generation
-        graft.catalog.CatalogSync.registerSnapshotViews(spark, table, dir)
-      }
+  private def maintainManifest(table: String): Unit = {
+    val dir = canonicalDir(table)
+    if (cfg.manifestTables.contains(table) &&
+        Fs.of(dir, spark).exists(new org.apache.hadoop.fs.Path(dir))) {
+      if (graft.pipeline.Manifest.refresh(spark, dir))
+        log.info(s"manifest for $table: new generation committed")
+      // SQL-reachable snapshots, refreshed alongside the canonical
+      // views: <table>__at_g<N> per retained generation
+      graft.catalog.CatalogSync.registerSnapshotViews(spark, table, dir)
     }
   }
 
@@ -3228,7 +3255,17 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
       s"${cfg.warehouseDir}/_maintained/index_$indexName", incoming,
       minEst)
 
-  /** Per-sync-batch refresh of the configured rollups and profiles —
+  /** The rollup and profile stores kept over `table`: (store name,
+    * spec). */
+  private def rollupStoresOf(table: String)
+      : Seq[(String, graft.pipeline.Rollup.Spec)] =
+    cfg.maintainedRollups.filter(_.table == table).map(r =>
+      (s"rollup_${r.name}", r.spec)) ++
+      cfg.maintainedProfiles.get(table).map(cols =>
+        (s"profile_$table", graft.operators.Stats.profileSpec(cols,
+          cfg.maintainedProfileHists.getOrElse(table, Nil))))
+
+  /** Per-sync-batch refresh of one configured rollup or profile —
     * data-quality observability (A13's operational summary grown into
     * data) at O(new files) cost per run.
     *
@@ -3245,83 +3282,57 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     * breaks the insert-only premise of min/max/HLL partials, so a
     * ledger id with no surviving file triggers a full store rebuild
     * over the current listing — rare, detected, never silent. */
-  private def maintainStores(schema: Seq[CDTable]): Unit = {
+  private def maintainRollup(t: CDTable, storeName: String,
+      spec: graft.pipeline.Rollup.Spec, files: Seq[String]): Unit = {
     import graft.pipeline.Rollup
-    val stores: Seq[(String, String, Rollup.Spec)] =
-      cfg.maintainedRollups.map(r =>
-        (s"rollup_${r.name}", r.table, r.spec)) ++
-        cfg.maintainedProfiles.toSeq.map { case (t, cols) =>
-          (s"profile_$t", t, graft.operators.Stats.profileSpec(cols,
-            cfg.maintainedProfileHists.getOrElse(t, Nil))) }
-    if (stores.isEmpty) return
-    val fs = Fs.of(cfg.warehouseDir, spark)
-    stores.foreach { case (storeName, tableName, spec) =>
-      schema.find(_.tableName == tableName).foreach { t =>
-        val tableDir = s"${cfg.warehouseDir}/${Sync.RawPrefix}/$tableName"
-        val files =
-          if (!fs.exists(new org.apache.hadoop.fs.Path(tableDir))) Nil
-          else fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
-            .toSeq.filter(_.isFile).map(_.getPath.getName)
-            .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-            .sorted
-        if (files.nonEmpty) {
-          val store = s"${cfg.warehouseDir}/_maintained/$storeName"
-          val st = graft.model.TypeLattice.toStructType(t)
-          def readFiles(fnames: Seq[String]) = graft.sources.TsvSource
-            .read(spark, st, fnames.map(f => s"$tableDir/${
-              graft.sources.TsvSource.globEscape(f)}"))
-          val applied =
-            if (Rollup.exists(spark, store))
-              Rollup.appliedIds(spark, store) else Nil
-          // init/rebuild scans the FULL listing — read the canonical
-          // parquet layer when current instead of re-parsing gzip TSV
-          // ([[readTableSnapshot]]); per-batch merges below read the
-          // fresh raw files directly (they are the batch)
-          if (applied.isEmpty)
-            Rollup.init(spark, store, readTableSnapshot(t, files)._1,
-              spec, files)
-          else if (!applied.forall(files.contains)) {
-            // a folded file was stale-deleted: partials can't subtract —
-            // rebuild over the surviving files
-            org.slf4j.LoggerFactory.getLogger(classOf[Warehouse]).warn(
-              s"$storeName: folded file(s) removed by stale-delete — " +
-                "rebuilding store from the current listing")
-            Rollup.init(spark, store, readTableSnapshot(t, files)._1,
-              spec, files)
-          } else if (!Rollup.histScaleCurrent(spark, store, spec, st)) {
-            // a pre-scale-change store holds temporal-histogram bins in
-            // a different unit system — folding would corrupt the map
-            // (Rollup.merge refuses); rebuild on first touch instead
-            log.warn(s"$storeName: temporal-histogram partials carry a " +
-              "legacy bin scale — rebuilding store from the current " +
-              "listing")
-            Rollup.init(spark, store, readTableSnapshot(t, files)._1,
-              spec, files)
-          } else {
-            val fresh = files.filterNot(applied.contains)
-            if (fresh.nonEmpty)
-              Rollup.merge(spark, store, readFiles(fresh), spec, fresh)
-          }
-          // profile numbers flow into the session catalog so Catalyst's
-          // size-based join selection / CBO plan from maintained truth
-          // instead of the lazytsv default (Long.Max = never broadcast).
-          // Best-effort: a catalog hiccup must not fail the sync.
-          if (storeName.startsWith("profile_"))
-            try {
-              val bytes = fs
-                .listStatus(new org.apache.hadoop.fs.Path(tableDir))
-                .filter(_.isFile).map(_.getLen).sum
-              graft.catalog.CatalogStats.pushFromProfileStore(spark,
-                cfg.db, tableName, store,
-                cfg.maintainedProfiles(tableName), bytes,
-                cfg.maintainedProfileHists.getOrElse(tableName, Nil))
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                log.warn(s"catalog stats push failed for $tableName: $e")
-            }
-        }
-      }
+    val tableName = t.tableName
+    val store = s"${cfg.warehouseDir}/_maintained/$storeName"
+    val st = graft.model.TypeLattice.toStructType(t)
+    val applied =
+      if (Rollup.exists(spark, store)) Rollup.appliedIds(spark, store)
+      else Nil
+    // init/rebuild scans the FULL listing — read the canonical
+    // parquet layer when current instead of re-parsing gzip TSV
+    // ([[readTableSnapshot]]); per-batch merges below read the
+    // fresh raw files directly (they are the batch)
+    if (applied.isEmpty)
+      Rollup.init(spark, store, readTableSnapshot(t, files)._1, spec, files)
+    else if (!applied.forall(files.contains)) {
+      // a folded file was stale-deleted: partials can't subtract —
+      // rebuild over the surviving files
+      log.warn(s"$storeName: folded file(s) removed by stale-delete — " +
+        "rebuilding store from the current listing")
+      Rollup.init(spark, store, readTableSnapshot(t, files)._1, spec, files)
+    } else if (!Rollup.histScaleCurrent(spark, store, spec, st)) {
+      // a pre-scale-change store holds temporal-histogram bins in
+      // a different unit system — folding would corrupt the map
+      // (Rollup.merge refuses); rebuild on first touch instead
+      log.warn(s"$storeName: temporal-histogram partials carry a " +
+        "legacy bin scale — rebuilding store from the current listing")
+      Rollup.init(spark, store, readTableSnapshot(t, files)._1, spec, files)
+    } else {
+      val fresh = files.filterNot(applied.contains)
+      if (fresh.nonEmpty)
+        Rollup.merge(spark, store, readRaw(t, fresh), spec, fresh)
     }
+    // profile numbers flow into the session catalog so Catalyst's
+    // size-based join selection / CBO plan from maintained truth
+    // instead of the lazytsv default (Long.Max = never broadcast).
+    // Best-effort: a catalog hiccup must not fail the sync.
+    if (storeName.startsWith("profile_"))
+      try {
+        val bytes = Fs.of(cfg.warehouseDir, spark)
+          .listStatus(new org.apache.hadoop.fs.Path(
+            s"${cfg.warehouseDir}/${Sync.RawPrefix}/$tableName"))
+          .filter(_.isFile).map(_.getLen).sum
+        graft.catalog.CatalogStats.pushFromProfileStore(spark,
+          cfg.db, tableName, store,
+          cfg.maintainedProfiles(tableName), bytes,
+          cfg.maintainedProfileHists.getOrElse(tableName, Nil))
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          log.warn(s"catalog stats push failed for $tableName: $e")
+      }
   }
 
   /** Read a maintained rollup (see [[Warehouse.Config.maintainedRollups]]). */

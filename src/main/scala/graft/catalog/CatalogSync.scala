@@ -31,8 +31,11 @@ import graft.model.{CDTable, TypeLattice}
   */
 object CatalogSync {
 
+  /** Create `db` when missing; a catalog lookup, no DDL, when it
+    * exists. */
   def ensureDatabase(spark: SparkSession, db: String): Unit =
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `${qi(db)}`")
+    if (!spark.sessionState.catalog.databaseExists(db))
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS `${qi(db)}`")
 
   /** Quote/escape a comment or path literal for DDL. */
   private def q(s: String): String = s.replace("'", "''")
@@ -45,10 +48,12 @@ object CatalogSync {
 
   private def stagingName(table: String): String = table + "__staging"
 
-  /** Build the CREATE TABLE statement for a CD table over a TSV location —
-    * the analog of the reference's TableInput dict (`:174-218`). */
-  def createTableDdl(db: String, t: CDTable, location: String,
-      nameOverride: Option[String] = None): String = {
+  /** Table property holding [[definitionId]] of the definition a table
+    * was created from. */
+  private val DefinitionProp = "graft.definition"
+
+  private def definitionDdl(db: String, t: CDTable, location: String,
+      name: String): String = {
     val cols = t.columns.map { c =>
       val comment = c.description
         .map(d => s" COMMENT '${q(d.take(254))}'").getOrElse("")
@@ -56,13 +61,29 @@ object CatalogSync {
     }.mkString(",\n")
     val tblComment = t.description
       .map(d => s"\nCOMMENT '${q(d.take(254))}'").getOrElse("")
-    val name = nameOverride.getOrElse(t.tableName)
     s"""CREATE TABLE `${qi(db)}`.`${qi(name)}` (
        |$cols
        |)
        |USING graft.sources.lazytsv$tblComment
        |LOCATION '${q(location)}'""".stripMargin
   }
+
+  /** Content id of the live definition of `t` at `location` — columns,
+    * types, comments, provider and location, under the live name (a
+    * staged twin carries the id of the table it will become). */
+  private def definitionId(db: String, t: CDTable,
+      location: String): String =
+    graft.pipeline.AppendCommit.contentId(
+      definitionDdl(db, t, location, t.tableName))
+
+  /** Build the CREATE TABLE statement for a CD table over a TSV location —
+    * the analog of the reference's TableInput dict (`:174-218`). The
+    * definition's id rides along as [[DefinitionProp]]. */
+  def createTableDdl(db: String, t: CDTable, location: String,
+      nameOverride: Option[String] = None): String =
+    definitionDdl(db, t, location, nameOverride.getOrElse(t.tableName)) +
+      s"\nTBLPROPERTIES ('$DefinitionProp' = '${
+        definitionId(db, t, location)}')"
 
   /** Complete a swap interrupted between DROP and RENAME: if the table is
     * absent but its staging twin exists, the staging definition IS the
@@ -146,10 +167,11 @@ object CatalogSync {
     // would otherwise never match its own views, leaving __at_g<N>
     // views of out-of-retention generations resolving purged files
     val prefixLc = prefix.toLowerCase(java.util.Locale.ROOT)
-    spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary &&
-        t.name.toLowerCase(java.util.Locale.ROOT).startsWith(prefixLc))
-      .map(_.name)
+    // temp views only: a catalog-wide listing would also resolve the
+    // permanent views other tables' sync pipelines replace concurrently
+    spark.sessionState.catalog.listLocalTempViews("*")
+      .map(_.table)
+      .filter(_.toLowerCase(java.util.Locale.ROOT).startsWith(prefixLc))
       .filter(n => n.substring(prefixLc.length).toLongOption
         .exists(g => !gens.contains(g)))
       .foreach(v => spark.catalog.dropTempView(v))
@@ -161,7 +183,9 @@ object CatalogSync {
   }
 
   /** Create-or-update, returning "created" | "updated" exactly like the
-    * reference (`:227,234`). */
+    * reference (`:227,234`). A live table whose [[DefinitionProp]]
+    * already names this definition counts as "updated" and runs no DDL:
+    * the swap would re-create the same table. */
   def createOrUpdateTable(
       spark: SparkSession, db: String, t: CDTable, location: String): String = {
     // the staging namespace is reserved: a real table named X__staging
@@ -175,6 +199,10 @@ object CatalogSync {
     val main = s"`${qi(db)}`.`${qi(t.tableName)}`"
     val stag = s"`${qi(db)}`.`${qi(stagingName(t.tableName))}`"
     if (spark.catalog.tableExists(main)) {
+      if (spark.sessionState.catalog.getTableMetadata(
+          TableIdentifier(t.tableName, Some(db))).properties
+          .get(DefinitionProp).contains(definitionId(db, t, location)))
+        return "updated"
       // full-replace via staged swap: validate the new DDL completely
       // before the live table is touched (tables are external — LOCATION
       // pinned — so every step is metadata-only, no data moves).

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Idempotent FILE-ADDITIVE append of a batch into a live multi-table
   * dataset tree — the commit protocol under the O(batch) index appends
@@ -108,10 +108,10 @@ object AppendCommit {
     }
 
   /** Remove a crashed attempt's partially-moved files for `batchId`
-    * from the live tree. [[appendBatch]] does this itself, but a caller
-    * whose stage READS a live table the batch also writes (MinHash's
-    * size-delta log) must invoke it earlier — before planning that
-    * read, or the captured file listing references deleted files. */
+    * from the live tree. [[appendBatch]] does this itself before it
+    * evaluates its stage, but a caller that READS a live table the batch
+    * also writes before calling it must invoke this first — or the
+    * captured file listing references deleted files. */
   def clearCrashedAttempt(root: String, batchId: String): Unit =
     deleteTagged(Fs.of(root), new Path(root), batchId)
 
@@ -394,42 +394,37 @@ object AppendCommit {
   /** The data files a batch placed in the live tree (tag-named by
     * [[appendBatch]]) — lets a replayed consumer read back EXACTLY the
     * batch it committed earlier instead of recomputing it against state
-    * that has since moved (the streaming admission pipeline's pin).
-    *
-    * Resolved by NAME-PREFIX GLOB, not a tree walk: a long-lived
-    * streaming store holds one batch's files per micro-batch, and a
-    * per-batch full walk would be O(total batches) each call — O(n²)
-    * over the stream's lifetime. The batch tag is a filename prefix
-    * precisely so object stores can serve this as a prefix listing.
-    * Covers the flat root plus two partition-directory levels (the
-    * layouts [[appendBatch]]'s movers produce). */
-  def filesOfBatch(root: String, batchId: String): Seq[String] = {
-    val fs = Fs.of(root)
-    if (!fs.exists(new Path(root))) return Seq.empty
-    val tag = tagOf(batchId)
-    Seq(s"$root/$tag*", s"$root/*/$tag*", s"$root/*/*/$tag*")
-      .flatMap(g => Option(fs.globStatus(new Path(g))).toSeq.flatten)
-      .filterNot(_.isDirectory)
-      // a glob level can descend into hidden/ledger dirs on exotic
-      // layouts — the tag prefix plus this guard keeps it data-only
-      .filterNot(st => st.getPath.getParent.getName.startsWith("_") ||
-        st.getPath.getParent.getName.startsWith("."))
+    * that has since moved (the streaming admission pipeline's pin). */
+  def filesOfBatch(root: String, batchId: String): Seq[String] =
+    taggedFiles(Fs.of(root), new Path(root), batchId)
       .map(_.getPath.toUri.toString)
-  }
 
-  /** Remove data files tagged with `batchId` anywhere under `root` —
-    * leftovers of a crashed earlier attempt at the same batch. Hidden
-    * entries and the ledger are skipped. */
+  /** Remove data files tagged with `batchId` under `root` — leftovers
+    * of a crashed earlier attempt at the same batch. */
   private def deleteTagged(fs: FileSystem, root: Path,
-      batchId: String): Unit = {
+      batchId: String): Unit =
+    taggedFiles(fs, root, batchId).foreach(st => fs.delete(st.getPath, false))
+
+  /** The files tagged with `batchId` under `root`, at every depth
+    * [[moveTagged]] places them (the root, a table dir, one level per
+    * `partitionBy` column): each visible directory is listed once, level
+    * by level, and only tag-prefixed names are kept. Hidden dirs
+    * (staging, swap siblings) and the `_applied` ledger hold no placed
+    * data. */
+  private def taggedFiles(fs: FileSystem, root: Path,
+      batchId: String): Seq[FileStatus] = {
     val tag = tagOf(batchId)
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory) {
-        if (!n.startsWith(".") && n != "_applied") walk(st.getPath)
-      } else if (n.startsWith(tag)) fs.delete(st.getPath, false)
-    }
-    if (fs.exists(root)) walk(root)
+    @scala.annotation.tailrec
+    def level(dirs: Seq[Path], found: Seq[FileStatus]): Seq[FileStatus] =
+      if (dirs.isEmpty) found
+      else {
+        val (sub, files) = dirs.flatMap(fs.listStatus(_).toSeq)
+          .partition(_.isDirectory)
+        level(sub.map(_.getPath).filterNot { p =>
+            p.getName.startsWith(".") || p.getName == "_applied" },
+          found ++ files.filter(_.getPath.getName.startsWith(tag)))
+      }
+    if (fs.exists(root)) level(Seq(root), Nil) else Nil
   }
 
   /** Rename staged data files into the live tree, preserving relative
@@ -464,7 +459,7 @@ object AppendCommit {
     * `tmp/cells`, ...). */
   def appendBatch(spark: org.apache.spark.sql.SparkSession, root: String,
       batchId: String, payload: String = "")
-      (stage: String => Unit): Boolean = {
+      (stage: => String => Unit): Boolean = {
     require(batchId.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"batch id must be path-safe and not hidden, got: $batchId")
     // per-BATCH lock: appends of DIFFERENT batches interleave safely at
@@ -485,11 +480,11 @@ object AppendCommit {
     // sizes, stored labels, codebooks), and a leftover partial placement
     // of this very batch would be double-counted into that read (e.g.
     // the MinHash cap deciding on base + its own half-placed deltas).
-    // NOTE: a caller whose stage reads a live table the batch ITSELF
-    // writes must call [[clearCrashedAttempt]] before PLANNING that
-    // read — spark.read captures the file listing eagerly, so files
-    // deleted here after planning fail the stage with FILE_NOT_EXIST
-    // ([[PersistedStore.append]] does, for every persisted store).
+    // `stage` is by-name and evaluated only after this delete, so reads
+    // of the live tree planned in the argument expression never list
+    // the deleted files (spark.read captures the listing eagerly —
+    // FILE_NOT_EXIST). A caller that plans such a read BEFORE calling
+    // must call [[clearCrashedAttempt]] first.
     deleteTagged(fs, new Path(root), batchId)
     SafeSwap.replace(stagingPath(root, batchId))(stage)
     moveTagged(fs, staging, new Path(root), batchId)

@@ -88,18 +88,16 @@ object PersistedStore {
   def founding(fp: String): Seq[(String, String)] =
     Seq(AppendCommit.contentId(fp) -> "0|0")
 
-  /** Append batch `batchId` (ledger payload `payload`): a no-op when
-    * applied; otherwise a crashed attempt's files leave first, then
-    * `stage` is planned — so its reads of the live tree never see them —
-    * and runs under [[AppendCommit.appendBatch]]. Returns true when the
+  /** Append batch `batchId` (ledger payload `payload`) under
+    * [[AppendCommit.appendBatch]]: a no-op when applied; otherwise a
+    * crashed attempt's files leave first, then `stage` is planned — so
+    * its reads of the live tree never see them. Returns true when the
     * batch was placed. */
   def append(spark: SparkSession, dir: String, batchId: String,
       payload: String = "")(stage: => String => Unit): Boolean =
     open(dir) {
-      !AppendCommit.isApplied(dir, batchId) && {
-        AppendCommit.clearCrashedAttempt(dir, batchId)
+      !AppendCommit.isApplied(dir, batchId) &&
         AppendCommit.appendBatch(spark, dir, batchId, payload)(stage)
-      }
     }
 
   /** Remove `keys`' rows from `tables` (dirs under the store keyed by

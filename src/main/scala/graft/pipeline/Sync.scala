@@ -235,17 +235,19 @@ object Sync {
     val removed =
       deleteStale(spark, warehouseDir, p.toDelete, dryRun, parallelism)
 
-    var created = 0L
-    var updated = 0L
-    if (!dryRun) { // reference skips catalog work in dry-run (:115)
-      schema.foreach { t =>
-        CatalogSync.createOrUpdateTable(spark, db, t,
-          s"$warehouseDir/$RawPrefix/${t.tableName}") match {
-          case "created" => created += 1
-          case _ => updated += 1
-        }
+    // reference skips catalog work in dry-run (:115); the per-table
+    // upserts touch disjoint catalog entries, so they run concurrently
+    // once the database exists
+    val outcomes =
+      if (dryRun) Nil
+      else {
+        CatalogSync.ensureDatabase(spark, db)
+        Par.map(schema, parallelism)(t =>
+          CatalogSync.createOrUpdateTable(spark, db, t,
+            s"$warehouseDir/$RawPrefix/${t.tableName}"))
       }
-    }
+    val created = outcomes.count(_ == "created").toLong
+    val updated = outcomes.size - created
     SyncSummary(
       totalFiles = manifest.size.toLong,
       fetched = if (dryRun) p.toFetch.size.toLong else fetch.fetched,

@@ -32,6 +32,67 @@ class CatalogSyncSpec extends SparkSpec {
     assert(cols == Seq("id", "name", "created_at", "extra"))
   }
 
+  /** Catalog DDL events (create, drop, rename of tables and databases)
+    * posted while `run` runs. */
+  private def ddlEvents(run: => Unit): Seq[String] = {
+    import org.apache.spark.sql.catalyst.catalog._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case _: CreateTablePreEvent | _: DropTablePreEvent |
+            _: RenameTablePreEvent | _: CreateDatabasePreEvent |
+            _: AlterTablePreEvent =>
+          seen.add(e.getClass.getSimpleName)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try { run; org.apache.spark.ListenerDrain(sc) }
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  test("an unchanged re-upsert runs no DDL; a changed comment or column " +
+    "still swaps") {
+    val loc = java.nio.file.Files.createTempDirectory("cat_same").toString
+    val db = "cd_cat_same"
+    assert(CatalogSync.createOrUpdateTable(spark, db, t, loc) == "created")
+    val created = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("course_dim", Some(db)))
+      .createTime
+    var out = ""
+    assert(ddlEvents { out = CatalogSync.createOrUpdateTable(spark, db, t,
+      loc) }.isEmpty, "an unchanged definition must run no DDL")
+    assert(out == "updated")
+    assert(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("course_dim", Some(db)))
+      .createTime == created, "the live table must not be re-created")
+    def swaps(next: CDTable, nextLoc: String = loc): Unit = {
+      val ev = ddlEvents {
+        assert(CatalogSync.createOrUpdateTable(spark, db, next, nextLoc) ==
+          "updated")
+      }
+      assert(ev.contains("RenameTablePreEvent"), s"no swap for $next: $ev")
+    }
+    val recommented = t.copy(columns = t.columns.map(c =>
+      if (c.name == "name") c.copy(description = Some("the course title"))
+      else c))
+    swaps(recommented)
+    assert(spark.table(s"$db.course_dim").schema("name").getComment()
+      .contains("the course title"))
+    val widened = recommented.copy(columns =
+      recommented.columns :+ CDColumn("extra", "integer"))
+    swaps(widened)
+    assert(spark.table(s"$db.course_dim").schema.fieldNames.last == "extra")
+    swaps(widened.copy(description = Some("courses, renamed")))
+    swaps(widened.copy(description = Some("courses, renamed")),
+      java.nio.file.Files.createTempDirectory("cat_same2").toString)
+  }
+
   test("escaped quotes in comments don't break DDL") {
     val tricky = t.copy(description = Some("it's a 'test'"))
     val loc = java.nio.file.Files.createTempDirectory("cat_loc2").toString

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ledger compaction contract of [[AppendCommit]]: entries survive any
@@ -95,6 +97,38 @@ class AppendCommitSpec extends AnyFunSuite {
     // a contract violation — loud, never a wrong cumulative count
     AppendCommit.markApplied(root, "mystery99", "not-a-fingerprint")
     intercept[Exception] { AppendCommit.cumulativeFingerprint(root) }
+  }
+
+  test("a retried batch clears its crashed attempt's files at depths 0 " +
+      "to 3 and keeps other batches'; filesOfBatch sees every depth") {
+    val root = tmpRoot()
+    val rels = Seq("f.bin", "t/f.bin", "t/p=1/f.bin", "t/p=1/q=2/f.bin")
+    def stage(tmp: String): Unit = rels.foreach { r =>
+      val f = java.nio.file.Paths.get(tmp, r)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, r)
+    }
+    def placed(batch: String): Seq[String] = {
+      val s = Files.walk(java.nio.file.Paths.get(root))
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"a_${batch}_")).toList
+      finally s.close()
+    }
+    assert(AppendCommit.appendBatch(null, root, "b0")(stage))
+    assert(AppendCommit.appendBatch(null, root, "b1")(stage))
+    // a crash after b1's moves, before its ledger entry
+    assert(new java.io.File(s"$root/_applied/b1").delete())
+    assert(AppendCommit.appendBatch(null, root, "b1")(stage))
+    assert(placed("b1").size == rels.size && placed("b0").size == rels.size)
+    Seq("b0", "b1").foreach { b =>
+      val files = AppendCommit.filesOfBatch(root, b)
+      assert(files.size == rels.size, s"$b: $files")
+      rels.foreach { r =>
+        val dir = r.split('/').init.mkString("/")
+        assert(files.exists(f => f.contains(s"/store/${
+          if (dir.isEmpty) "" else dir + "/"}a_${b}_")), s"$b lacks $r")
+      }
+    }
   }
 
   test("hidden or path-hostile batch ids are rejected") {
