@@ -161,9 +161,11 @@ object Warehouse {
       warehouseDir: String,
       db: String = "canvasdata",
       dryRun: Boolean = false,
-      /** fan-out width of a sync: the fetch and stale-delete task
-        * count, and the most catalog upserts, per-table pipelines and
-        * stores of one table that run at once (see [[Warehouse.sync]]) */
+      /** fan-out width of a sync and a forget: the fetch and
+        * stale-delete task count, the most catalog upserts, per-table
+        * pipelines and stores of one table that run at once (see
+        * [[Warehouse.sync]]), and the most units of one forget phase
+        * that run at once (see [[Warehouse.forget]]) */
       parallelism: Int = 32,
       /** also rewrite synced tables to the splittable Parquet canonical
         * layer (beyond-reference; recommended for analytic workloads) */
@@ -1313,6 +1315,19 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
     *
     * Convergent under re-run: every hook is content-keyed idempotent,
     * captures are intent-staged, and the destructive steps run LAST.
+    * The order, each phase's units at most [[Warehouse.Config
+    * .parallelism]] at once ([[graft.pipeline.Par]]): the captures on
+    * the calling thread (the deleted rows' plan, every cross-column
+    * mapping staged); phase 1, every unit that reads the intact table
+    * (each store purge or invalidation, each rollup retraction or
+    * invalidation, the profile invalidation); then, only when all of
+    * phase 1 returned, phase 2, the destructive layers (the canonical
+    * delete, the raw purge, each join-view purge); then the swept
+    * ledger and the done marker. The deleted rows' plan fixes its file
+    * list when it is planned, so its every reader must finish before
+    * phase 2 rewrites those files. A failing unit lets the others of
+    * its phase finish; its failure reaches the caller with the journal
+    * still open, and the next sync's sweep completes the request.
     *
     * DURABLE: the request journals to `_forget/<table>/req_<id>` BEFORE
     * any destructive step, and [[sweepForgets]] (run by every sync,
@@ -1483,98 +1498,93 @@ final class Warehouse(spark: SparkSession, cfg: Warehouse.Config) {
 
   private def forgetInternal(schema: Seq[CDTable], t: CDTable, c: String,
       keys: Seq[Any], reqId: String): ForgetSummary = {
+    import org.apache.hadoop.fs.Path
+    import graft.pipeline.{JoinView, Maintain, Par, Rollup}
     val tableName = t.tableName
     val files = rawListing(tableName)
-    // captured from the still-intact table (canonical when current,
-    // raw otherwise); consumed by the purge hooks BEFORE any
-    // destructive step below — their intent staging carries retries
-    val deletedFull = graft.pipeline.Maintain.matchingKeys(
+    // captured from the still-intact table (canonical when current, raw
+    // otherwise); its file list is fixed here, so every reader runs in
+    // phase 1, before phase 2 rewrites those files
+    val deletedFull = Maintain.matchingKeys(
       readTableSnapshot(t, files)._1, c, keys)
-    // cross-column mapping: delete column → a maintained store's id
-    // column, captured ONCE from the still-intact table and staged
-    // under the journal (map_<reqId>_<idCol>) — a crash-retry reads the
-    // staged set instead of re-deriving it from a half-purged table, so
-    // the hooks' content-keyed purge ids stay identical across replays
-    // and their negative-fingerprint intents can never double-apply.
-    // Bounded by the matching rows' distinct ids (the per-identity RTBF
-    // contract: one user's documents, not a corpus slice).
-    val idKeyCache =
-      scala.collection.mutable.Map.empty[String, Seq[Any]]
-    def idKeysFor(ic: String): Seq[Any] =
-      if (ic == c) keys
-      else idKeyCache.getOrElseUpdate(ic, {
-        val strs = stagedIdKeys(tableName, reqId, ic,
-          captureMapping(deletedFull, tableName, c, ic))
-        typedKeys(t, ic, strs)
-      })
-    val purged = scala.collection.mutable.Map.empty[String, Long]
-    val invalidated = scala.collection.mutable.ArrayBuffer.empty[String]
-    persistedStores.filter(_.table == tableName).foreach { s =>
-      val dir = new org.apache.hadoop.fs.Path(s.dir)
-      if (PersistedStore.open(s.dir)(Fs.of(s.dir, spark).exists(dir))) {
-        if (s.invalidateOnForget) {
-          // conservative stance (opt-in flag): drop the store, the next
-          // sync rebuilds over the filtered corpus — a corpus-scale job
-          Fs.of(s.dir, spark).delete(dir, true)
-          invalidated += s.name
-        } else {
-          // O(hit rows), never a rebuild: a pack store keeps its
-          // placements and frontier (holes), an index subtracts the
-          // rows' contribution from its ledger
-          val ik = idKeysFor(s.idCol)
-          purged(s.name) =
-            if (ik.isEmpty) 0L
-            else s.family.purge(spark, s.dir, ik,
-              () => s.project(deletedFull))
-        }
-      }
-    }
+    val stores = persistedStores.filter(s => s.table == tableName &&
+      PersistedStore.open(s.dir)(Fs.of(s.dir, spark).exists(new Path(s.dir))))
+    // cross-column mapping: delete column → a purging store's id column,
+    // captured ONCE from the still-intact table and staged under the
+    // journal (map_<reqId>_<idCol>) before any unit runs — a crash-retry
+    // reads the staged set instead of re-deriving it from a half-purged
+    // table, so the purges' content-keyed ids stay identical across
+    // replays and their negative-fingerprint intents can never
+    // double-apply. Bounded by the matching rows' distinct ids (the
+    // per-identity RTBF contract: one user's documents, not a corpus
+    // slice).
+    val idKeys: Map[String, Seq[Any]] =
+      stores.filterNot(_.invalidateOnForget).map(_.idCol).distinct.map { ic =>
+        ic -> (if (ic == c) keys
+          else typedKeys(t, ic, stagedIdKeys(tableName, reqId, ic,
+            captureMapping(deletedFull, tableName, c, ic))))
+      }.toMap
+    // phase 1: every unit that reads the intact table, all at once; each
+    // returns the rows it purged, or None when it invalidated its store
     val retractId = graft.pipeline.AppendCommit.purgeId(keys)
-    cfg.maintainedRollups.filter(_.table == tableName).foreach { r =>
+    def invalidating(name: String)(drop: => Unit) =
+      name -> (() => { drop; Option.empty[Long] })
+    val phase1: Seq[(String, () => Option[Long])] = stores.map { s =>
+      if (s.invalidateOnForget)
+        // conservative stance (opt-in flag): drop the store, the next
+        // sync rebuilds over the filtered corpus — a corpus-scale job
+        invalidating(s.name)(Fs.of(s.dir, spark).delete(new Path(s.dir), true))
+      else s.name -> (() => {
+        // O(hit rows), never a rebuild: a pack store keeps its
+        // placements and frontier (holes), an index subtracts the rows'
+        // contribution from its ledger
+        val ik = idKeys(s.idCol)
+        Some(if (ik.isEmpty) 0L
+          else s.family.purge(spark, s.dir, ik, () => s.project(deletedFull)))
+      })
+    } ++ cfg.maintainedRollups.filter(_.table == tableName).flatMap { r =>
       val store = s"${cfg.warehouseDir}/_maintained/rollup_${r.name}"
-      if (graft.pipeline.Rollup.exists(spark, store)) {
-        if (graft.pipeline.Rollup.subtractable(r.spec))
-          purged(s"rollup_${r.name}") =
-            graft.pipeline.Rollup.retract(spark, store, deletedFull,
-              r.spec, retractId)
-        else {
-          graft.pipeline.Rollup.invalidate(spark, store)
-          invalidated += s"rollup_${r.name}"
-        }
-      }
-    }
-    if (cfg.maintainedProfiles.contains(tableName)) {
-      val store = s"${cfg.warehouseDir}/_maintained/profile_$tableName"
-      if (graft.pipeline.Rollup.exists(spark, store)) {
+      if (!Rollup.exists(spark, store)) None
+      else if (Rollup.subtractable(r.spec))
+        Some(s"rollup_${r.name}" -> (() => Some(
+          Rollup.retract(spark, store, deletedFull, r.spec, retractId))))
+      else Some(invalidating(s"rollup_${r.name}")(
+        Rollup.invalidate(spark, store)))
+    } ++ Option.when(cfg.maintainedProfiles.contains(tableName))(
+        s"${cfg.warehouseDir}/_maintained/profile_$tableName")
+      .filter(Rollup.exists(spark, _)).map(store =>
         // min/max/HLL — not subtractable; next sync re-inits over the
         // purged files
-        graft.pipeline.Rollup.invalidate(spark, store)
-        invalidated += s"profile_$tableName"
-      }
-    }
-    // destructive steps LAST (the captures above replay from their
-    // stages if we die between here and the end)
+        invalidating(s"profile_$tableName")(Rollup.invalidate(spark, store)))
+    val done1 = phase1.map(_._1)
+      .zip(Par.map(phase1.map(_._2), cfg.parallelism)(_()))
+    // phase 2, only after every phase-1 unit returned: the destructive
+    // layers, all at once (a crash from here replays phase 1 from its
+    // stages and ledgers)
     val canonDir = canonicalDir(tableName)
-    val canonicalRows =
-      if (cfg.canonicalize &&
-          Fs.of(canonDir, spark)
-            .exists(new org.apache.hadoop.fs.Path(canonDir)))
-        graft.pipeline.Maintain.deleteByKey(spark, canonDir, c, keys)
-          .rowsDeleted
-      else 0L
-    val rawRows = purgeRawTsv(t, c, keys)
-    cfg.maintainedViews.filter(_.factTable == tableName).foreach { v =>
-      val store = s"${cfg.warehouseDir}/_maintained/view_${v.name}"
-      if (Fs.of(s"$store/view", spark)
-        .exists(new org.apache.hadoop.fs.Path(s"$store/view")))
-        purged(s"view_${v.name}") =
-          graft.pipeline.JoinView.purgeByKey(spark, store, c, keys)
-    }
+    val views = cfg.maintainedViews.filter(_.factTable == tableName)
+      .map(v => s"view_${v.name}" ->
+        s"${cfg.warehouseDir}/_maintained/view_${v.name}")
+      .filter { case (_, store) =>
+        Fs.of(store, spark).exists(new Path(s"$store/view")) }
+    val phase2: Seq[() => Long] = Seq(
+      () =>
+        if (cfg.canonicalize &&
+            Fs.of(canonDir, spark).exists(new Path(canonDir)))
+          Maintain.deleteByKey(spark, canonDir, c, keys).rowsDeleted
+        else 0L,
+      () => purgeRawTsv(t, c, keys)) ++
+      views.map { case (_, store) =>
+        () => JoinView.purgeByKey(spark, store, c, keys) }
+    val canonicalRows +: rawRows +: viewRows =
+      Par.map(phase2, cfg.parallelism)(_())
     spark.catalog.refreshByPath(
       s"${cfg.warehouseDir}/${Sync.RawPrefix}/$tableName")
     if (cfg.canonicalize) spark.catalog.refreshByPath(canonDir)
-    ForgetSummary(canonicalRows, rawRows, purged.toMap,
-      invalidated.toSeq)
+    ForgetSummary(canonicalRows, rawRows,
+      done1.collect { case (n, Some(rows)) => n -> rows }.toMap ++
+        views.map(_._1).zip(viewRows),
+      done1.collect { case (n, None) => n })
   }
 
   // --- the persisted forget ledger --------------------------------------

@@ -109,11 +109,9 @@ object Canonicalize {
     if (!fs.exists(p)) Seq.empty
     else {
       val rootPath = fs.makeQualified(p).toUri.getPath
-      val it = fs.listFiles(p, true)
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && !st.getPath.getName.startsWith(".")) {
+      Fs.filesUnder(fs, p)
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("."))
+        .map { st =>
           val rel = st.getPath.toUri.getPath.stripPrefix(rootPath)
           // encLine: entries are stored newline-joined (`_raw_listing`)
           // and split back — a raw filename carrying a newline would
@@ -123,12 +121,9 @@ object Canonicalize {
           // ordinary names; an exotic-named table's fingerprint shifts
           // once and takes one full rewrite (the upgrade-note
           // precedent).
-          entries +=
-            s"${AppendCommit.encLine(rel)}|${st.getLen}|" +
-              s"${st.getModificationTime}"
-        }
-      }
-      entries.sorted.toSeq
+          s"${AppendCommit.encLine(rel)}|${st.getLen}|" +
+            s"${st.getModificationTime}"
+        }.sorted
     }
   }
 

@@ -20,11 +20,12 @@ import org.apache.spark.sql.functions.{col, count, count_distinct, lit, when}
   *   1. CAPTURE the doomed rows' (id, embedding) from the still-intact
   *      corpus — the codes-only PQ stores cannot reproduce a deleted
   *      vector's fingerprint contribution from their own bytes;
-  *   2. PURGE every index (each hook is idempotent and intent-staged —
-  *      [[graft.pipeline.AppendCommit.runWithIntent]] — so a crash
-  *      anywhere re-converges by re-running the cascade);
-  *   3. delete the TABLE rows (idempotent);
-  *   4. purge keyed views / invalidate non-subtractable rollup stores.
+  *   2. PURGE every index, all at once (each hook is idempotent and
+  *      intent-staged — [[graft.pipeline.AppendCommit.runWithIntent]] —
+  *      so a crash anywhere re-converges by re-running the cascade);
+  *   3. only when every purge returned, all at once: delete the TABLE
+  *      rows (idempotent), purge keyed views, invalidate
+  *      non-subtractable rollup stores.
   *
   * A re-run after a crash at any step converges: applied purges no-op
   * via their content-keyed ledger entries, the table delete finds
@@ -118,17 +119,27 @@ object Cascade {
       }
   }
 
+  /** What one cascade unit did to its target. */
+  private sealed trait Outcome
+  private final case class Purged(rows: Long) extends Outcome
+  private final case class Retracted(rows: Long) extends Outcome
+  private case object Invalidated extends Outcome
+
   /** Cascade-delete `keys` of column `c` from the corpus at `tableDir`
-    * and from every maintained store in `targets`. `embeddingCol` is
-    * read from the corpus only when a store's purge asks for the
-    * deleted rows — a codes-only vector store, which holds no
-    * embeddings to fingerprint. */
+    * and from every maintained store in `targets`, in two phases of
+    * independent units, each phase's units all at once ([[Par]]): first
+    * every unit that reads the intact corpus (the persisted-store and component purges, the Count–Min and
+    * subtractable rollup retractions), then — only when all of them
+    * returned — the table delete, the view purges and the rollup
+    * invalidations. `embeddingCol` is read from the corpus only when a
+    * store's purge asks for the deleted rows — a codes-only vector
+    * store, which holds no embeddings to fingerprint. */
   def deleteByKey(spark: SparkSession, tableDir: String, c: String,
       keys: Seq[Any], targets: Seq[Target],
       embeddingCol: String = "embedding"): Summary = {
     import Target._
     require(keys.nonEmpty, "need at least one key to cascade-delete")
-    // read BEFORE any destruction (every purge runs before the table
+    // read BEFORE any destruction (phase 1 ends before the table
     // delete); on a converging re-run after the table delete this is
     // legitimately empty — the purge hooks' staged intents carry the
     // first run's numbers
@@ -145,46 +156,41 @@ object Cascade {
       else Maintain.matchingKeys(
         Manifest.readSnapshot(spark, tableDir), c, keys)
     val retractId = AppendCommit.purgeId(keys)
-    val purged = scala.collection.mutable.Map.empty[String, Long]
-    val retracted = scala.collection.mutable.Map.empty[String, Long]
-    val invalidated = scala.collection.mutable.ArrayBuffer.empty[String]
-    targets.foreach { tg =>
-      tg match {
-        case Persisted(dir, family) =>
-          purged(label(tg)) =
-            family.purge(spark, dir, keys, () => deletedRows)
-        case Comp(dir) =>
-          purged(label(tg)) = graft.operators.Components
-            .purgeNodes(spark, dir, keys)
-        case Cms(dir, keyExpr, w) =>
-          // BEFORE the table delete (linear-sketch retraction needs the
-          // doomed rows; the in-store stage carries crash-retries)
-          retracted(label(tg)) = graft.operators.Sketches.purgeCmsStore(
-            spark, dir, deletedFull,
-            org.apache.spark.sql.functions.expr(keyExpr), w, retractId)
-        case RollupStore(dir, spec) if Rollup.subtractable(spec) =>
-          // BEFORE the table delete (the rows must still exist to
-          // stage); the retraction's in-store stage makes the retry
-          // convergent
-          retracted(label(tg)) =
-            Rollup.retract(spark, dir, deletedFull, spec, retractId)
-        case _ => () // views, invalidated rollups: after the table delete
-      }
+    val captures = targets.collect {
+      case tg @ Persisted(dir, family) =>
+        tg -> (() => Purged(family.purge(spark, dir, keys, () => deletedRows)))
+      case tg @ Comp(dir) =>
+        tg -> (() => Purged(
+          graft.operators.Components.purgeNodes(spark, dir, keys)))
+      case tg @ Cms(dir, keyExpr, w) =>
+        // linear-sketch retraction needs the doomed rows; the in-store
+        // stage carries crash-retries
+        tg -> (() => Retracted(graft.operators.Sketches.purgeCmsStore(
+          spark, dir, deletedFull,
+          org.apache.spark.sql.functions.expr(keyExpr), w, retractId)))
+      case tg @ RollupStore(dir, spec) if Rollup.subtractable(spec) =>
+        // the rows must still exist to stage; the retraction's in-store
+        // stage makes the retry convergent
+        tg -> (() => Retracted(
+          Rollup.retract(spark, dir, deletedFull, spec, retractId)))
     }
-    val table = Maintain.deleteByKey(spark, tableDir, c, keys)
-    targets.foreach { tg =>
-      tg match {
-        case View(store, keyCol) =>
-          purged(label(tg)) =
-            JoinView.purgeByKey(spark, store, keyCol, keys)
-        case RollupStore(dir, spec) if !Rollup.subtractable(spec) =>
-          Rollup.invalidate(spark, dir)
-          invalidated += label(tg)
-        case _ => ()
-      }
+    val destroys = targets.collect {
+      case tg @ View(store, keyCol) =>
+        tg -> (() => Purged(JoinView.purgeByKey(spark, store, keyCol, keys)))
+      case tg @ RollupStore(dir, spec) if !Rollup.subtractable(spec) =>
+        tg -> (() => { Rollup.invalidate(spark, dir); Invalidated })
     }
-    Summary(table.rowsDeleted, purged.toMap, retracted.toMap,
-      invalidated.toSeq)
+    def all[A](units: Seq[() => A]) = Par.map(units, units.size)(_())
+    val captured = all(captures.map(_._2))
+    val Purged(tableRows) +: destroyed = all((() => Purged(
+      Maintain.deleteByKey(spark, tableDir, c, keys).rowsDeleted)) +:
+      destroys.map(_._2))
+    val done = (captures ++ destroys).map(u => label(u._1))
+      .zip(captured ++ destroyed)
+    Summary(tableRows,
+      done.collect { case (l, Purged(n)) => l -> n }.toMap,
+      done.collect { case (l, Retracted(n)) => l -> n }.toMap,
+      done.collect { case (l, Invalidated) => l })
   }
 
   // ---------------------------------------------------------------------

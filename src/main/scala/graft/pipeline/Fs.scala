@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine opens the Hadoop FileSystem of a path string:
@@ -27,6 +27,15 @@ object Fs {
 
   def of(path: String, conf: Configuration): FileSystem =
     new Path(path).getFileSystem(conf)
+
+  /** Every entry under `root` that is not a directory, depth-first in
+    * listing order — the entries of `fs.listFiles(root, true)`, through
+    * `listStatus`: on the local filesystem without native IO,
+    * `listFiles` builds a `LocatedFileStatus` per file, and its
+    * permission lookup forks an `ls -ld` process per file. */
+  def filesUnder(fs: FileSystem, root: Path): Seq[FileStatus] =
+    fs.listStatus(root).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
 
   /** The active (else default) session's Hadoop conf; a bare
     * `Configuration` only where no session exists at all (executor

@@ -241,30 +241,26 @@ object Maintain {
       }.toMap
   }
 
-  /** Each parquet file's Spark schema from its footer, read on the
-    * driver — the schema Spark's own inference settles on (the Spark
-    * row schema the writer embedded, else the converted parquet
-    * schema), without the inference job a `spark.read.parquet(f)`
-    * launches per call. */
-  private def footerSchemas(spark: SparkSession, files: Seq[String])
-      : Map[String, org.apache.spark.sql.types.StructType] = {
+  /** A parquet file's Spark schema from its footer, read on the driver
+    * — the schema Spark's own inference settles on (the Spark row schema
+    * the writer embedded, else the converted parquet schema), without
+    * the inference job a `spark.read.parquet(f)` launches per call. */
+  private def footerSchema(spark: SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.execution.datasources.parquet
       .ParquetToSparkSchemaConverter
     import org.apache.spark.sql.types.{DataType, StructType}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    files.map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(new java.net.URI(f)), conf))
-      val meta = try reader.getFooter.getFileMetaData finally reader.close()
-      f -> Option(meta.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
-        .collect { case st: StructType => st }
-        .getOrElse(converter.convert(meta.getSchema))
-    }.toMap
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(new java.net.URI(file)), spark.sparkContext.hadoopConfiguration))
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    Option(meta.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case st: StructType => st }
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
   }
 
   /** The surviving rows of every partially-hit parquet file, each in the
@@ -276,17 +272,17 @@ object Maintain {
     * siblings encode it only in the directory name splits the tree's
     * schema — partition-scoped unions/merges over it start failing, and
     * every reader now depends on Spark's data-over-partition column
-    * preference. The physical schemas come from the footers, read on the
-    * driver (no inference job per file), and are handed to the reads, so
+    * preference. The physical schemas (`schemaOf`: the footers, read on
+    * the driver — no inference job per file) are handed to the reads, so
     * files of different schema versions never share a write. Returns the
     * part file written for each input file. */
   private def rewriteSurvivors(spark: SparkSession, tableDir: String,
       fs: FileSystem, files: Seq[String],
+      schemaOf: String => org.apache.spark.sql.types.StructType,
       dropKeys: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): Map[String, Path] = {
     import org.apache.spark.sql.functions.{col, element_at, typedLit}
     if (files.isEmpty) return Map.empty
-    val schemaOf = footerSchemas(spark, files)
     files.groupBy(schemaOf).toSeq.zipWithIndex.flatMap {
       case ((schema, group), g) =>
         val idx = group.zipWithIndex.toMap
@@ -414,8 +410,30 @@ object Maintain {
     // Keys round-trip through strings and cast to the column's actual
     // type, so join equality matches the typed-probe/isin semantics.
     val distinctVals = values.distinct
-    val colType = spark.read.parquet(tableDir).schema.find(_.name == c)
-      .map(_.dataType)
+    // footers are read on the driver, each at most once (no inference
+    // job): `c` takes its type from the first candidate that carries it,
+    // and the rewrite reuses the hit files' schemas. A partition column
+    // (a `c=` directory on the candidates' paths) is typed by the
+    // discovery read's partition discovery, without a footer read; a
+    // candidate written before `c` was appended reads it as NULL, which
+    // no key matches.
+    val footers = scala.collection.mutable.Map
+      .empty[String, org.apache.spark.sql.types.StructType]
+    // keyed by path, so the listing's and `_metadata.file_path`'s
+    // spellings of one file's URI share an entry
+    def footer(f: String) = footers.getOrElseUpdate(
+      new java.net.URI(f).getPath, footerSchema(spark, f))
+    val root = new Path(tableDir).toUri.getPath
+    val partitionKey = candidates.exists(f => new java.net.URI(f).getPath
+      .stripPrefix(root).split('/').exists(_.startsWith(s"$c=")))
+    val field =
+      if (partitionKey) None
+      else candidates.iterator.flatMap(footer(_).find(_.name == c))
+        .nextOption()
+    val read = spark.read
+      .schema(org.apache.spark.sql.types.StructType(field.toSeq))
+      .option("basePath", tableDir).parquet(candidates: _*)
+    val colType = read.schema.find(_.name == c).map(_.dataType)
       .getOrElse(throw new IllegalArgumentException(
         s"deleteByKey: no column $c in $tableDir"))
     requireKeysCastable(spark, colType, c, distinctVals)
@@ -443,10 +461,8 @@ object Maintain {
     // per file): exact per-file hit/total counts — bloom false
     // positives drop out here, and the rewrite loop below touches only
     // files that truly hold the keys
-    val scanned = spark.read.option("basePath", tableDir)
-      .parquet(candidates: _*)
-      .select(org.apache.spark.sql.functions
-        .col("_metadata.file_path").as("file"), col(c))
+    val scanned = read.select(org.apache.spark.sql.functions
+      .col("_metadata.file_path").as("file"), col(c))
     val hitRows = (keysDf match {
       case Some(k) =>
         scanned.join(org.apache.spark.sql.functions.broadcast(k),
@@ -465,7 +481,7 @@ object Maintain {
       .filter(_._3 > 0L)
       .toSeq
     rewriteAndCommit(spark, tableDir, fs, managed, candidates.size,
-      hitRows, dropKeys)
+      hitRows, footer, dropKeys)
   }
 
   /** The shared per-file rewrite machinery behind [[deleteByKey]] and
@@ -477,6 +493,7 @@ object Maintain {
   private def rewriteAndCommit(spark: SparkSession, tableDir: String,
       fs: FileSystem, managed: Boolean, nCandidates: Int,
       hitRows: Seq[(String, Long, Long)],
+      schemaOf: String => org.apache.spark.sql.types.StructType,
       dropKeys: org.apache.spark.sql.DataFrame =>
         org.apache.spark.sql.DataFrame): DeleteSummary = {
     val deleted = hitRows.map(_._3).sum
@@ -484,7 +501,8 @@ object Maintain {
     val (goneRows, partialRows) =
       hitRows.partition { case (_, n, hits) => hits == n }
     val gone = goneRows.map(_._1); val partial = partialRows.map(_._1)
-    val parts = rewriteSurvivors(spark, tableDir, fs, partial, dropKeys)
+    val parts =
+      rewriteSurvivors(spark, tableDir, fs, partial, schemaOf, dropKeys)
     def part(f: String) = parts.getOrElse(f, throw new java.io.IOException(
       s"delete rewrite produced no data file for $f"))
     // manifest mode: (relative orig, relative replacement or None)
@@ -676,6 +694,6 @@ object Maintain {
       .filter(_._3 > 0L)
       .toSeq
     rewriteAndCommit(spark, tableDir, fs, managed, candidates.size,
-      hitRows, dropKeys)
+      hitRows, footerSchema(spark, _), dropKeys)
   }
 }

@@ -121,13 +121,14 @@ object PersistedStore {
     * recorded (idempotent — a replay finds no rows). For a store whose
     * ledger does not track content (the pack store's frontier counts
     * what was placed), or that records the negation as an [[append]] of
-    * its own (the MinHash size deltas). Returns rows removed from the
+    * its own (the MinHash size deltas). The tables are disjoint
+    * directories and delete concurrently. Returns rows removed from the
     * first table. */
   def deleteRows(spark: SparkSession, dir: String, keys: Seq[Any],
       idCol: String, tables: Seq[String]): Long =
     open(dir) {
       require(keys.nonEmpty, "purge needs at least one key")
-      tables.map(t =>
+      Par.map(tables, tables.size)(t =>
         Maintain.deleteByKey(spark, s"$dir/$t", idCol, keys).rowsDeleted)
         .head
     }

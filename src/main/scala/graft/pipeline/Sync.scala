@@ -83,14 +83,8 @@ object Sync {
     if (!fs.exists(root)) Seq.empty
     else {
       val rootPath = new Path(warehouseDir).toUri.getPath
-      val it = fs.listFiles(root, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile)
-          buf += st.getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/")
-      }
-      buf.toSeq
+      Fs.filesUnder(fs, root).filter(_.isFile).map(
+        _.getPath.toUri.getPath.stripPrefix(rootPath).stripPrefix("/"))
     }
   }
 

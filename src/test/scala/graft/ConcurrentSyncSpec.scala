@@ -247,6 +247,125 @@ class ConcurrentSyncSpec extends WarehouseSessionSpec {
     assert(seen.forall(_ == "csync-caller"), seen.distinct.toString)
   }
 
+  test("a forget at parallelism 1 and 4 leaves the same warehouse: " +
+    "MinHash and pack store, a mapped key, rollup, profile and view") {
+    val (m1, m2) = manifests()
+    def run(p: Int): (Seq[Warehouse#ForgetSummary], Map[String, String]) = {
+      val whDir = Files.createTempDirectory(s"cforget_wh$p").toUri.toString
+        .stripSuffix("/")
+      val wh = new Warehouse(spark, config(whDir, s"cd_cforget$p", p, _ => ()))
+      wh.sync(m1, schema)
+      wh.sync(m2, schema)
+      val sums = Seq(
+        wh.forget(schema, "docs", "doc_id", Seq(1L, 3L)),
+        // the vector index is keyed by vec_id: the cascade maps to it
+        wh.forget(schema, "vecs", "emb", Seq("0.9,0.1", "0.05,0.95")),
+        wh.forget(schema, "lineitem", "o_orderkey", Seq(1L, 3L)),
+        wh.forget(schema, "orders", "o_orderkey", Seq(2L)))
+      (sums, state(whDir))
+    }
+    val (sum1, st1) = run(1)
+    val (sum4, st4) = run(4)
+    def fields(s: Warehouse#ForgetSummary) =
+      (s.canonicalRows, s.rawRows, s.purged, s.invalidated)
+    assert(sum1.map(fields) == sum4.map(fields))
+    assert(sum1.map(s => (s.canonicalRows, s.rawRows, s.purged.keySet,
+      s.invalidated)) == Seq(
+      (2L, 2L, Set("index_nd", "pack_pk"), Nil),
+      (2L, 2L, Set("vindex_ann"), Nil),
+      (2L, 2L, Set("rollup_li_flags", "view_li_orders"), Nil),
+      (1L, 1L, Set.empty, Seq("profile_orders"))))
+    assert(sum1.forall(_.purged.values.forall(_ > 0L)), s"$sum1")
+    assert(st1.keySet == st4.keySet)
+    val diff = st1.keySet.filter(k => st1(k) != st4(k))
+    assert(diff.isEmpty, s"parallelism 1 and 4 differ in $diff")
+  }
+
+  /** Overwrite every visible parquet file under `dir` (relative to the
+    * warehouse) with bytes no reader accepts; returns the undo. */
+  private def breakParquet(whDir: String, dir: String): () => Unit = {
+    val root = java.nio.file.Paths.get(new java.net.URI(s"$whDir/$dir"))
+    val saved = walk(root).filter(p => !hidden(root, p) &&
+        p.getFileName.toString.endsWith(".parquet"))
+      .map(p => p -> Files.readAllBytes(p))
+    assert(saved.nonEmpty, s"no parquet file under $dir")
+    saved.foreach { case (p, b) =>
+      Files.write(p, Array.fill(b.length)(7.toByte)) }
+    () => saved.foreach { case (p, b) => Files.write(p, b) }
+  }
+
+  /** A forget of `keys` on `table` that fails while `broken` (a dir
+    * under the warehouse) cannot be read; the warehouse it leaves once
+    * the dir is mended and one sync has run must be the one a forget
+    * that never failed leaves. `check` sees the warehouse right after
+    * the failure (the dir mended), and the state before the forget. */
+  private def failedForgetConverges(name: String, table: String, c: String,
+      keys: Seq[Any], broken: String)(
+      check: (Warehouse, String, Map[String, String]) => Unit): Unit = {
+    val (m1, _) = manifests()
+    def warehouse(tag: String) = {
+      val whDir = Files.createTempDirectory(s"cforget_$tag").toUri.toString
+        .stripSuffix("/")
+      (whDir, new Warehouse(spark, config(whDir, s"cd_$name$tag", 4, _ => ())))
+    }
+    val (refDir, ref) = warehouse("ref")
+    ref.sync(m1, schema)
+    ref.forget(schema, table, c, keys)
+    ref.sync(m1, schema)
+    val (whDir, wh) = warehouse("fail")
+    wh.sync(m1, schema)
+    val before = state(whDir)
+    val mend = breakParquet(whDir, broken)
+    try intercept[Exception](wh.forget(schema, table, c, keys))
+    finally mend()
+    val fdir = java.nio.file.Paths.get(
+      new java.net.URI(s"$whDir/_forget/$table"))
+    val names = children(fdir).map(_.getFileName.toString)
+    assert(names.exists(_.startsWith("req_")) &&
+      !names.exists(_.startsWith("done_")), s"the journal stays open: $names")
+    check(wh, whDir, before)
+    wh.sync(m1, schema)
+    assert(children(fdir).exists(_.getFileName.toString.startsWith("done_")))
+    // every layer but the forget ledger itself: the sweep also records
+    // the files it re-purged as covered, which a clean forget skips
+    def layers(whDir: String) =
+      state(whDir).filterNot(_._1.startsWith("_forget/"))
+    val (got, want) = (layers(whDir), layers(refDir))
+    assert(got.keySet == want.keySet)
+    val diff = got.keySet.filter(k => got(k) != want(k))
+    assert(diff.isEmpty,
+      s"the swept forget differs from the clean one in $diff")
+  }
+
+  test("a failing phase-1 unit runs no destructive step; the next sync's " +
+    "sweep converges to the forget that never failed") {
+    // the pack store's purge reads its broken placements in phase 1
+    failedForgetConverges("cforget_p1", "docs", "doc_id", Seq(1L),
+      "_maintained/pack_pk") { (wh, whDir, before) =>
+      val after = state(whDir)
+      val layers = before.keySet.filter(k =>
+        k.startsWith(Sync.RawPrefix) || k.startsWith("canonical/"))
+      assert(layers.exists(_.startsWith("canonical/docs")))
+      layers.foreach(k => assert(after.get(k) == before.get(k), s"$k changed"))
+      assert(wh.canonicalTable("docs").count() == 2L)
+    }
+  }
+
+  test("a failing phase-2 unit lets the other destructive steps finish; " +
+    "the failure reaches the caller and the sweep converges") {
+    // the join view's purge reads its broken rows in phase 2
+    failedForgetConverges("cforget_p2", "lineitem", "o_orderkey", Seq(1L),
+      "_maintained/view_li_orders/view") { (wh, whDir, _) =>
+      import org.apache.spark.sql.functions.col
+      assert(wh.canonicalTable("lineitem")
+        .filter(col("o_orderkey") === 1L).count() == 0L)
+      assert(wh.canonicalTable("lineitem").count() == 2L)
+      val raw = new String(Files.readAllBytes(java.nio.file.Paths.get(
+        new java.net.URI(s"$whDir/raw_files/lineitem/l1.tsv"))), "UTF-8")
+      assert(!raw.linesIterator.exists(_.startsWith("1\t")), raw)
+    }
+  }
+
   test("Par runs every unit, then rethrows the earliest failure with the " +
     "others suppressed, at any width") {
     Seq(1, 3).foreach { width =>

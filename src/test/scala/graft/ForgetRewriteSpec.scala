@@ -119,6 +119,29 @@ class ForgetRewriteSpec extends WarehouseSessionSpec {
     assert(parquetCase(2, managed = false) == parquetCase(8, managed = false))
   }
 
+  test("a parquet delete infers no schema: discovery, then one rewrite " +
+    "job; a partition-column key deletes whole files") {
+    // the delete key's type and the hit files' schemas come from their
+    // footers, read on the driver: only the discovery aggregation and
+    // the rewrite run jobs (two each: a shuffle map stage, then the
+    // result), never a schema-inference read
+    assert(parquetCase(2, managed = false) == PinnedJobs)
+    assert(parquetCase(2, managed = true) == PinnedJobs)
+    import spark.implicits._
+    val tableDir = Files.createTempDirectory("fr_part").resolve("t")
+      .toUri.toString.stripSuffix("/")
+    Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-01"))
+      .toDF("id", "dt").write.partitionBy("dt").parquet(tableDir)
+    val sum = Maintain.deleteByKey(spark, tableDir, "dt",
+      Seq(java.sql.Date.valueOf("2024-01-01")))
+    assert(sum.rowsDeleted == 2L && sum.rewritten == 0, s"$sum")
+    assert(spark.read.parquet(tableDir).as[(Long, java.sql.Date)].collect()
+      .toSeq == Seq((2L, java.sql.Date.valueOf("2024-01-02"))))
+  }
+
+  /** Jobs of one [[parquetCase]] delete. */
+  private val PinnedJobs = 4
+
   test("manifest-managed date-partitioned parquet: one rewrite job for " +
     "2 or 8 hit files, no partition column written as data") {
     assert(parquetCase(2, managed = true) == parquetCase(8, managed = true))

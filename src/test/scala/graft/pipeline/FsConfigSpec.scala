@@ -6,7 +6,8 @@ import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem,
+  LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 
 import graft.SparkSpec
 
@@ -28,6 +29,19 @@ class ReachFs extends RawLocalFileSystem {
     if (f.isFile) Array(getFileStatus(p))
     else f.list().sorted.map(n => getFileStatus(new Path(p, n)))
   }
+}
+
+/** [[ReachFs]] without the located listings: on the local filesystem
+  * without native IO, `listFiles` and `listLocatedStatus` build a
+  * `LocatedFileStatus` per file, whose permission lookup forks a
+  * process. */
+class UnlocatedFs extends FilterFileSystem(new ReachFs) {
+  override def listFiles(p: Path, recursive: Boolean)
+      : RemoteIterator[LocatedFileStatus] =
+    throw new UnsupportedOperationException(s"listFiles($p)")
+  override def listLocatedStatus(p: Path)
+      : RemoteIterator[LocatedFileStatus] =
+    throw new UnsupportedOperationException(s"listLocatedStatus($p)")
 }
 
 /** The commit protocols open their filesystems on the session's Hadoop
@@ -69,6 +83,49 @@ class FsConfigSpec extends SparkSpec {
       assert(Manifest.generations(table).size == 2)
       assert(spark.read.parquet(Manifest.resolve(table).get: _*).as[Long]
         .collect().sorted.toSeq == Seq(4L, 5L))
+    } finally {
+      hc.unset("fs.reachfs.impl")
+      hc.unset("fs.reachfs.impl.disable.cache")
+    }
+  }
+
+  test("the raw listings walk with listStatus and return what the " +
+    "located listing returns") {
+    val local = Files.createTempDirectory("unlocated")
+    Seq("raw_files/t/a.tsv", "raw_files/t/.hidden", "raw_files/t/sub/b.tsv",
+      "raw_files/t/.stage/c.tsv", "raw_files/u/d.tsv.gz").foreach { rel =>
+      val f = local.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, rel)
+    }
+    Files.createDirectories(local.resolve("raw_files/u/empty"))
+    val fileRoot = local.toUri.toString.stripSuffix("/")
+    // what the located listing returns, on the plain local filesystem
+    val state = Sync.listState(spark, fileRoot)
+    val entries = Canonicalize.rawListingEntries(spark, fileRoot, "t")
+    val fs = Fs.of(fileRoot, spark)
+    val located = {
+      val it = fs.listFiles(new Path(s"$fileRoot/raw_files"), true)
+      val b = Seq.newBuilder[String]
+      while (it.hasNext) b += it.next().getPath.toUri.getPath
+      b.result()
+    }
+    assert(state.map(local.toUri.getPath + _).sorted == located.sorted)
+    assert(state.toSet == Set("raw_files/t/a.tsv", "raw_files/t/.hidden",
+      "raw_files/t/sub/b.tsv", "raw_files/t/.stage/c.tsv",
+      "raw_files/u/d.tsv.gz"))
+    assert(entries.map(_.split('|').head) ==
+      Seq("/.stage/c.tsv", "/a.tsv", "/sub/b.tsv"))
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.reachfs.impl", classOf[UnlocatedFs].getName)
+    hc.setBoolean("fs.reachfs.impl.disable.cache", true)
+    try {
+      val root = s"reachfs://${local.toUri.getPath.stripSuffix("/")}"
+      intercept[UnsupportedOperationException](
+        Fs.of(root, spark).listFiles(new Path(root), true))
+      // ReachFs lists a directory in name order
+      assert(Sync.listState(spark, root) == state.sorted)
+      assert(Canonicalize.rawListingEntries(spark, root, "t") == entries)
     } finally {
       hc.unset("fs.reachfs.impl")
       hc.unset("fs.reachfs.impl.disable.cache")
